@@ -39,6 +39,31 @@ def write_varint(n: int) -> bytes:
             return bytes(out)
 
 
+def write_varints(values):
+    """``write_varint`` over a whole array: element i of the returned
+    ``pyarrow.BinaryArray`` is the varint of ``values[i]`` read as uint64
+    (so a negative int64 gives its 10-byte two's-complement varint, as
+    ``write_varint(n & 0xFFFFFFFFFFFFFFFF)`` does). One numpy pass per
+    varint byte position, at most ten; no per-row Python."""
+    import numpy as np
+    import pyarrow as pa
+
+    v = np.asarray(values).astype(np.uint64)
+    nbytes = np.ones(len(v), dtype=np.int32)
+    for k in range(1, 10):
+        nbytes += v >= np.uint64(1 << (7 * k))
+    offsets = np.zeros(len(v) + 1, dtype=np.int32)
+    np.cumsum(nbytes, out=offsets[1:])
+    data = np.empty(offsets[-1], dtype=np.uint8)
+    for k in range(int(nbytes.max(initial=0))):
+        live = nbytes > k
+        byte = ((v >> np.uint64(7 * k)) & np.uint64(0x7F)) | ((nbytes > k + 1) << np.uint64(7))
+        data[offsets[:-1][live] + k] = byte[live]
+    return pa.Array.from_buffers(
+        pa.binary(), len(v), [None, pa.py_buffer(offsets), pa.py_buffer(data)]
+    )
+
+
 def write_long(n: int) -> bytes:
     """Avro long: zigzag + varint."""
     return write_varint(zigzag(n) & 0xFFFFFFFFFFFFFFFF)
@@ -88,20 +113,6 @@ def encode_logline(rec: dict) -> bytes:
 
     union(rec.get("timings"), write_timings)
     return bytes(out)
-
-
-def logline_schema_json() -> str:
-    """The LogLine writer schema as JSON — serialized from the single
-    source of truth (model.LOGLINE_AVSC; reference avro/logline.avsc:1-56,
-    embedded literal at avro/logline.go:41-106). Handed to the JVM
-    spark-avro ``to_avro`` when that module's jar is present
-    (encode/transformers.avro_transform's primary path), so the Python
-    fold below and the JVM encoder can never drift apart structurally."""
-    import json
-
-    from syslog_kafka_spark.model import LOGLINE_AVSC
-
-    return json.dumps(LOGLINE_AVSC)
 
 
 def confluent_frame(schema_id: int, body: bytes) -> bytes:

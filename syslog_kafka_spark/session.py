@@ -8,9 +8,12 @@ master URL, which is only applied when no master is configured.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 # Defaults chosen for the target workload (star-schema joins + wide scans):
 # - AQE re-plans shuffles at runtime (coalesces small partitions, converts
@@ -97,11 +100,12 @@ def _warm_python_workers(spark: SparkSession) -> None:
             .mode("overwrite")
             .save()
         )
-    except Exception:
+    except Exception as e:
         # Warm-up must never fail a session build (e.g. a stripped-down
-        # runtime without pandas); the first Python query then simply
-        # pays the bring-up itself, as before.
-        pass
+        # runtime without pandas); the first Python query then pays the
+        # bring-up itself. The socket source and the encoders run on this
+        # same worker fleet, so say why it failed.
+        log.warning("Python worker warm-up failed: %s: %s", type(e).__name__, e)
 
 
 def get_spark(app_name: str = "syslog-kafka-spark", **overrides: str) -> SparkSession:

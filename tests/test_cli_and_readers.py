@@ -249,3 +249,21 @@ def test_structured_data_map_decode(spark):
     assert sd[3] is None  # RFC 3164
     assert sd[4] is None  # invalid PRI
     assert sd[5] == {}  # element with no params → empty map
+
+
+def test_python_warmup_failure_is_logged_not_raised(caplog, monkeypatch):
+    """A failed worker warm-up must not fail the session build, and must
+    not be silent either: it logs one warning naming the error."""
+    from syslog_kafka_spark.session import _warm_python_workers
+
+    class BrokenSession:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("no executors")
+
+    monkeypatch.delenv("SPARK_GRAFT_WARM_PYTHON", raising=False)
+    with caplog.at_level("WARNING", logger="syslog_kafka_spark.session"):
+        _warm_python_workers(BrokenSession())
+    assert [r.getMessage() for r in caplog.records] == [
+        "Python worker warm-up failed: RuntimeError: no executors"
+    ]
