@@ -20,7 +20,6 @@ Design notes for 100 TB:
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
-from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -36,6 +35,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from syslog_kafka_spark.session import scoped_conf
 
 MEDIA_SCHEMA = StructType(
     [
@@ -83,7 +84,6 @@ def fake_decoder(payload: bytes, fmt: str) -> np.ndarray:
     return arr
 
 
-@contextmanager
 def arrow_batch_size(spark, n: int):
     """Scope ``spark.sql.execution.arrow.maxRecordsPerBatch`` to a block,
     restoring the prior value (or unsetting) on exit. The knob is read at
@@ -93,16 +93,7 @@ def arrow_batch_size(spark, n: int):
         with arrow_batch_size(spark, 64):
             extract_features(media, ...).write.parquet(out)
     """
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
+    return scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": str(n)})
 
 
 def extract_features(

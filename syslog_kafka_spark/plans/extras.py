@@ -5,11 +5,9 @@ hash-gated), and the streaming replay throughput probe.
 
 from __future__ import annotations
 
-import uuid
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from syslog_kafka_spark.plans.registry import query
 from syslog_kafka_spark.sources.readers import load_tables
@@ -187,6 +185,7 @@ def stream_replay_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition; tests/test_bench_contract.py pins ours ≥ 50k)."""
     import tempfile
 
+    from syslog_kafka_spark.plans.stream_gated import drain
     from syslog_kafka_spark.sources.syslog_fixtures import SYSLOG_CORPUS
     from syslog_kafka_spark.streaming.pipeline import parsed_messages
 
@@ -204,16 +203,8 @@ def stream_replay_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.current_timestamp().alias("received_ts"),
         )
         counts = parsed_messages(messages).groupBy("severity").agg(F.count("*").alias("n"))
-        name = f"replay_{uuid.uuid4().hex[:8]}"
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name).orderBy(F.col("severity").asc_nulls_first())
+        drained = drain(counts, mode="complete")
+    return drained.orderBy(F.col("severity").asc_nulls_first())
 
 
 @query(
@@ -379,24 +370,10 @@ def stream_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     table equals the batch answer exactly; what this gates is the
     streaming execution of the stateful window operator, not a batch
     rewrite of it."""
-    import os
-    import uuid as _uuid
+    from syslog_kafka_spark.plans.stream_gated import drain, stream_events
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(path).schema
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    ts = (
-        F.expr("timestamp_micros(ts div 1000)")
-        if isinstance(raw.schema["ts"].dataType, LongType)
-        else F.col("ts")
-    )
     windowed = (
-        raw.withColumn("ts", ts)
+        stream_events(spark, sf_dir)
         .filter(F.col("ts") < F.lit("2024-01-08").cast("timestamp"))
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
@@ -405,13 +382,4 @@ def stream_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "n", "total_value"
         )
     )
-    name = f"stream_win_{_uuid.uuid4().hex[:8]}"
-    q = (
-        windowed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).orderBy("window_start", "event_type")
+    return drain(windowed, mode="complete").orderBy("window_start", "event_type")

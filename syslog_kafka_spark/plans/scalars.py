@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from syslog_kafka_spark.plans.registry import query
+from syslog_kafka_spark.session import scoped_conf
 from syslog_kafka_spark.sources.readers import load_tables
 
 
@@ -947,9 +948,7 @@ def scalar_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     work (the initial aggregate) still runs distributed; only the scalar
     loop state lives on the driver."""
     load_tables(spark, sf_dir).orders.createOrReplaceTempView("_ord_script")
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         out = spark.sql(
             """
             BEGIN
@@ -971,12 +970,7 @@ def scalar_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
             """
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("yr")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
+    return spark.createDataFrame(rows, out.schema).orderBy("yr")
 
 
 @query(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from syslog_kafka_spark.plans.registry import query
+from syslog_kafka_spark.session import scoped_conf, warehouse_tmp
 
 _FIXTURE_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -226,18 +227,6 @@ def scan_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _warehouse_tmp(prefix: str) -> str:
-    """A fresh temp dir under the gitignored spark-warehouse root."""
-    import tempfile
-
-    warehouse = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-    )
-    os.makedirs(warehouse, exist_ok=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=warehouse)
-
-
 @query(
     "scan_orc_roundtrip",
     family="scans",
@@ -261,12 +250,9 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The aggregate is materialized before the temp files are deleted; the
     returned frame is the collected (bounded: one row per event type)
     result."""
-    import shutil
-
     from syslog_kafka_spark.sources.readers import load_tables
 
-    out_dir = _warehouse_tmp("gate_orc_")
-    try:
+    with warehouse_tmp("gate_orc_") as out_dir:
         e = load_tables(spark, sf_dir).events
         e.write.mode("overwrite").orc(out_dir)
         back = spark.read.orc(out_dir)
@@ -280,9 +266,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type")
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("event_type")
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return spark.createDataFrame(rows, out.schema).orderBy("event_type")
 
 
 @query(
@@ -306,12 +290,9 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     column must prune at planning time — asserted by the plan-shape test
     (tests/test_plan_quality.py) via PartitionFilters; the gate hashes
     the data equivalence with an unpartitioned DuckDB filter."""
-    import shutil
-
     from syslog_kafka_spark.sources.readers import load_tables
 
-    out_dir = _warehouse_tmp("gate_part_")
-    try:
+    with warehouse_tmp("gate_part_") as out_dir:
         e = load_tables(spark, sf_dir).events
         e.write.mode("overwrite").partitionBy("event_type").parquet(out_dir)
         back = spark.read.parquet(out_dir).filter(F.col("event_type") == "error")
@@ -324,9 +305,7 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("day")
         )
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("day")
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return spark.createDataFrame(rows, out.schema).orderBy("day")
 
 
 from syslog_kafka_spark.sources.syslog_fixtures import corpus_values_idx_sql
@@ -551,27 +530,16 @@ def scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     appears in the physical plan. Values are exact (footer stats are
     exact for fully-written files), so the plain-aggregate oracle
     hash-matches."""
-    import os as _os
-
-    push_key = "spark.sql.parquet.aggregatePushdown"
-    v1_key = "spark.sql.sources.useV1SourceList"
-    prev_push = spark.conf.get(push_key, None)
-    prev_v1 = spark.conf.get(v1_key)
-    spark.conf.set(push_key, "true")
-    spark.conf.set(v1_key, "")
-    try:
-        df = spark.read.parquet(_os.path.join(sf_dir, "orders.parquet"))
+    confs = {
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.sql.sources.useV1SourceList": "",
+    }
+    with scoped_conf(spark, confs):
+        df = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
         agg = df.agg(
             F.count("*").alias("n_orders"),
             F.round(F.min("o_totalprice"), 2).alias("min_price"),
             F.round(F.max("o_totalprice"), 2).alias("max_price"),
         )
         rows = agg.collect()
-        out = spark.createDataFrame(rows, agg.schema)
-    finally:
-        if prev_push is None:
-            spark.conf.unset(push_key)
-        else:
-            spark.conf.set(push_key, prev_push)
-        spark.conf.set(v1_key, prev_v1)
-    return out
+    return spark.createDataFrame(rows, agg.schema)

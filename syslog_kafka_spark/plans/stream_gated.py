@@ -21,9 +21,11 @@ from weakref import WeakKeyDictionary
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import LongType, TimestampNTZType
 
 from syslog_kafka_spark.plans.registry import query
+from syslog_kafka_spark.session import scoped_conf, warehouse_tmp
 from syslog_kafka_spark.sources.readers import load_tables
 
 # Streaming-source schema memo, keyed weakly per session: every gate build
@@ -31,59 +33,46 @@ from syslog_kafka_spark.sources.readers import load_tables
 # of driver time per build, twice for gates that also load the batch twin).
 # Schemas are immutable metadata for a given path within a session — the
 # same reuse argument as readers._TABLE_CACHE, and nothing row-valued is
-# ever memoized here (the r14 no-result-caching rule).
+# ever memoized here (the r14 no-result-caching rule). The inferred `ts`
+# type depends on spark.sql.legacy.parquet.nanosAsLong, so that conf's
+# value is part of the key.
 _SCHEMA_MEMO: WeakKeyDictionary = WeakKeyDictionary()
 
 
 def _parquet_schema(spark: SparkSession, path: str):
     per_session = _SCHEMA_MEMO.setdefault(spark, {})
-    key = os.path.abspath(path)
+    key = (
+        os.path.abspath(path),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
     if key not in per_session:
         per_session[key] = spark.read.parquet(path).schema
     return per_session[key]
 
 
-def _source_partitions(spark: SparkSession) -> int:
-    """Partition count for re-spreading a single-file stream source.
+def _stream_table(
+    spark: SparkSession, sf_dir: str, table: str, *, spread: bool = False
+) -> DataFrame:
+    """``<sf_dir>/<table>.parquet`` as a file-source STREAM.
 
-    The driver's single-file testdata layout gives FileStreamSource exactly
-    one input partition per microbatch, so every per-document kernel
-    (MinHash signing, gram hashing, token explodes) runs in ONE task on an
-    N-core host — the guide §2.5 unsplittable-input case, fixed by a
-    repartition immediately after the read. Scale-adaptive: defaults to
-    ``defaultParallelism`` (which follows ``$SPARK_GRAFT_CPUS``), overridable
-    with ``$SPARK_GRAFT_STREAM_SOURCE_PARTITIONS`` for real deployments."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SOURCE_PARTITIONS")
-    if env:
-        try:
-            return int(env)
-        except ValueError as exc:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_SOURCE_PARTITIONS must be an integer, "
-                f"got {env!r}"
-            ) from exc
-    return spark.sparkContext.defaultParallelism
+    A directory-style parquet table (the normal layout at scale) is
+    streamed as is. The single-file layout (the scale-factor test data)
+    is streamed from the parent dir filtered down to that one file, since
+    the file source wants a directory; ``spread=True`` then re-spreads each
+    microbatch over ``defaultParallelism`` tasks (see ``_stream_docs``)."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    reader = spark.readStream.schema(_parquet_schema(spark, path))
+    if os.path.isdir(path):
+        return reader.parquet(path)
+    raw = reader.option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
+    return raw.repartition(spark.sparkContext.defaultParallelism) if spread else raw
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a file-source STREAM with the same ns→µs
     timestamp normalization the batch loader applies."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = _parquet_schema(spark, path)
-    if os.path.isdir(path):
-        # Directory-style parquet table (the normal layout at scale):
-        # stream the directory itself.
-        raw = spark.readStream.schema(raw_schema).parquet(path)
-    else:
-        # Single-file layout (the driver's testdata): the file source wants
-        # a directory, so stream the parent filtered down to this one file.
-        raw = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    return normalize_event_ts(raw)
+    return normalize_event_ts(_stream_table(spark, sf_dir, "events"))
 
 
 def normalize_event_ts(raw: DataFrame) -> DataFrame:
@@ -100,6 +89,43 @@ def normalize_event_ts(raw: DataFrame) -> DataFrame:
     return raw
 
 
+def run_stream(
+    writer: DataStreamWriter,
+    *,
+    state_partitions: int | None = None,
+    no_data_batch: bool = True,
+) -> StreamingQuery:
+    """Start ``writer``, process everything available, stop the query and
+    return it (stopped; ``recentProgress`` stays readable).
+
+    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` and
+    ``no_data_batch=False`` turns off the trailing no-data microbatch (see
+    :func:`drain` for when each applies). Both are scoped to ``start()``
+    only: a streaming query clones the session conf when it starts, so the
+    query keeps the pinned values while the session is restored before
+    the first microbatch runs."""
+    confs = {}
+    if state_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
+    if not no_data_batch:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    with scoped_conf(writer._spark, confs):
+        q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q
+
+
+def _take_memory_table(spark: SparkSession, name: str) -> DataFrame:
+    """The memory sink's rows as a batch frame, with the sink's temp view
+    dropped: the frame keeps the rows alive, the session does not."""
+    table = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return table
+
+
 def drain(
     df: DataFrame,
     *,
@@ -108,7 +134,8 @@ def drain(
     no_data_batch: bool = True,
 ) -> DataFrame:
     """Run a streaming frame to completion into a memory sink and return
-    the drained table (batch DataFrame).
+    the drained table (batch DataFrame). The sink's temp view is dropped
+    before returning, so a drain leaves nothing registered on the session.
 
     ``no_data_batch=False`` disables the trailing no-data microbatch for
     drains whose EMISSION does not depend on watermark advancement — the
@@ -120,8 +147,7 @@ def drain(
     stores, zero rows emitted); drained rows verified identical with it
     off. Drains whose append-mode output IS flushed by the watermark
     (left-outer join's null-padded rows, the chained rollup's closed day
-    windows) must keep the default. The session value is restored after
-    the drain either way.
+    windows) must keep the default.
 
     ``state_partitions`` right-sizes the state store when fixed per-
     partition cost dominates: every state partition pays provider-init +
@@ -136,14 +162,9 @@ def drain(
     state is exempt from AQE coalescing — the partition count is fixed at
     plan time and carried by the checkpoint — which is why the batch-side
     default (32 + AQE) cannot fix this and an explicit pin is the only
-    lever. On a real cluster the dial is per-task state SIZE, not
-    provider overhead: ``$SPARK_GRAFT_STREAM_STATE_PARTITIONS`` overrides
-    every PIN for deployments whose keyspace needs the parallelism;
-    drains that pass ``state_partitions=None`` intentionally follow the
-    session's shuffle setting and are not touched by the env knob (a
-    deployment steers them with ``spark.sql.shuffle.partitions`` like
-    any other query). The session default is restored after the drain
-    so batch queries are unaffected.
+    lever. Drains that pass ``state_partitions=None`` follow the session's
+    shuffle setting. Both pins are scoped to the query's start
+    (:func:`run_stream`), so batch queries are unaffected.
 
     Measurement-history note (r13 reconciliation): this docstring used
     to claim the sliding-window agg DEGRADES 2.2 s → 8.5 s at 8
@@ -154,31 +175,13 @@ def drain(
     full-map delta agreed (2.06 → 1.58). The old reading was bring-up
     noise, not a property of the partition count — tiny-state gates are
     provider-bound at every replication since."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env and state_partitions is not None:
-        try:
-            state_partitions = int(env)
-        except ValueError as exc:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, "
-                f"got {env!r}"
-            ) from exc
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if not no_data_batch:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        name = f"gate_{uuid.uuid4().hex[:8]}"
-        q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb)
-    return spark.table(name)
+    name = f"gate_{uuid.uuid4().hex[:8]}"
+    run_stream(
+        df.writeStream.format("memory").queryName(name).outputMode(mode),
+        state_partitions=state_partitions,
+        no_data_batch=no_data_batch,
+    )
+    return _take_memory_table(df.sparkSession, name)
 
 
 @query(
@@ -498,51 +501,31 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     subdirectory with mode("overwrite") (the standard idempotent-sink
     pattern) makes the retry a no-op instead of a double-write, so the
     landed set stays exact under task retries.
-    Output lands under the gitignored warehouse dir and is cleaned after
-    the read-back is materialized by a count()."""
-    import shutil
-    import tempfile
+    Output lands in a fresh temp dir under the gitignored warehouse root,
+    removed once the read-back is materialized.
 
-    warehouse = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-    )
-    os.makedirs(warehouse, exist_ok=True)
-    out_dir = tempfile.mkdtemp(prefix="gate_fes_", dir=warehouse)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch-{batch_id}")
-        )
-
+    State is pinned to 8 partitions, the same tiny-state right-sizing the
+    drain() pins apply (r13 sweep): the dedup state is a few thousand
+    keys; at the session's 32 partitions the per-partition provider init +
+    commit dominates, and the foreachBatch writer then also lands 32
+    near-empty parquet files per batch instead of 8."""
     pairs = (
         stream_events(spark, sf_dir)
         .filter(F.col("user_id") < 200)
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    # Same tiny-state right-sizing the drain() pins apply (r13 sweep):
-    # the dedup state is a few thousand keys; at the session's 32
-    # partitions the per-partition provider init + commit dominates, and
-    # the foreachBatch writer then also lands 32 near-empty parquet files
-    # per batch instead of 8. Same env override as every other pin.
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    try:
-        parts = int(env) if env else 8
-    except ValueError as exc:
-        raise ValueError(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, "
-            f"got {env!r}"
-        ) from exc
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        q = pairs.writeStream.foreachBatch(write_batch).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try:
+    with warehouse_tmp("gate_fes_") as out_dir:
+
+        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+            batch_df.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"batch-{batch_id}")
+            )
+
+        run_stream(
+            pairs.writeStream.foreachBatch(write_batch).outputMode("append"),
+            state_partitions=8,
+        )
         # recursiveFileLookup: the batch-N subdirs are layout, not hive
         # partitions — read every parquet file beneath out_dir flat.
         landed = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
@@ -551,11 +534,11 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n_pairs"), F.countDistinct("user_id").alias("n_users"))
             .orderBy("event_type")
         )
-        # Materialize before deleting the files the plan reads.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("event_type")
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        # Materialize before deleting the files the plan reads. Through
+        # pandas, the rows go back to the JVM over Arrow; a list of Rows
+        # would take a Python-worker round trip (~0.45 s on local[4]).
+        landed_rows = out.toPandas()
+    return spark.createDataFrame(landed_rows, out.schema).orderBy("event_type")
 
 
 def _corpus_values_idx_sql() -> str:
@@ -596,7 +579,7 @@ def _pyds_severity_counts_sql(values_idx_sql: str) -> str:
 )
 def stream_python_datasource_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 Python *streaming* DataSource (`sources/pyds.py`): tail the
-    corpus file in bounded 9-line microbatches (line-count offsets,
+    corpus file in bounded half-corpus microbatches (line-count offsets,
     checkpoint-compatible JSON), drain to a memory sink, then aggregate a
     severity histogram with each class's first byte offset. The oracle
     recomputes severities and offsets arithmetically over the indexed
@@ -616,10 +599,11 @@ def stream_python_datasource_tail(spark: SparkSession, sf_dir: str) -> DataFrame
     double-restart re-delivery the documented limitation. This gated
     query drains in one incarnation, so it runs tier-agnostic."""
     from syslog_kafka_spark.sources import pyds
+    from syslog_kafka_spark.sources.syslog_fixtures import SYSLOG_CORPUS
 
     pyds.register(spark)
     path = pyds.corpus_file(spark)
-    # batchLines 9 over the 17-line corpus = 2 planned microbatches: still
+    # Half the corpus per batch (9 of 17 lines) = 2 planned microbatches: still
     # a multi-batch drain crossing a batch boundary (the property the gate
     # exists to hash-check; the restart/property tests in test_pyds* drive
     # finer splits), at half the per-batch machinery — each extra
@@ -629,7 +613,7 @@ def stream_python_datasource_tail(spark: SparkSession, sf_dir: str) -> DataFrame
     raw = (
         spark.readStream.format("syslog_text")
         .option("path", path)
-        .option("batchLines", 9)
+        .option("batchLines", -(-len(SYSLOG_CORPUS) // 2))
         .load()
     )
     drained = drain(raw, mode="append")
@@ -663,49 +647,27 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint's state layout round-trips: what the stream committed is
     exactly what a batch scan of the same data computes. State rows are
     (key struct, value struct, partition_id); only key/value participate,
-    since partition assignment is an engine detail."""
-    import shutil
+    since partition assignment is an engine detail.
 
-    os.makedirs("spark-warehouse", exist_ok=True)
-    ckpt = os.path.join("spark-warehouse", "_state_read_ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
+    The checkpoint is a fresh temp dir, removed once the ~9 state rows are
+    materialized. State is pinned to 8 partitions (r13 sweep rule): the
+    state is one row per event_type, so 32 partitions means 32 provider
+    inits + commits to write ~9 keys and a read-back over 32 state files.
+    Keys/values are partition-independent, so the result is unchanged."""
     counts = stream_events(spark, sf_dir).groupBy("event_type").count()
-    name = f"ssread_{uuid.uuid4().hex[:8]}"
-    # Tiny-state pin (r13 sweep rule, same env override as drain()): the
-    # state is one row per event_type; 32 partitions means 32 provider
-    # inits + commits to write ~9 keys, and the statestore read-back then
-    # scans 32 state files instead of 8. Keys/values are partition-
-    # independent, so the read-back result is unchanged.
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    try:
-        parts = int(env) if env else 8
-    except ValueError as exc:
-        raise ValueError(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, "
-            f"got {env!r}"
-        ) from exc
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
+    with warehouse_tmp("gate_ssread_") as ckpt:
+        run_stream(
+            counts.writeStream.format("noop")
             .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
+            .option("checkpointLocation", ckpt),
+            state_partitions=8,
         )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    state = spark.read.format("statestore").load(ckpt)
-    return (
-        state.select(
+        state = spark.read.format("statestore").load(ckpt).select(
             F.col("key.event_type").alias("event_type"),
             F.col("value.count").alias("n"),
         )
-        .orderBy("event_type")
-    )
+        state_rows = state.toPandas()  # materialized as in stream_foreach_batch_sink
+    return spark.createDataFrame(state_rows, state.schema).orderBy("event_type")
 
 
 @query(
@@ -827,8 +789,6 @@ def stream_available_now_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     — no manual stop — and hash-checks the final table: termination
     correctness AND result correctness in one gate. State scales by
     (day) key cardinality only."""
-    import uuid as _uuid
-
     agg = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -840,21 +800,12 @@ def stream_available_now_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("user_id").alias("max_user"),
         )
     )
-    name = f"gate_{_uuid.uuid4().hex[:8]}"
+    name = f"gate_{uuid.uuid4().hex[:8]}"
     # Same tiny-state right-sizing as drain(state_partitions=8): per-day
     # keys, one planned batch — provider overhead dominates at 32
-    # (measured 1.75 s → 0.86 s, r13 sweep). Same env override applies.
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    try:
-        parts = int(env) if env else 8
-    except ValueError as exc:
-        raise ValueError(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, "
-            f"got {env!r}"
-        ) from exc
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+    # (measured 1.75 s → 0.86 s, r13 sweep). Scoped to start(), as in
+    # run_stream; the wait below is this gate's own.
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -862,19 +813,17 @@ def stream_available_now_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            # awaitTermination returns False on timeout — the AvailableNow
-            # drain would still be mid-run and the memory table would read as
-            # a plausible-but-incomplete result (silent wrong answer). Raise
-            # explicitly (not assert: -O would strip it and silently restore
-            # the bug); the finally-stop keeps no query leaked either way.
-            if not q.awaitTermination(120):
-                raise RuntimeError("AvailableNow drain did not finish in 120s")
-        finally:
-            q.stop()
+    try:
+        # awaitTermination returns False on timeout — the AvailableNow
+        # drain would still be mid-run and the memory table would read as
+        # a plausible-but-incomplete result (silent wrong answer). Raise
+        # explicitly (not assert: -O would strip it and silently restore
+        # the bug); the finally-stop keeps no query leaked either way.
+        if not q.awaitTermination(120):
+            raise RuntimeError("AvailableNow drain did not finish in 120s")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name).filter(F.col("n_events") > 0).orderBy("day")
+        q.stop()
+    return _take_memory_table(spark, name).filter(F.col("n_events") > 0).orderBy("day")
 
 
 @query(
@@ -1049,22 +998,12 @@ def stream_ivf_list_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings table as a file-source STREAM (single-file driver
-    layout or directory layout — same handling as _stream_docs)."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    schema = _parquet_schema(spark, path)
-    if os.path.isdir(path):
-        return spark.readStream.schema(schema).parquet(path)
-    # single-file driver testdata: the file source wants a directory.
-    # No repartition here (unlike _stream_docs): the embeddings stream is
-    # 2k rows at bench scale and its two consumers' kernels are cheap —
-    # the r14 A/B measured the re-spread flat-to-negative (ivf_refit warm
-    # 1.6 → 2.0 s), so the exchange is not worth it.
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
+    """The embeddings table as a file-source STREAM. No re-spread here
+    (unlike _stream_docs): the embeddings stream is 2k rows at bench scale
+    and its two consumers' kernels are cheap — the r14 A/B measured the
+    re-spread flat-to-negative (ivf_refit warm 1.6 → 2.0 s), so the
+    exchange is not worth it."""
+    return _stream_table(spark, sf_dir, "embeddings")
 
 
 def ivf_occupancy_frame(raw: DataFrame) -> DataFrame:
@@ -1257,12 +1196,12 @@ def transcript_digest(drained: DataFrame) -> DataFrame:
 
 
 def _stream_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documents table as a file-source STREAM (single-file driver
-    layout or directory layout, same handling as the other gates).
+    """The documents table as a file-source STREAM.
 
     Single-file layout additionally re-spreads each microbatch across
-    ``_source_partitions`` tasks: FileStreamSource plans one partition per
-    FILE, so with one parquet file every consumer's per-document kernel
+    ``defaultParallelism`` tasks (which follows ``$SPARK_GRAFT_CPUS``):
+    FileStreamSource plans one partition per FILE, so with one parquet
+    file every consumer's per-document kernel
     (MinHash signing, gram hashing, token explodes — every _stream_docs
     gate does per-token work) ran as ONE task on a 32-core host. The r14
     interleaved A/B over the nine consumers measured the repartition worth
@@ -1273,16 +1212,7 @@ def _stream_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation: every consumer's result is partition-order-independent
     (complete-mode aggregates / key-projected dedup), which the driver
     hash gates confirm."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = _parquet_schema(spark, path)
-    if os.path.isdir(path):
-        return spark.readStream.schema(schema).parquet(path)
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .repartition(_source_partitions(spark))
-    )
+    return _stream_table(spark, sf_dir, "documents", spread=True)
 
 
 def _stream_bloom_oracle() -> str:

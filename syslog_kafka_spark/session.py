@@ -10,6 +10,9 @@ from __future__ import annotations
 
 import logging
 import os
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -46,6 +49,41 @@ _DEFAULTS = {
     # tz is pinned UTC, so values are unchanged).
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
 }
+
+
+# Gitignored scratch root for gate temp dirs, next to the package.
+_WAREHOUSE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "spark-warehouse"
+)
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set each session conf in ``confs`` for the block. On exit (also
+    when the block raises) restore each key's prior value, or unset it if
+    it was unset before. This is the one way plan code pins a session
+    conf, so no builder leaves a flip behind on a shared session."""
+    prior = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def warehouse_tmp(prefix: str) -> tempfile.TemporaryDirectory:
+    """A fresh temp dir under the gitignored spark-warehouse root, removed
+    when its ``with`` block exits. Unique per call, so concurrent builds
+    never share a path."""
+    os.makedirs(_WAREHOUSE, exist_ok=True)
+    return tempfile.TemporaryDirectory(
+        prefix=prefix, dir=_WAREHOUSE, ignore_cleanup_errors=True
+    )
 
 
 def _warm_python_workers(spark: SparkSession) -> None:

@@ -172,12 +172,6 @@ class SyslogStreamReader(DataSourceStreamReader):
         _, buffer = _get_listener(self._protocol, self._host, self._port)
         return buffer
 
-    def __getstate__(self) -> dict:
-        # read(partition) ships to executors; sockets don't pickle and the
-        # partition already carries its rows, so drop nothing but keep the
-        # state dict plain (no live listener reference is stored).
-        return self.__dict__.copy()
-
     def initialOffset(self) -> dict:
         self._listener()
         return {"index": 0}

@@ -14,6 +14,7 @@ from syslog_kafka_spark.operators.multimodal import (
     frame_sample_plan,
     real_decoder,
 )
+from syslog_kafka_spark.session import scoped_conf
 
 
 @pytest.fixture()
@@ -61,6 +62,19 @@ def test_arrow_batch_size_scopes_and_restores(spark, media):
         out = extract_features(media, dim=8, decoder=fake_decoder).collect()
         assert len(out) == 4
     assert spark.conf.get(key, None) == before
+
+
+def test_scoped_conf_restores_set_keys_and_unsets_new_ones_on_raise(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    fresh = "spark.syslog_kafka_spark.test.scoped_conf_unset"
+    with scoped_conf(spark, {key: "123"}):
+        with pytest.raises(RuntimeError, match="boom"):
+            with scoped_conf(spark, {key: "7", fresh: "on"}):
+                assert spark.conf.get(key) == "7"
+                assert spark.conf.get(fresh) == "on"
+                raise RuntimeError("boom")
+        assert spark.conf.get(key) == "123"
+        assert spark.conf.get(fresh, None) is None
 
 
 def test_integer_signal_modulo_in_source_dtype(spark):

@@ -433,3 +433,67 @@ def test_stream_cms_state_is_bounded_and_mass_preserving(spark, sf_dir):
     )
     for r in range(4):
         assert sum(x.cnt for x in rows if x.r == r) == n_tokens
+
+
+_DRAIN_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+
+
+def test_run_stream_pins_confs_for_the_query_only(spark, sf_dir):
+    """run_stream's pins reach the query (8 state partitions, no trailing
+    no-data batch: one progress entry, not two) while the session reads
+    the same confs after the call as before it — the query clones the
+    session conf at start(), so the pin is scoped to start() alone."""
+    from syslog_kafka_spark.plans.stream_gated import run_stream, stream_events
+
+    before = [spark.conf.get(k) for k in _DRAIN_CONFS]
+    counts = (
+        stream_events(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 day"), "event_type")
+        .count()
+    )
+    q = run_stream(
+        counts.writeStream.format("noop").outputMode("append"),
+        state_partitions=8,
+        no_data_batch=False,
+    )
+    assert not q.isActive
+    progress = q.recentProgress
+    assert len(progress) == 1
+    assert progress[0]["stateOperators"][0]["numShufflePartitions"] == 8
+    assert [spark.conf.get(k) for k in _DRAIN_CONFS] == before
+
+
+def test_stream_gates_leave_no_views_dirs_or_confs(spark, sf_dir):
+    """Building and collecting the memory-sink, foreachBatch, state-store
+    and AvailableNow gates registers no temp view, leaves nothing under
+    the warehouse dir and restores the session confs."""
+    import os
+
+    from syslog_kafka_spark.plans.registry import load_all
+
+    warehouse = os.path.join(os.path.dirname(os.path.dirname(__file__)), "spark-warehouse")
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    def warehouse_entries():
+        return {
+            os.path.join(root, name)
+            for root, dirs, files in os.walk(warehouse)
+            for name in dirs + files
+        }
+
+    inventory = load_all()
+    views, entries = temp_views(), warehouse_entries()
+    confs = [spark.conf.get(k) for k in _DRAIN_CONFS]
+    for name in (
+        "stream_sliding_window_agg",
+        "stream_state_store_read",
+        "stream_foreach_batch_sink",
+        "stream_available_now_trigger",
+    ):
+        assert inventory[name].build(spark, sf_dir).collect(), name
+    assert temp_views() == views
+    assert warehouse_entries() - entries == set()
+    assert [spark.conf.get(k) for k in _DRAIN_CONFS] == confs
