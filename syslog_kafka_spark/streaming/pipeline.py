@@ -6,9 +6,12 @@ serves a batch frame (for the oracle-gated batch twins) and a streaming
 one — the core Structured Streaming design, exploited deliberately.
 
 Delivery semantics: file/kafka sinks are exactly-once per Structured
-Streaming's checkpoint contract; the socket source itself is at-least-once
-with possible loss of in-flight lines on crash, exactly like the
-reference's unbuffered channel (syslog/syslog_producer.go:89 — no WAL).
+Streaming's checkpoint contract. The socket source delivers no line twice;
+lines buffered in a process that dies before their batch commits are lost,
+and that is its only loss (offsets name the listener that buffered them, so
+a restart reads every line the new listener holds and replays nothing of
+the dead one). The reference's unbuffered channel has the same loss window
+(syslog/syslog_producer.go:89 — no WAL).
 """
 
 from __future__ import annotations

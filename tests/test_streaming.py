@@ -191,25 +191,210 @@ def test_line_buffer_commit_trims_with_absolute_offsets():
     from syslog_kafka_spark.sources.syslog_source import _LineBuffer
 
     buf = _LineBuffer()
-    for i in range(10):
-        buf.append(f"line{i}")
+    buf.extend([f"line{i}" for i in range(10)], 7)
     assert buf.snapshot_len() == 10
-    assert [l for l, _ in buf.range(3, 6)] == ["line3", "line4", "line5"]
+    assert buf.range(3, 6) == (["line3", "line4", "line5"], [7, 7, 7])
 
     buf.truncate_to(6)  # batches [0,6) committed
     assert buf.snapshot_len() == 10  # absolute offsets unchanged
-    assert [l for l, _ in buf.range(6, 10)] == [f"line{i}" for i in range(6, 10)]
-    assert buf.range(0, 6) == []  # committed prefix is gone
-    assert len(buf._lines) == 4  # memory actually freed
+    assert buf.range(6, 10)[0] == [f"line{i}" for i in range(6, 10)]
+    assert buf.range(0, 6) == ([], [])  # committed prefix is gone
+    assert len(buf._lines) == 4 and len(buf._micros) == 4  # memory actually freed
 
-    buf.append("line10")
+    buf.extend(["line10"], 8)
     assert buf.snapshot_len() == 11
-    assert [l for l, _ in buf.range(10, 11)] == ["line10"]
+    assert buf.range(10, 11) == (["line10"], [8])
     # idempotent / stale commits are safe
     buf.truncate_to(3)
     assert buf.snapshot_len() == 11
     buf.truncate_to(11)
-    assert buf.snapshot_len() == 11 and buf.range(0, 11) == []
+    assert buf.snapshot_len() == 11 and buf.range(0, 11) == ([], [])
+
+
+def _framed(*chunks: bytes, close: bool = True) -> list[str]:
+    from syslog_kafka_spark.sources.syslog_source import _Framer, _LineBuffer
+
+    buf = _LineBuffer()
+    framer = _Framer(buf)
+    for chunk in chunks:
+        framer.feed(chunk)
+    if close:
+        framer.close()
+    return buf.range(0, buf.snapshot_len())[0]
+
+
+def test_framer_splits_on_newline_only():
+    """One framer for TCP and UDP, with bufio.Scanner's line rules: split on
+    "\\n" only, strip one trailing "\\r", drop empty lines, decode after
+    splitting, flush an unterminated last line on close."""
+    odd = "a\x0bb\x0cc\x1cd\x1de\x1ef\x85g\u2028h\u2029i"  # str.splitlines() breaks these
+    assert _framed(odd.encode() + b"\n") == [odd]
+    assert _framed(b"one\r\ntwo\r\n", b"x\r\r\n") == ["one", "two", "x\r"]
+    assert _framed(b"\n\n\r\nx\n\n\r\n") == ["x"]
+    assert _framed(b"hel", b"lo\nwor", b"ld\n") == ["hello", "world"]
+    euro = "€".encode()  # 3 bytes, cut after the second
+    assert _framed(b"price " + euro[:2], euro[2:] + b" 5\n") == ["price € 5"]
+    assert _framed(b"bad \xff\xfe end\n") == ["bad \ufffd\ufffd end"]
+    assert _framed(b"done\nlast", close=False) == ["done"]
+    assert _framed(b"done\nlast") == ["done", "last"]
+    assert _framed(b"last\r") == ["last"]
+
+
+def _free_port(protocol: str) -> int:
+    with socket.socket(socket.AF_INET, socket.SOCK_STREAM if protocol == "tcp" else socket.SOCK_DGRAM) as s:
+        s.bind(("127.0.0.1", 0))
+        return s.getsockname()[1]
+
+
+def _live_reader(protocol: str):
+    """A reader whose listener is bound on a free port; (reader, port)."""
+    from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
+    from syslog_kafka_spark.sources.syslog_source import SyslogStreamReader
+
+    port = _free_port(protocol)
+    reader = SyslogStreamReader(
+        SYSLOG_MESSAGE_SCHEMA, {"host": "127.0.0.1", "port": str(port), "protocol": protocol}
+    )
+    reader.latestOffset()  # binds the listener
+    return reader, port
+
+
+def _send(protocol: str, port: int, payload: bytes) -> None:
+    if protocol == "tcp":
+        with socket.create_connection(("127.0.0.1", port), timeout=5) as s:
+            s.sendall(payload)
+    else:
+        with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as s:
+            s.sendto(payload, ("127.0.0.1", port))
+
+
+def _wait_buffered(reader, n: int) -> dict:
+    deadline = time.time() + 20
+    while (end := reader.latestOffset())["index"] < n:
+        assert time.time() < deadline, f"listener buffered {end} of {n} lines"
+        time.sleep(0.01)
+    return end
+
+
+def _table(reader, start: dict, end: dict):
+    """The rows of partitions(start, end) as the Python worker hands them
+    to the JVM (records_to_arrow_batches), as one Arrow table."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
+
+    from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
+    from syslog_kafka_spark.sources.syslog_source import SyslogDataSource
+
+    (part,) = reader.partitions(start, end)
+    batches = records_to_arrow_batches(reader.read(part), 10_000, SYSLOG_MESSAGE_SCHEMA, SyslogDataSource({}))
+    return pa.Table.from_batches(list(batches), schema=to_arrow_schema(SYSLOG_MESSAGE_SCHEMA))
+
+
+@pytest.mark.parametrize("protocol", ["tcp", "udp"])
+def test_listener_frames_the_same_over_tcp_and_udp(protocol):
+    reader, port = _live_reader(protocol)
+    try:
+        start = reader.initialOffset()
+        _send(protocol, port, "a\x0cb\u2028c\r\n\nlast".encode())
+        end = _wait_buffered(reader, 2)
+        assert _table(reader, start, end).column("line").to_pylist() == ["a\x0cb\u2028c", "last"]
+    finally:
+        reader.stop()
+
+
+def _numbered(lo: int, hi: int) -> list[str]:
+    return [f"{SYSLOG_CORPUS[i % len(SYSLOG_CORPUS)]} #{i}" for i in range(lo, hi)]
+
+
+def test_restart_delivers_every_new_line_once():
+    """A restarted query's checkpoint names the old listener's offsets. The
+    first batch after the restart must deliver every line the new
+    listener buffered, however early it arrived, and a replayed batch of
+    the dead listener must deliver nothing (its lines died with it)."""
+    a, port_a = _live_reader("tcp")
+    try:
+        a_start = a.initialOffset()
+        _send("tcp", port_a, "".join(f"{l}\n" for l in _numbered(0, 100)).encode())
+        a_end = _wait_buffered(a, 100)
+        assert _table(a, a_start, a_end).num_rows == 100
+        a.commit(a_end)
+    finally:
+        a.stop()
+
+    b, port_b = _live_reader("tcp")
+    try:
+        # an eager sender: all 300 lines arrive before the first poll
+        _send("tcp", port_b, "".join(f"{l}\n" for l in _numbered(100, 400)).encode())
+        b_end = _wait_buffered(b, 300)
+        assert _table(b, a_end, b_end).column("line").to_pylist() == _numbered(100, 400)
+        assert _table(b, {"index": 100}, b_end).num_rows == 300  # an offset with no epoch
+        assert _table(b, a_start, a_end).num_rows == 0  # the replayed uncommitted batch
+        b.commit(a_end)  # a foreign commit trims nothing
+        assert _table(b, a_end, b_end).num_rows == 300
+        b.commit(b_end)
+        assert _table(b, b_end, b.latestOffset()).num_rows == 0
+    finally:
+        b.stop()
+
+
+def test_received_ts_is_the_stamped_instant_in_any_local_zone():
+    """received_ts is the arrival instant whatever the worker's local time
+    zone: a naive wall-clock value would be shifted by the zone offset."""
+    import os
+
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    reader, port = _live_reader("tcp")
+    try:
+        start = reader.initialOffset()
+        before = time.time_ns() // 1000
+        _send("tcp", port, b"<13>Aug 13 03:38:00 web01 nginx[912]: zoned\n")
+        end = _wait_buffered(reader, 1)
+        after = time.time_ns() // 1000
+        (got,) = _table(reader, start, end).column("received_ts").cast("int64").to_pylist()
+        assert before <= got <= after
+        assert [got] == reader._listener().range(0, 1)[1]
+    finally:
+        reader.stop()
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
+@pytest.mark.parametrize("lines", [SYSLOG_CORPUS, ["héllo wörld", "日本語のログ", "emoji 🚀 \ufffd"], []],
+                         ids=["corpus", "non_ascii", "empty"])
+def test_arrow_partition_equals_the_tuple_rows(monkeypatch, lines):
+    """Differential: the columnar partition equals the (line, source,
+    received) tuples the row path yielded, run through PySpark's own
+    tuple→Arrow conversion; the batch carries the exact Arrow schema."""
+    from datetime import datetime, timedelta, timezone
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
+
+    from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
+    from syslog_kafka_spark.sources import syslog_source
+
+    buf = syslog_source._LineBuffer()
+    for i in range(0, len(lines), 4):  # chunks of 4 lines, one stamp each
+        buf.extend(lines[i : i + 4], 1_700_000_000_000_000 + 1_000_003 * i)
+    monkeypatch.setattr(syslog_source, "_get_listener", lambda *endpoint: (None, buf))
+    reader = syslog_source.SyslogStreamReader(SYSLOG_MESSAGE_SCHEMA, {})
+
+    (part,) = reader.partitions(reader.initialOffset(), reader.latestOffset())
+    (batch,) = reader.read(part)
+    assert batch.schema == to_arrow_schema(SYSLOG_MESSAGE_SCHEMA)
+
+    epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+    got_lines, got_micros = buf.range(0, len(lines))
+    rows = [(l, socket.gethostname(), epoch + timedelta(microseconds=us)) for l, us in zip(got_lines, got_micros)]
+    want = list(records_to_arrow_batches(iter(rows), 10_000, SYSLOG_MESSAGE_SCHEMA, syslog_source.SyslogDataSource({})))
+    assert batch.to_pylist() == [r for b in want for r in b.to_pylist()]
+    assert got_lines == list(lines)
 
 
 @pytest.mark.parametrize("protocol", ["tcp", "udp"])
