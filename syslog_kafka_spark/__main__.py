@@ -138,8 +138,13 @@ def main(argv: list[str] | None = None) -> int:
 
     signal.signal(signal.SIGINT, stop)
     signal.signal(signal.SIGTERM, stop)
-    for q in queries:
-        q.awaitTermination()
+    try:
+        # Returns once a signal has stopped the queries, and raises the
+        # error of whichever query fails first: a dead listener ends the
+        # process with a non-zero exit instead of going unreported.
+        spark.streams.awaitAnyTermination()
+    finally:
+        stop()
     return 0
 
 

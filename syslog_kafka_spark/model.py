@@ -1,28 +1,21 @@
-"""Canonical data model: SyslogMessage + LogLine StructTypes.
+"""Canonical data model: the SyslogMessage StructType and the LogLine
+Avro schema.
 
 Reference parity (cited against /root/reference):
 - SyslogMessage: syslog/syslog_producer.go:29-33 — one received line plus
   the collector's hostname and the arrival time (epoch millis there; a real
   TimestampType here).
 - LogLine (Avro): avro/logline.avsc:1-56 and avro/logline.go:5-11 — every
-  top-level field is a union-with-null defaulting to null, so every Spark
-  field is nullable=True.
-- LogLine (Protobuf): proto/logline.proto:3-16 — `timings` is a repeated
-  bare int64 (received_ms, sent_ms) instead of Avro's array of
-  {eventName, value} records, and tags are repeated Tag{key,value} pairs.
+  top-level field is a union-with-null defaulting to null.
+- LogLine (Protobuf, encode/proto_wire.py): proto/logline.proto:3-16 —
+  `timings` is a repeated bare int64 (received_ms, sent_ms) instead of
+  Avro's array of {eventName, value} records, and tags are repeated
+  Tag{key,value} pairs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 # Rows emitted by the syslog streaming source (reference R1-R3).
 SYSLOG_MESSAGE_SCHEMA = StructType(
@@ -30,38 +23,6 @@ SYSLOG_MESSAGE_SCHEMA = StructType(
         StructField("line", StringType(), True),
         StructField("source", StringType(), True),
         StructField("received_ts", TimestampType(), True),
-    ]
-)
-
-# Avro flavor: timings is an array of {eventName, value} records
-# (avro/logline.avsc:31-54).
-TIMING_SCHEMA = StructType(
-    [
-        StructField("eventName", StringType(), True),
-        StructField("value", LongType(), True),
-    ]
-)
-
-LOGLINE_AVRO_SCHEMA = StructType(
-    [
-        StructField("line", StringType(), True),
-        StructField("source", StringType(), True),
-        StructField("tag", MapType(StringType(), StringType(), True), True),
-        StructField("logtypeid", LongType(), True),
-        StructField("timings", ArrayType(TIMING_SCHEMA, True), True),
-    ]
-)
-
-# Protobuf flavor: timings are bare epoch-ms longs (syslog.go:174 appends
-# [received, sent]); tag remains a map at the DataFrame level and is
-# expanded to repeated Tag{key,value} pairs at encode time.
-LOGLINE_PROTO_SCHEMA = StructType(
-    [
-        StructField("line", StringType(), True),
-        StructField("source", StringType(), True),
-        StructField("tag", MapType(StringType(), StringType(), True), True),
-        StructField("logtypeid", LongType(), True),
-        StructField("timings", ArrayType(LongType(), True), True),
     ]
 )
 
@@ -104,22 +65,6 @@ LOGLINE_AVSC = {
         },
     ],
 }
-
-# Parsed syslog record (FIXTURES.md §B.2): facility = pri / 8,
-# severity = pri % 8 per RFC 5424 §6.2.1.
-SYSLOG_PARSED_FIELDS = [
-    "pri",
-    "facility",
-    "severity",
-    "version",
-    "ts",
-    "host",
-    "app",
-    "procid",
-    "msgid",
-    "msg",
-    "raw",
-]
 
 TABLE_NAMES = [
     "region",

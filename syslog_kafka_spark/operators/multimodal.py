@@ -168,12 +168,6 @@ def extract_features(
     return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize: metadata updates are real; pixel work is stubbed in
-    the same decoder seam as extract_features."""
-    return media.withColumn("width", F.lit(width)).withColumn("height", F.lit(height))
-
-
 def frame_sample_plan(media: DataFrame, every_ms: int) -> DataFrame:
     """Video frame-sampling plan: one row per sampled timestamp (real
     Spark-side expansion via sequence+explode; frame decode is the stub)."""

@@ -485,14 +485,12 @@ def agg_recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (Spark 4) as a calendar spine: 24 month starts
     generated by UNION ALL recursion, left-joined to orders so zero-order
     months survive with revenue 0. The SQL text is IDENTICAL on both
-    engines (modulo the view name) — the strongest dialect-parity case in
+    engines (modulo the table reference) — the strongest dialect-parity case in
     the inventory. Recursion in Spark is UNION ALL only (no cycle-safe
     UNION yet), which a finite monotone generator like this satisfies by
     construction; the spine is 24 rows, so the recursion cost is nil and
     the join broadcasts the spine against the fact table."""
-    t = load_tables(spark, sf_dir)
-    t.orders.createOrReplaceTempView("_orders_spine")
-    return spark.sql(_MONTH_SPINE_SQL.format(orders="_orders_spine"))
+    return spark.sql(_MONTH_SPINE_SQL, orders=load_tables(spark, sf_dir).orders)
 
 
 @query(
@@ -515,17 +513,17 @@ def agg_listagg_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims, so the join broadcasts and the aggregation is one exchange on
     r_name."""
     t = load_tables(spark, sf_dir)
-    t.nation.createOrReplaceTempView("_nat_la")
-    t.region.createOrReplaceTempView("_reg_la")
     return spark.sql(
         """
         SELECT r_name,
                listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations,
                count(*) AS n
-        FROM _nat_la JOIN _reg_la ON n_regionkey = r_regionkey
+        FROM {nation} JOIN {region} ON n_regionkey = r_regionkey
         GROUP BY r_name
         ORDER BY r_name
-        """
+        """,
+        nation=t.nation,
+        region=t.region,
     )
 
 
@@ -706,7 +704,6 @@ def agg_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves both engines infer the identical key set (status, priority,
     derived year). Plan-wise this is an ordinary partial/final hash
     aggregate on the inferred keys; the sugar costs nothing at scale."""
-    load_tables(spark, sf_dir).orders.createOrReplaceTempView("_ord_gball")
     return spark.sql(
         """
         SELECT o_orderstatus,
@@ -714,11 +711,12 @@ def agg_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(year(o_orderdate) AS INT) AS yr,
                count(*) AS n_orders,
                CAST(round(sum(o_totalprice), 2) AS DOUBLE) AS revenue
-        FROM _ord_gball
+        FROM {orders}
         GROUP BY ALL
         HAVING count(*) > 5
         ORDER BY o_orderstatus, o_orderpriority, yr
-        """
+        """,
+        orders=load_tables(spark, sf_dir).orders,
     )
 
 

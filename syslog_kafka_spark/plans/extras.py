@@ -30,8 +30,6 @@ from syslog_kafka_spark.sources.readers import load_tables
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS with GROUPING_ID disambiguation (the bitmask
     agrees across engines: bit per column, 1 = aggregated-away)."""
-    t = load_tables(spark, sf_dir)
-    t.lineitem.createOrReplaceTempView("_li_gs")
     return spark.sql(
         """
         SELECT
@@ -39,10 +37,11 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
           coalesce(l_linestatus, '<all>') AS linestatus,
           CAST(GROUPING_ID(l_returnflag, l_linestatus) AS BIGINT) AS gid,
           count(*) AS n
-        FROM _li_gs
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
         ORDER BY gid, returnflag, linestatus
-        """
+        """,
+        lineitem=load_tables(spark, sf_dir).lineitem,
     )
 
 
@@ -63,18 +62,18 @@ def join_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS with extra predicates — Catalyst decorrelates to a
     semi-join with the predicates pushed into the build side."""
     t = load_tables(spark, sf_dir)
-    t.part.createOrReplaceTempView("_part_ex")
-    t.lineitem.createOrReplaceTempView("_li_ex")
     return spark.sql(
         """
         SELECT p_partkey, p_name
-        FROM _part_ex
+        FROM {part}
         WHERE EXISTS (
-          SELECT 1 FROM _li_ex
+          SELECT 1 FROM {lineitem}
           WHERE l_partkey = p_partkey AND l_quantity > 49 AND l_discount = 0.0
         )
         ORDER BY p_partkey
-        """
+        """,
+        part=t.part,
+        lineitem=t.lineitem,
     )
 
 

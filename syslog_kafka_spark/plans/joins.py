@@ -384,18 +384,18 @@ def join_in_subquery_vip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery → semi-join rewrite (expressed via spark.sql to exercise
     Catalyst's subquery decorrelation explicitly)."""
     t = load_tables(spark, sf_dir)
-    t.orders.createOrReplaceTempView("_orders_v")
-    t.customer.createOrReplaceTempView("_customer_v")
     return spark.sql(
         """
         SELECT o_orderstatus,
                count(*) AS n_orders,
                round(sum(o_totalprice), 2) AS total
-        FROM _orders_v
-        WHERE o_custkey IN (SELECT c_custkey FROM _customer_v WHERE c_acctbal > 9500)
+        FROM {orders}
+        WHERE o_custkey IN (SELECT c_custkey FROM {customer} WHERE c_acctbal > 9500)
         GROUP BY o_orderstatus
         ORDER BY o_orderstatus
-        """
+        """,
+        orders=t.orders,
+        customer=t.customer,
     )
 
 
@@ -642,23 +642,23 @@ def join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a 100 TB fact table. Deterministic: price ties broken by
     o_orderkey inside the LIMIT's ORDER BY."""
     t = load_tables(spark, sf_dir)
-    t.customer.createOrReplaceTempView("_cust_lat")
-    t.orders.createOrReplaceTempView("_ord_lat")
     return spark.sql(
         """
         SELECT c.c_custkey, c.c_name, o.o_orderkey,
                CAST(round(o.o_totalprice, 2) AS DOUBLE) AS total_price
-        FROM _cust_lat c,
+        FROM {customer} c,
         LATERAL (
           SELECT o_orderkey, o_totalprice
-          FROM _ord_lat
+          FROM {orders}
           WHERE o_custkey = c.c_custkey
           ORDER BY o_totalprice DESC, o_orderkey
           LIMIT 2
         ) o
         WHERE c.c_custkey <= 120
         ORDER BY c.c_custkey, o.o_orderkey
-        """
+        """,
+        customer=t.customer,
+        orders=t.orders,
     )
 
 

@@ -3209,8 +3209,6 @@ def llm_udtf_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-frequency-bound, not corpus-size-bound."""
     from pyspark.sql.functions import udtf
 
-    t = load_tables(spark, sf_dir)
-    t.documents.createOrReplaceTempView("_docs_kwic")
     kwic = udtf(
         _KwicUDTF,
         returnType="doc_id BIGINT, pos INT, left_ctx STRING, right_ctx STRING",
@@ -3219,19 +3217,25 @@ def llm_udtf_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.udtf.register("kwic_hits", kwic)
     # The doc_id predicate must live UNDER the lateral join: Spark does not
     # push filters through ArrowEvalPythonUDTF (the UDTF is an optimizer
-    # black box), so `FROM _docs_kwic d ... WHERE d.doc_id <= 60` tokenizes
+    # black box), so `FROM {documents} d ... WHERE d.doc_id <= 60` tokenizes
     # the ENTIRE corpus in Python and then discards all but 60 docs.
     # Pre-filtering the left side is result-identical for an inner lateral
     # join keyed on an input column (r13: corpus-sized UDTF input -> 60 rows,
     # Filter above ArrowEvalPythonUDTF -> PushedFilters on the parquet scan).
-    return spark.sql(
-        """
-        SELECT s.doc_id, s.pos, s.left_ctx, s.right_ctx
-        FROM (SELECT doc_id, text FROM _docs_kwic WHERE doc_id <= 60) d,
-             LATERAL kwic_hits(d.doc_id, d.text, 'spark') s
-        ORDER BY s.doc_id, s.pos
-        """
-    )
+    # The analyzed plan holds the resolved UDTF, so the name is dropped once
+    # the frame is built.
+    try:
+        return spark.sql(
+            """
+            SELECT s.doc_id, s.pos, s.left_ctx, s.right_ctx
+            FROM (SELECT doc_id, text FROM {documents} WHERE doc_id <= 60) d,
+                 LATERAL kwic_hits(d.doc_id, d.text, 'spark') s
+            ORDER BY s.doc_id, s.pos
+            """,
+            documents=load_tables(spark, sf_dir).documents,
+        )
+    finally:
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS kwic_hits")
 
 
 # --- near-dup graph analytics ----------------------------------------------

@@ -496,7 +496,6 @@ def llm_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Mixture subsampling (apply the temperature weights)
 # ---------------------------------------------------------------------------
 
-_SUB_ALPHA = 0.5  # temperature
 _SUB_BETA = 0.5  # token budget as a fraction of the corpus
 
 
@@ -1231,8 +1230,6 @@ def llm_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Epoch up-sampling plan (apply the repeat factors)
 # ---------------------------------------------------------------------------
-
-_EPOCH_ALPHA = 0.5  # temperature (sqrt — IEEE-exact on both engines)
 
 
 def _epoch_upsample_oracle() -> str:

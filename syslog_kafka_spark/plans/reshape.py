@@ -125,17 +125,17 @@ def join_not_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT IN with a null-free subquery (→ anti-join; with possible nulls
     NOT IN becomes null-aware anti-join, same Catalyst path)."""
     t = load_tables(spark, sf_dir)
-    t.supplier.createOrReplaceTempView("_supp_ni")
-    t.lineitem.createOrReplaceTempView("_li_ni")
     return spark.sql(
         """
         SELECT s_suppkey, s_name
-        FROM _supp_ni
+        FROM {supplier}
         WHERE s_suppkey NOT IN (
-          SELECT l_suppkey FROM _li_ni WHERE l_quantity >= 49.5
+          SELECT l_suppkey FROM {lineitem} WHERE l_quantity >= 49.5
         )
         ORDER BY s_suppkey
-        """
+        """,
+        supplier=t.supplier,
+        lineitem=t.lineitem,
     )
 
 

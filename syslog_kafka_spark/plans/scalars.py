@@ -710,19 +710,18 @@ def scalar_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates to the scan, and injection is structurally impossible.
     The oracle is the same query with the literals inlined, proving the
     bound plan is equivalent to the literal plan."""
-    t = load_tables(spark, sf_dir)
-    t.orders.createOrReplaceTempView("_ord_param")
     return spark.sql(
         """
         SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
                count(*) AS n_orders,
                CAST(round(sum(o_totalprice), 2) AS DOUBLE) AS revenue
-        FROM _ord_param
+        FROM {orders}
         WHERE o_totalprice > :min_price AND o_orderpriority = :prio
         GROUP BY 1
         ORDER BY month
         """,
         args={"min_price": 250000.0, "prio": "1-URGENT"},
+        orders=load_tables(spark, sf_dir).orders,
     )
 
 
@@ -748,11 +747,9 @@ def scalar_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     still push to the scan and the aggregate still partials; the oracle
     being the classic spelling proves the two syntaxes are
     plan-equivalent, not merely similar."""
-    t = load_tables(spark, sf_dir)
-    t.orders.createOrReplaceTempView("_ord_pipe")
     return spark.sql(
         """
-        FROM _ord_pipe
+        FROM {orders}
         |> WHERE o_orderstatus = 'F'
         |> AGGREGATE count(*) AS n_orders,
                      CAST(round(avg(o_totalprice), 2) AS DOUBLE) AS avg_price
@@ -760,7 +757,8 @@ def scalar_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
         |> WHERE n_orders > 10
         |> SELECT o_orderpriority, n_orders, avg_price
         |> ORDER BY o_orderpriority
-        """
+        """,
+        orders=load_tables(spark, sf_dir).orders,
     )
 
 
@@ -791,15 +789,15 @@ def scalar_collation_caseless(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lower("c_mktsegment"))
         .alias("seg")
     )
-    mangled.createOrReplaceTempView("_cust_coll")
     return spark.sql(
         """
         SELECT count(DISTINCT seg COLLATE UTF8_LCASE) AS n_caseless,
                count(DISTINCT seg) AS n_exact,
                CAST(sum(CASE WHEN seg COLLATE UTF8_LCASE = 'Building' THEN 1 ELSE 0 END) AS BIGINT)
                  AS n_building
-        FROM _cust_coll
-        """
+        FROM {mangled}
+        """,
+        mangled=mangled,
     )
 
 
@@ -897,8 +895,8 @@ def scalar_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     defined once and reused. The oracle expands the definitions manually,
     proving the UDF layer is pure sugar over the same plan. At scale this
     matters because SQL UDFs keep hot-path expressions JVM-side where a
-    Python UDF would cost an Arrow hop per batch."""
-    load_tables(spark, sf_dir).lineitem.createOrReplaceTempView("_li_sqludf")
+    Python UDF would cost an Arrow hop per batch. The analyzed plan keeps
+    the resolved bodies, so both functions are dropped once it is built."""
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION disc_price(p DOUBLE, d DOUBLE) "
         "RETURNS DOUBLE RETURN p * (1 - d)"
@@ -907,20 +905,25 @@ def scalar_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CREATE OR REPLACE TEMPORARY FUNCTION charge(p DOUBLE, d DOUBLE, t DOUBLE) "
         "RETURNS DOUBLE RETURN disc_price(p, d) * (1 + t)"
     )
-    return spark.sql(
-        """
-        SELECT l_returnflag,
-               count(*) AS n,
-               CAST(round(sum(disc_price(l_extendedprice, l_discount)), 2) AS DOUBLE)
-                 AS disc_revenue,
-               CAST(round(sum(charge(l_extendedprice, l_discount, l_tax)), 2) AS DOUBLE)
-                 AS charged
-        FROM _li_sqludf
-        WHERE l_quantity >= 30
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag
-        """
-    )
+    try:
+        return spark.sql(
+            """
+            SELECT l_returnflag,
+                   count(*) AS n,
+                   CAST(round(sum(disc_price(l_extendedprice, l_discount)), 2) AS DOUBLE)
+                     AS disc_revenue,
+                   CAST(round(sum(charge(l_extendedprice, l_discount, l_tax)), 2) AS DOUBLE)
+                     AS charged
+            FROM {lineitem}
+            WHERE l_quantity >= 30
+            GROUP BY l_returnflag
+            ORDER BY l_returnflag
+            """,
+            lineitem=load_tables(spark, sf_dir).lineitem,
+        )
+    finally:
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS charge")
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS disc_price")
 
 
 @query(
@@ -947,7 +950,6 @@ def scalar_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration is one Catalyst-planned statement, so the script's data
     work (the initial aggregate) still runs distributed; only the scalar
     loop state lives on the driver."""
-    load_tables(spark, sf_dir).orders.createOrReplaceTempView("_ord_script")
     with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         out = spark.sql(
             """
@@ -957,7 +959,7 @@ def scalar_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
               DECLARE rows_acc ARRAY<STRUCT<yr: INT, revenue: DOUBLE>>
                 DEFAULT array();
               SET base = (SELECT round(sum(o_totalprice), 2)
-                            FROM _ord_script WHERE o_orderstatus = 'O');
+                            FROM {orders} WHERE o_orderstatus = 'O');
               WHILE yr <= 5 DO
                 SET rows_acc = array_append(rows_acc,
                                             named_struct('yr', yr, 'revenue', base));
@@ -967,7 +969,8 @@ def scalar_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
               SELECT t.yr, t.revenue FROM (SELECT explode(rows_acc) AS t)
               ORDER BY t.yr;
             END
-            """
+            """,
+            orders=load_tables(spark, sf_dir).orders,
         )
         rows = out.collect()
     return spark.createDataFrame(rows, out.schema).orderBy("yr")

@@ -388,19 +388,20 @@ def scan_catalog_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from syslog_kafka_spark.sources.readers import load_tables
 
-    t = load_tables(spark, sf_dir)
-    t.lineitem.createOrReplaceTempView("_li_ctas")
+    lineitem = load_tables(spark, sf_dir).lineitem
     tbl = f"ctas_gate_{_uuid.uuid4().hex[:8]}"
     spark.sql(
         f"""CREATE TABLE {tbl} USING parquet AS
             SELECT l_returnflag, l_quantity, l_extendedprice
-            FROM _li_ctas WHERE l_quantity >= 45"""
+            FROM {{lineitem}} WHERE l_quantity >= 45""",
+        lineitem=lineitem,
     )
     try:
         spark.sql(
             f"""INSERT INTO {tbl}
                 SELECT l_returnflag, l_quantity, l_extendedprice
-                FROM _li_ctas WHERE l_quantity < 5"""
+                FROM {{lineitem}} WHERE l_quantity < 5""",
+            lineitem=lineitem,
         )
         out = spark.sql(
             f"""SELECT l_returnflag,

@@ -99,10 +99,7 @@ def _warm_python_workers(spark: SparkSession) -> None:
     already applies to the JVM and parquet footers: session bring-up is a
     session cost, not a property of any query. One partition per core so
     every worker slot forks and imports; the no-op kernel touches no
-    data. ``SPARK_GRAFT_WARM_PYTHON=0`` opts out (e.g. pure-JVM batch
-    deployments that never run a Python stage)."""
-    if os.environ.get("SPARK_GRAFT_WARM_PYTHON", "1") == "0":
-        return
+    data."""
 
     def _noop_kernel(batches):
         import numpy  # noqa: F401 — fleet import warm-up

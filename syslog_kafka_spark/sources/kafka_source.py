@@ -1,20 +1,16 @@
-"""Kafka consume path: readStream → decode LogLine values.
+"""Kafka consume side: decode LogLine values.
 
 Closes the loop the reference only half-owns (it produces; its vendored
 client library ships the decoder — go-kafka-avro KafkaAvroDecoder,
 avro_encoder_decoder.go:81-106). Decode runs as an Arrow-batched pandas
-UDF over the binary value column; everything else is the built-in Kafka
-source (offsets, partitions, exactly-once bookkeeping).
-
-Not exercised against a live broker in this environment; the decode UDFs
-are round-trip property-tested against the encoders.
+UDF over a binary Kafka ``value`` column. The UDFs are round-trip
+property-tested against the encoders and gated by the Kafka round-trip
+queries in plans/kafka_roundtrip.py.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.functions import pandas_udf
 
 from syslog_kafka_spark.encode.decode import decode_confluent, decode_logline_proto
@@ -52,33 +48,3 @@ def decode_confluent_udf(values: pd.Series) -> pd.DataFrame:
 def decode_proto_udf(values: pd.Series) -> pd.DataFrame:
     return pd.DataFrame([decode_logline_proto(bytes(v)) for v in values])
 
-
-def read_kafka_loglines(
-    spark: SparkSession,
-    *,
-    brokers: str,
-    topic: str,
-    encoding: str = "string",
-    starting_offsets: str = "latest",
-) -> DataFrame:
-    """Streaming Kafka source with the LogLine value decoded per encoding.
-
-    Returns columns (topic, partition, offset, timestamp, key, logline)
-    where ``logline`` is a struct for avro/proto or the raw string for
-    string encoding.
-    """
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    base = raw.select("topic", "partition", "offset", "timestamp", "key", "value")
-    if encoding == "string":
-        return base.withColumn("logline", F.col("value").cast("string")).drop("value")
-    if encoding == "avro":
-        return base.withColumn("logline", decode_confluent_udf(F.col("value"))).drop("value")
-    if encoding == "proto":
-        return base.withColumn("logline", decode_proto_udf(F.col("value"))).drop("value")
-    raise ValueError(f"unknown encoding {encoding!r}")

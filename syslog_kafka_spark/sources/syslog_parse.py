@@ -158,12 +158,6 @@ def with_structured_data(df: DataFrame, line_col: str = "line", out_col: str = "
     return df.withColumn(out_col, sd_map_expr(line_col))
 
 
-def parse_syslog_text(spark, path: str, year: int = DEFAULT_YEAR) -> DataFrame:
-    """Batch entry point: parse a text file of syslog lines (one per row)."""
-    raw = spark.read.text(path).withColumnRenamed("value", "line")
-    return parse_syslog_lines(raw, "line", year)
-
-
 def oracle_sql_for_lines(values_sql: str, year: int = DEFAULT_YEAR) -> str:
     """DuckDB twin of :func:`parse_syslog_lines` over a VALUES list.
 

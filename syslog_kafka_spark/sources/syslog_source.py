@@ -145,13 +145,44 @@ class _TCPHandler(socketserver.BaseRequestHandler):
         framer.close()
 
 
-def start_tcp_listener(host: str, port: int, buffer: _LineBuffer):
-    class _Server(socketserver.ThreadingTCPServer):
-        allow_reuse_address = True
-        daemon_threads = True
+class _TCPServer(socketserver.ThreadingTCPServer):
+    """One handler thread per connection, all framing into ``buffer``.
+    ``shutdown`` also closes the listening socket and every open
+    connection, so the port is free at once and no line sent after it
+    reaches the dropped buffer."""
 
-    server = _Server((host, port), _TCPHandler, bind_and_activate=True)
-    server.buffer = buffer  # type: ignore[attr-defined]
+    allow_reuse_address = True
+    daemon_threads = True
+
+    def __init__(self, host: str, port: int, buffer: _LineBuffer) -> None:
+        super().__init__((host, port), _TCPHandler)
+        self.buffer = buffer
+        self._open: set[socket.socket] = set()
+        self._open_lock = threading.Lock()
+
+    def process_request(self, request, client_address) -> None:
+        with self._open_lock:
+            self._open.add(request)
+        super().process_request(request, client_address)
+
+    def shutdown_request(self, request) -> None:
+        with self._open_lock:
+            self._open.discard(request)
+        super().shutdown_request(request)
+
+    def shutdown(self) -> None:
+        super().shutdown()  # serve_forever has returned: no more accepts
+        self.server_close()
+        with self._open_lock:
+            for conn in self._open:
+                try:
+                    conn.shutdown(socket.SHUT_RDWR)  # the handler's recv returns
+                except OSError:  # the peer is already gone
+                    pass
+
+
+def start_tcp_listener(host: str, port: int, buffer: _LineBuffer):
+    server = _TCPServer(host, port, buffer)
     thread = threading.Thread(target=server.serve_forever, daemon=True)
     thread.start()
     return server

@@ -56,6 +56,56 @@ def test_cli_producer_knob_defaults_and_flags():
     assert (args.required_acks, args.acks_timeout, args.num_producers) == (0, 250, 4)
 
 
+def test_cli_exits_with_the_error_of_a_failed_query(monkeypatch):
+    """When one listener's query dies (here UDP), main() raises its error
+    instead of blocking on the healthy TCP query, and stops every query
+    on the way out. Fakes stand in for the session and the queries."""
+    import signal
+    import threading
+
+    import syslog_kafka_spark.session as session
+    import syslog_kafka_spark.streaming.pipeline as pipeline
+    from syslog_kafka_spark.__main__ import main
+
+    class QueryDied(Exception):
+        pass
+
+    queries = []
+
+    class FakeQuery:
+        def __init__(self, protocol):
+            self.protocol = protocol
+            self.error = QueryDied(f"{protocol} listener died") if protocol == "udp" else None
+            self.stopped = threading.Event()
+
+        def stop(self):
+            self.stopped.set()
+
+        def awaitTermination(self):
+            if self.error:
+                raise self.error
+            assert self.stopped.wait(5), "blocked on a healthy query"
+
+    class FakeStreams:
+        def awaitAnyTermination(self):
+            raise next(q.error for q in queries if q.error)
+
+    class FakeSpark:
+        streams = FakeStreams()
+
+    def fake_ingest(spark, *, protocol, **_):
+        queries.append(FakeQuery(protocol))
+        return queries[-1]
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: FakeSpark())
+    monkeypatch.setattr(pipeline, "run_syslog_ingest", fake_ingest)
+    monkeypatch.setattr(signal, "signal", lambda *a: None)
+    with pytest.raises(QueryDied, match="udp listener died"):
+        main(["--broker.list", "b:9092", "--topic", "t"])
+    assert [q.protocol for q in queries] == ["tcp", "udp"]
+    assert all(q.stopped.is_set() for q in queries)
+
+
 def test_cli_producer_config_file_merges_with_flag_precedence(tmp_path):
     # reference ProducerConfigFromFile key names (kafka_producer.go:158-205)
     cfg = tmp_path / "producer.properties"
@@ -251,7 +301,7 @@ def test_structured_data_map_decode(spark):
     assert sd[5] == {}  # element with no params → empty map
 
 
-def test_python_warmup_failure_is_logged_not_raised(caplog, monkeypatch):
+def test_python_warmup_failure_is_logged_not_raised(caplog):
     """A failed worker warm-up must not fail the session build, and must
     not be silent either: it logs one warning naming the error."""
     from syslog_kafka_spark.session import _warm_python_workers
@@ -261,7 +311,6 @@ def test_python_warmup_failure_is_logged_not_raised(caplog, monkeypatch):
         def sparkContext(self):
             raise RuntimeError("no executors")
 
-    monkeypatch.delenv("SPARK_GRAFT_WARM_PYTHON", raising=False)
     with caplog.at_level("WARNING", logger="syslog_kafka_spark.session"):
         _warm_python_workers(BrokenSession())
     assert [r.getMessage() for r in caplog.records] == [

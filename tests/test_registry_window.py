@@ -78,3 +78,26 @@ def test_decorator_forwards_every_registration_field():
     # family/oracle/doc/gated_twin forwarding is covered by the other
     # tests in this file; bench was the one field with no consumer-side
     # assertion until the r9 sweep caught it.
+
+
+def test_docs_state_the_registry_counts():
+    """README.md and ARCHITECTURE.md quote the inventory size and the
+    number of oracle-gated queries; both must match the registry."""
+    import os
+    import re
+
+    inventory = load_all()
+    counts = (len(inventory), sum(spec.oracle is not None for spec in inventory.values()))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def read(name):
+        with open(os.path.join(root, name)) as f:
+            return " ".join(f.read().split())
+
+    readme, architecture = read("README.md"), read("ARCHITECTURE.md")
+    (size,) = re.findall(r"(\d+)-query inventory", readme)
+    ((gated, of),) = re.findall(r"(\d+) of the (\d+) carry a DuckDB oracle", readme)
+    ((registered, hashed),) = re.findall(r"(\d+) queries registered; (\d+) hash-gated", architecture)
+    assert (int(size), int(gated)) == counts
+    assert int(of) == counts[0]
+    assert (int(registered), int(hashed)) == counts

@@ -682,3 +682,70 @@ def test_stream_gates_leave_no_views_dirs_or_confs(spark, sf_dir):
     assert temp_views() == views
     assert warehouse_entries() - entries == set()
     assert [spark.conf.get(k) for k in _DRAIN_CONFS] == confs
+
+
+def test_batch_builders_leave_no_views_or_functions(spark, sf_dir):
+    """Building every non-streaming query whose builder calls spark.sql
+    registers no temp view and no temp function. The builds run on a
+    child session, which has its own temp views and functions but shares
+    the context, so a view that an earlier test left on the shared
+    session cannot hide a leak."""
+    import inspect
+
+    from syslog_kafka_spark.plans.registry import load_all
+
+    session = spark.newSession()
+
+    def temp_views():
+        return {t.name for t in session.catalog.listTables() if t.isTemporary}
+
+    def temp_functions():
+        return {row[0] for row in session.sql("SHOW USER FUNCTIONS").collect()}
+
+    inventory = load_all()
+    names = [
+        name
+        for name, spec in inventory.items()
+        if spec.family != "streaming" and "spark.sql(" in inspect.getsource(spec.build)
+    ]
+    # A floor, so a refactor that hides the calls cannot empty the sweep.
+    assert len(names) >= 30, names
+    views, functions = temp_views(), temp_functions()
+    for name in names:
+        inventory[name].build(session, sf_dir)
+    assert temp_views() == views
+    assert temp_functions() == functions
+
+
+def test_tcp_stop_frees_the_port_and_ends_open_connections():
+    """stop() ends a client connection that is still open, so lines sent
+    after it never reach the dropped buffer, and frees the port for a new
+    listener at once."""
+    from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
+    from syslog_kafka_spark.sources.syslog_source import SyslogStreamReader, _get_listener
+
+    reader, port = _live_reader("tcp")
+    _, buffer = _get_listener("tcp", "127.0.0.1", port)
+    with socket.create_connection(("127.0.0.1", port), timeout=5) as client:
+        client.sendall(b"before stop\n")
+        _wait_buffered(reader, 1)
+        reader.stop()
+        try:
+            assert client.recv(1) == b""  # the listener closed the connection
+        except ConnectionResetError:
+            pass
+        for line in (b"after stop 1\n", b"after stop 2\n"):
+            try:
+                client.sendall(line)
+            except OSError:
+                break
+        time.sleep(0.2)
+    assert buffer.snapshot_len() == 1
+
+    again = SyslogStreamReader(
+        SYSLOG_MESSAGE_SCHEMA, {"host": "127.0.0.1", "port": str(port), "protocol": "tcp"}
+    )
+    try:
+        again.latestOffset()  # binds the same port
+    finally:
+        again.stop()
