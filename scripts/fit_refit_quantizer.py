@@ -5,9 +5,10 @@ The √N-nlist rule, promoted from experiment to gated artifact: the
 frozen 16-list quantizer (operators/ann_frozen.py) cannot grow with the
 corpus, so at 10× data the blocked near-dup tier's block populations —
 and its per-block all-pairs work — grow again (measured 3.72× pipeline,
-scripts/neardup_nlist_experiment.py). FAISS's deployment rule re-fits
-nlist ≈ √N: a 10× corpus gets √10 ≈ 3.2× more lists, rounded up to the
-next power of two = 64, holding per-block occupancy ~constant (measured
+scripts/neardup_nlist_experiment.py, deleted; see git history).
+FAISS's deployment rule re-fits nlist ≈ √N: a 10× corpus gets √10 ≈
+3.2× more lists, rounded up to the next power of two = 64, holding
+per-block occupancy ~constant (measured
 max occupancy 1881 → 808 at sf10, warm pipeline 2.12× over the sf1
 frozen-16 baseline).
 
@@ -62,11 +63,11 @@ def main() -> None:
         f"{REFIT_NLIST} lists,",
         f"fit on the first {REFIT_SAMPLE} vectors of {os.path.relpath(sf_dir, REPO)}",
         "embeddings — the √N re-fit for the 10× corpus, exactly the fit",
-        "scripts/neardup_nlist_experiment.py measured: max block occupancy",
-        "1881 → 808, warm sf10 pipeline 2.12× over the sf1 frozen-16",
-        "baseline). Frozen so llm_embedding_neardup_refit64 is a pure",
-        "function both engines hash-compare. Regenerate with the script;",
-        'never hand-edit."""',
+        "scripts/neardup_nlist_experiment.py (deleted; see git history)",
+        "measured: max block occupancy 1881 → 808, warm sf10 pipeline 2.12×",
+        "over the sf1 frozen-16 baseline). Frozen so",
+        "llm_embedding_neardup_refit64 is a pure function both engines",
+        'hash-compare. Regenerate with the script; never hand-edit."""',
         "",
         f"REFIT_NLIST = {REFIT_NLIST}",
         f"REFIT_SEED = {REFIT_SEED}",

@@ -6,10 +6,11 @@ fastest shape (pure JVM, zero Python), but the expression tree grows
 with the merge count and both engines' expression machinery falls over
 far below production merge counts. Measured at sf0.01 with the vocab
 cached so the timed region is the ENCODE alone
-(scripts/bpe_crossover_probe.py): the expression path takes ~1 s at
-8 merges and HARD-FAILS past ~48 (Catalyst analyzer: "Max iterations
-(100) reached for batch Resolution"); DuckDB's binder likewise refuses
->~48 nested folds (recursion-depth/parser-memory limits). The table
+(scripts/bpe_crossover_probe.py, deleted; see git history): the
+expression path takes ~1 s at 8 merges and HARD-FAILS past ~48
+(Catalyst analyzer: "Max iterations (100) reached for batch
+Resolution"); DuckDB's binder likewise refuses >~48 nested folds
+(recursion-depth/parser-memory limits). The table
 path below is flat ≤0.75 s cold at every k through the full 89-merge
 table — hash-equal to the expression path wherever both run. A
 production tokenizer (32k–100k merges) ships its merge table as DATA:
@@ -20,14 +21,15 @@ is a per-word loop over Arrow-batched rows. That is this kernel.
 
 At production rank counts the per-word cost is the rank SCAN, not the
 fuses: priced with a 6,770-rank table of genuinely-matching merges
-(operators/bpe_wide_frozen.py, fit to convergence on the 128-way
-letter-permutation widened vocab — scripts/fit_bpe_wide.py), the
-rank-scan encode of the 3,866-word vocab costs 1.55 s single-threaded
-and grows linearly in ranks, while :func:`apply_merges_indexed` (the
-pair→rank walk production tokenizers use) costs 0.035 s and is
-rank-count-independent — 44× at 6.7k ranks, ~200× extrapolated at 32k
-(probe --wide, r12). The kernels therefore default to the indexed
-walk; the scan stays as the reference twin and the probe's baseline.
+(fit to convergence on the 128-way letter-permutation widened vocab by
+:func:`local_bpe_fit`; the widening, the frozen wide table and the
+probe were deleted, see git history), the rank-scan encode of the
+3,866-word vocab costs 1.55 s single-threaded and grows linearly in
+ranks, while :func:`apply_merges_indexed` (the pair→rank walk
+production tokenizers use) costs 0.035 s and is rank-count-independent
+— 44× at 6.7k ranks, ~200× extrapolated at 32k (r12). The kernel
+therefore always runs the indexed walk; the scan stays as the
+reference twin the tests compare it with.
 
 Semantics are pinned to the trainer: :func:`apply_merges` is the
 pure-Python twin of ``plans.mining.bpe_apply_fold`` (one merge = one
@@ -47,7 +49,7 @@ from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType, StringType
+from pyspark.sql.types import ArrayType, IntegerType
 
 
 def fuse_pass(out: Sequence[str], a: str, b: str) -> list[str]:
@@ -58,7 +60,7 @@ def fuse_pass(out: Sequence[str], a: str, b: str) -> list[str]:
     ``a`` (so a run like ``aaa`` under ``(a, a)`` yields ``[aa, a]``).
     The single definition of the pinned trainer invariant, shared by the
     scan encoder, the indexed encoder, and the local trainer twin
-    (operators/bpe_wide) so they cannot de-twin."""
+    (:func:`local_bpe_fit`) so they cannot de-twin."""
     nxt: list[str] = []
     for x in out:
         if nxt and nxt[-1] == a and x == b:
@@ -146,64 +148,43 @@ def apply_merges_indexed(
 def _memoized(fn, cap: int = 65536):
     """Per-kernel-instance encode cache — the standard production
     tokenizer memo: a token stream repeats its vocabulary zipfianly, so
-    keying the pure per-word encode by the symbol tuple collapses
-    per-OCCURRENCE cost to per-DISTINCT-WORD cost within each executor.
-    Bounded at ``cap`` entries (cleared, not evicted, at the bound — the
-    re-fill cost is one encode per distinct word, and FIFO bookkeeping
-    would cost more than it saves at these sizes)."""
+    keying the pure per-word encode by the word collapses per-OCCURRENCE
+    cost to per-DISTINCT-WORD cost within each executor. Bounded at
+    ``cap`` entries (cleared, not evicted, at the bound — the re-fill
+    cost is one encode per distinct word, and FIFO bookkeeping would
+    cost more than it saves at these sizes)."""
     cache: dict = {}
 
-    def wrapped(syms):
-        key = syms if isinstance(syms, str) else tuple(syms)
-        hit = cache.get(key)
+    def wrapped(word: str):
+        hit = cache.get(word)
         if hit is None:
             if len(cache) >= cap:
                 cache.clear()
-            hit = cache[key] = fn(syms)
+            hit = cache[word] = fn(word)
         return hit
 
     return wrapped
 
 
-def bpe_encode_tokens(merges: Sequence[tuple[str, str]], indexed: bool = True):
-    """Column kernel: ``array<string>`` symbols → encoded ``array<string>``.
-
-    Arrow-batched (``pandas_udf``): the per-row Python loop runs over
-    vocab-sized input (distinct words), never the corpus — the corpus
-    statistics are recovered by frequency weighting, so the Python cost
-    is bounded by |vocab|, not |tokens|. ``indexed=True`` (default)
-    encodes via the pair→rank walk — table-size-independent, the shape a
-    32k-merge production table needs; ``indexed=False`` keeps the
-    rank-scan for the crossover probe's cost comparison.
-    """
-    table = [(str(a), str(b)) for a, b in merges]
-    if indexed:
-        index = build_merge_index(table)
-        enc = _memoized(lambda s: apply_merges_indexed(list(s), table, index))
-    else:
-        enc = _memoized(lambda s: apply_merges(list(s), table))
-
-    @pandas_udf(ArrayType(StringType()))
-    def encode(syms: pd.Series) -> pd.Series:
-        return syms.map(enc)
-
-    return encode
-
-
 def bpe_checkpoint_token_counts(
-    merges: Sequence[tuple[str, str]],
-    checkpoints: Sequence[int],
-    indexed: bool = True,
+    merges: Sequence[tuple[str, str]], checkpoints: Sequence[int]
 ):
-    """Column kernel: symbols → ``array<int>`` of token counts, one per
-    checkpoint rank (count after applying the first ``c`` merges).
+    """Column kernel: word ``string`` → ``array<int>`` of token counts,
+    one per checkpoint rank (count after applying the first ``c`` merges
+    to the word's code points).
 
-    One sequential pass over the full table, sampling ``len(out)`` at
-    each checkpoint — the compression-curve surface: every intermediate
-    merge state is pinned, so a single mis-ordered rank moves some
-    checkpoint's counts. ``checkpoints`` must be ascending and end at
-    most at ``len(merges)``.
-    """
+    One sequential indexed walk over the full table, sampling
+    ``len(out)`` at each checkpoint — the compression-curve surface:
+    every intermediate merge state is pinned, so a single mis-ordered
+    rank moves some checkpoint's counts. ``checkpoints`` must be
+    ascending and end at most at ``len(merges)``.
+
+    Arrow-batched (``pandas_udf``) over a WORD STRING column: the batch
+    ships one short string per row instead of a char ARRAY (the array
+    transfer dominated the first cut of the fertility stream — 300k
+    small arrays cost ~3× the strings), and the memo keys on the string
+    itself, so the Python cost is bounded by the distinct words an
+    executor sees, not by the tokens."""
     table = [(str(a), str(b)) for a, b in merges]
     cks = list(checkpoints)
     # strictly ascending: a duplicate rank would emit duplicate Spark rows
@@ -214,61 +195,14 @@ def bpe_checkpoint_token_counts(
     ):
         raise ValueError(f"bad checkpoints {cks} for {len(table)} merges")
 
-    index = build_merge_index(table) if indexed else None
-
-    def counts(syms) -> list[int]:
-        out = list(syms)
-        res = []
-        rank = 0
-        for c in cks:
-            if index is None:
-                out = apply_merges(out, table[rank:c])
-            else:
-                out = apply_merges_indexed(out, table, index, lo=rank, hi=c)
-            rank = c
-            res.append(len(out))
-        return res
-
-    counts = _memoized(counts)
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def encode(syms: pd.Series) -> pd.Series:
-        return syms.map(counts)
-
-    return encode
-
-
-def bpe_checkpoint_counts_from_words(
-    merges: Sequence[tuple[str, str]],
-    checkpoints: Sequence[int],
-    indexed: bool = True,
-):
-    """:func:`bpe_checkpoint_token_counts` over a WORD STRING column —
-    the per-occurrence (streaming) shape. Taking the string and
-    splitting inside the kernel matters twice at occurrence scale: the
-    Arrow batch ships one short string per row instead of a char ARRAY
-    (the array transfer dominated the first cut of the fertility stream
-    — 300k small arrays cost ~3× the strings), and the memo keys on the
-    string itself (hashable, no tuple() per row), so a zipfian token
-    stream collapses to per-distinct-word encode cost."""
-    table = [(str(a), str(b)) for a, b in merges]
-    cks = list(checkpoints)
-    if any(b <= a for a, b in zip(cks, cks[1:])) or (
-        cks and cks[-1] > len(table)
-    ):
-        raise ValueError(f"bad checkpoints {cks} for {len(table)} merges")
-
-    index = build_merge_index(table) if indexed else None
+    index = build_merge_index(table)
 
     def counts(word: str) -> list[int]:
         out = list(word)
         res = []
         rank = 0
         for c in cks:
-            if index is None:
-                out = apply_merges(out, table[rank:c])
-            else:
-                out = apply_merges_indexed(out, table, index, lo=rank, hi=c)
+            out = apply_merges_indexed(out, table, index, lo=rank, hi=c)
             rank = c
             res.append(len(out))
         return res
@@ -280,3 +214,35 @@ def bpe_checkpoint_counts_from_words(
         return words.map(counts)
 
     return encode
+
+
+def local_bpe_fit(vocab: Sequence[tuple[str, int]]) -> list[tuple[str, str]]:
+    """Pure-Python twin of the gated Spark trainer loop
+    (plans/mining.llm_bpe_merge_apply: count adjacent pairs
+    freq-weighted per occurrence, pick freq DESC / pair_key ASC, apply
+    one greedy left-to-right non-overlapping pass), run to convergence.
+    The pair key is the chr(31)-delimited pair, compared by
+    plain code point — both engines compare these all-ASCII keys
+    bytewise. tests/test_bpe_kernel.py pins it rank for rank to
+    operators/bpe_frozen_full.BPE_MERGES_FULL."""
+    syms: dict[str, list[str]] = {w: list(w) for w, _ in vocab}
+    freqs: dict[str, int] = {w: int(f) for w, f in vocab}
+    merges: list[tuple[str, str]] = []
+    while True:
+        counts: dict[tuple[str, str], int] = {}
+        for w, f in freqs.items():
+            s = syms[w]
+            for i in range(len(s) - 1):
+                p = (s[i], s[i + 1])
+                counts[p] = counts.get(p, 0) + f
+        if not counts:
+            break
+        best = min(
+            counts.items(), key=lambda kv: (-kv[1], kv[0][0] + chr(31) + kv[0][1])
+        )[0]
+        merges.append(best)
+        a, b = best
+        for w, s in syms.items():
+            if a in s:
+                syms[w] = fuse_pass(s, a, b)
+    return merges

@@ -37,17 +37,21 @@ would spill to a temp table; bounding the number of live ones keeps
 storage-memory pressure constant regardless of how many distinct
 queries a session runs.
 
-Budget is entries, not bytes: every frame routed here is O(corpus)
-per-document arrays at the SAME scale factor within a session, so
-entry-count is a faithful proxy and avoids a size-estimation pass.
-Tunable via ``SPARK_GRAFT_CACHE_ENTRIES`` (default 12 — comfortably
-above the ~6 distinct bases one bench sweep touches per scale factor,
-small enough that two scale factors' worth cannot pile up).
+Budget is entries, not bytes: the heavy frames routed here are
+O(corpus) per-document arrays at the SAME scale factor within a
+session, so entry-count is a faithful proxy and avoids a
+size-estimation pass. A builder's small twice-read partial (a per-key
+aggregate behind a cache barrier) comes through here too, often lazily
+(``eager=False``), and takes one entry: eviction and
+:func:`clear_session_caches` can release only what this registry
+holds, never a raw ``.cache()``. :data:`CACHE_ENTRIES` is 12 —
+comfortably above the ~6 distinct bases one bench sweep touches per
+scale factor, small enough that two scale factors' worth cannot pile
+up.
 """
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 from weakref import WeakKeyDictionary
 
@@ -57,9 +61,8 @@ _LRU: WeakKeyDictionary = WeakKeyDictionary()  # SparkSession -> OrderedDict
 # SparkSession -> list[(checkpointed frame, frozenset of persisted RDD ids)]
 _CKPTS: WeakKeyDictionary = WeakKeyDictionary()
 
-
-def _budget() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CACHE_ENTRIES", "12"))
+# LRU budget: distinct cached plans per session
+CACHE_ENTRIES = 12
 
 
 def session_cache(df: DataFrame, *, eager: bool = True) -> DataFrame:
@@ -137,7 +140,7 @@ def session_cache(df: DataFrame, *, eager: bool = True) -> DataFrame:
     # Evict BEFORE the eager fill so the persisted peak stays at the
     # budget — filling first would transiently hold budget+1 corpus-sized
     # frames, exactly the spike the policy exists to prevent.
-    while len(lru) > _budget():
+    while len(lru) > CACHE_ENTRIES:
         _, evicted_slot = lru.popitem(last=False)
         for evicted in evicted_slot:
             try:

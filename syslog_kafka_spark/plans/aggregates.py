@@ -11,6 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from syslog_kafka_spark.operators.session_cache import session_cache
 from syslog_kafka_spark.plans.registry import query
 from syslog_kafka_spark.sources.readers import load_tables
 
@@ -392,15 +393,17 @@ def agg_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact table — plan-asserted in tests/test_plan_quality.py). At
     # warehouse scale these are the materialized continuous-aggregate
     # tables the next level reads.
-    minute = (
-        e.groupBy(F.date_trunc("minute", "ts").alias("bucket"))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("sv"))
-        .cache()
+    minute = session_cache(
+        e.groupBy(F.date_trunc("minute", "ts").alias("bucket")).agg(
+            F.count("*").alias("n"), F.sum("value").alias("sv")
+        ),
+        eager=False,
     )
-    hour = (
-        minute.groupBy(F.date_trunc("hour", "bucket").alias("bucket"))
-        .agg(F.sum("n").alias("n"), F.sum("sv").alias("sv"))
-        .cache()
+    hour = session_cache(
+        minute.groupBy(F.date_trunc("hour", "bucket").alias("bucket")).agg(
+            F.sum("n").alias("n"), F.sum("sv").alias("sv")
+        ),
+        eager=False,
     )
     day = (
         hour.groupBy(F.date_trunc("day", "bucket").alias("bucket"))

@@ -431,10 +431,11 @@ def llm_pq_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_tables(spark, sf_dir).embeddings
     enc = pq_encode_arrow(spread(emb.select("vec_id", "embedding")))
-    cnts = enc.groupBy("subspace", "code").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("err").alias("sum_err")
-    ).cache()
-    cnts.count()  # eager fill: two consumers below would race a cold cache
+    cnts = session_cache(  # eager fill: two consumers below would race a cold cache
+        enc.groupBy("subspace", "code").agg(
+            F.count(F.lit(1)).alias("cnt"), F.sum("err").alias("sum_err")
+        )
+    )
     per = cnts.groupBy("subspace").agg(
         F.sum("cnt").cast("bigint").alias("n_vecs"),
         F.count(F.lit(1)).cast("bigint").alias("n_codes_used"),
@@ -568,8 +569,9 @@ def llm_embedding_covariance_audit(spark: SparkSession, sf_dir: str) -> DataFram
     partials = spread(emb.select("embedding")).mapInArrow(
         kernel, "i int, j int, val double"
     )
-    tot = partials.groupBy("i", "j").agg(F.sum("val").alias("val")).cache()
-    tot.count()  # eager fill: four consumers below would race a cold cache
+    tot = session_cache(  # eager fill: four consumers below would race a cold cache
+        partials.groupBy("i", "j").agg(F.sum("val").alias("val"))
+    )
     nrow = tot.filter((F.col("i") == -1) & (F.col("j") == -1)).select(
         F.col("val").alias("n")
     )

@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from syslog_kafka_spark.operators.session_cache import session_cache
 from syslog_kafka_spark.plans.registry import query
 from syslog_kafka_spark.sources.readers import load_tables
 
@@ -324,7 +325,9 @@ def agg_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir).events
     # referenced by both the stats row and the top-k ranking — the
     # barrier keeps the fact-table scan + aggregate single-pass
-    per_key = e.groupBy("user_id").agg(F.count("*").alias("n")).cache()
+    per_key = session_cache(
+        e.groupBy("user_id").agg(F.count("*").alias("n")), eager=False
+    )
     stats = per_key.agg(
         F.max("n").alias("max_n"),
         F.sum("n").alias("total"),

@@ -14,6 +14,8 @@ Scale notes baked into each plan:
 
 from __future__ import annotations
 
+import uuid
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -544,25 +546,28 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     storage layout is the difference between a join that shuffles two
     fact tables and one that streams matching buckets.
 
-    The managed tables live under the session's spark-warehouse; the
-    aggregate is materialized before they are dropped."""
+    The managed tables live under the session's spark-warehouse, named
+    per build (a uuid suffix) so a build never overwrites a user's table
+    or another concurrent build's; the aggregate is materialized before
+    they are dropped."""
     from syslog_kafka_spark.operators.bucketing import bucketed_join, write_bucketed
 
     t = load_tables(spark, sf_dir)
-    lt, rt = "_gate_bkt_orders", "_gate_bkt_lineitem"
-    write_bucketed(
-        t.orders.select(F.col("o_orderkey").alias("orderkey"), "o_orderstatus"),
-        lt,
-        bucket_by="orderkey",
-    )
-    write_bucketed(
-        t.lineitem.select(
-            F.col("l_orderkey").alias("orderkey"), "l_extendedprice", "l_discount"
-        ),
-        rt,
-        bucket_by="orderkey",
-    )
+    tag = uuid.uuid4().hex[:12]
+    lt, rt = f"_gate_bkt_orders_{tag}", f"_gate_bkt_lineitem_{tag}"
     try:
+        write_bucketed(
+            t.orders.select(F.col("o_orderkey").alias("orderkey"), "o_orderstatus"),
+            lt,
+            bucket_by="orderkey",
+        )
+        write_bucketed(
+            t.lineitem.select(
+                F.col("l_orderkey").alias("orderkey"), "l_extendedprice", "l_discount"
+            ),
+            rt,
+            bucket_by="orderkey",
+        )
         out = (
             bucketed_join(spark, lt, rt, "orderkey")
             .groupBy("o_orderstatus")

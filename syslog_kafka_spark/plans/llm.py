@@ -746,7 +746,8 @@ def llm_embedding_neardup_refit64(spark: SparkSession, sf_dir: str) -> DataFrame
     llm_embedding_neardup_blocked, but against the FROZEN 64-list re-fit
     quantizer (operators/ivf_refit_frozen.py, fit by
     scripts/fit_refit_quantizer.py — exactly the fit
-    scripts/neardup_nlist_experiment.py measured). The frozen 16-list
+    scripts/neardup_nlist_experiment.py measured; that script was
+    deleted, see git history). The frozen 16-list
     index cannot grow with the corpus, so at 10× data its block
     populations creep back up (max occupancy 1881, pipeline 3.72×
     sf1→sf10); FAISS's deployment rule re-fits nlist ≈ √N, and the
@@ -3572,8 +3573,9 @@ def winnow_arrow_pairs(df: DataFrame, k: int, w: int) -> DataFrame:
     (tests/test_winnowing_property.py). Chosen over the interpreted
     transform/slice expression pipeline by the r6 measurement
     (scripts/winnow_arrow_experiment.py, sf1 warm: 2.0 s vs 3.7 s, and
-    no ~8 s first-lambda-per-JVM warmup); the expression variant stays
-    there as the documented loser. Still embarrassingly parallel over
+    no ~8 s first-lambda-per-JVM warmup); the expression variant lived
+    there as the documented loser (deleted; see git history). Still
+    embarrassingly parallel over
     splits — only selected fingerprints reach the shuffle."""
     import hashlib
 

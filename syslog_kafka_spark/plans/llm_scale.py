@@ -582,29 +582,30 @@ def llm_mixture_subsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy()
     tok_d = F.col("n_tokens").cast("double")
-    wgt = per.select(
-        "source",
-        "n_docs",
-        "n_tokens",
-        (F.sqrt(tok_d) / F.sum(F.sqrt(tok_d)).over(w)).alias("w_target"),
-        F.sum("n_tokens").over(w).alias("total_tokens"),
-    ).withColumn(
-        # sqrt is IEEE-exact (pow(x, 0.5) is not), and the keep
-        # probability is PINNED at 6 dp before the threshold so a
-        # last-ulp slip in the window sum cannot flip a keep decision
-        "keep_prob",
-        F.round(
-            F.least(
-                F.lit(1.0),
-                F.col("w_target")
-                * F.lit(_SUB_BETA)
-                * F.col("total_tokens")
-                / F.greatest(F.col("n_tokens"), F.lit(1)),
+    wgt = session_cache(  # eager fill: 2 consumers would each re-run the corpus agg
+        per.select(
+            "source",
+            "n_docs",
+            "n_tokens",
+            (F.sqrt(tok_d) / F.sum(F.sqrt(tok_d)).over(w)).alias("w_target"),
+            F.sum("n_tokens").over(w).alias("total_tokens"),
+        ).withColumn(
+            # sqrt is IEEE-exact (pow(x, 0.5) is not), and the keep
+            # probability is PINNED at 6 dp before the threshold so a
+            # last-ulp slip in the window sum cannot flip a keep decision
+            "keep_prob",
+            F.round(
+                F.least(
+                    F.lit(1.0),
+                    F.col("w_target")
+                    * F.lit(_SUB_BETA)
+                    * F.col("total_tokens")
+                    / F.greatest(F.col("n_tokens"), F.lit(1)),
+                ),
+                6,
             ),
-            6,
-        ),
-    ).cache()
-    wgt.count()  # eager fill: 2 consumers would each re-run the corpus agg
+        )
+    )
     kept = (
         doc.join(F.broadcast(wgt), "source")
         .filter(F.col("bucket") < F.col("keep_prob") * F.lit(1000000))
@@ -1311,19 +1312,20 @@ def llm_epoch_upsample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy()
     tok_d = F.col("n_tokens").cast("double")
-    wgt = per.select(
-        "source",
-        "n_docs",
-        "n_tokens",
-        F.round(
-            F.sqrt(tok_d)
-            / F.sum(F.sqrt(tok_d)).over(w)
-            * F.sum("n_tokens").over(w)
-            / tok_d,
-            6,
-        ).alias("epochs"),
-    ).cache()
-    wgt.count()  # eager fill: 2 consumers would each re-run the corpus agg
+    wgt = session_cache(  # eager fill: 2 consumers would each re-run the corpus agg
+        per.select(
+            "source",
+            "n_docs",
+            "n_tokens",
+            F.round(
+                F.sqrt(tok_d)
+                / F.sum(F.sqrt(tok_d)).over(w)
+                * F.sum("n_tokens").over(w)
+                / tok_d,
+                6,
+            ).alias("epochs"),
+        )
+    )
     copies = (
         F.floor("epochs").cast("bigint")
         + F.when(
@@ -1527,7 +1529,9 @@ def llm_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", "gram_hash")
         .distinct()
     )  # eager fill: 3 consumers below would race a cold cache
-    c = g.groupBy("source").agg(F.count(F.lit(1)).alias("n_grams")).cache()
+    c = session_cache(
+        g.groupBy("source").agg(F.count(F.lit(1)).alias("n_grams")), eager=False
+    )
     a, b = g.alias("a"), g.alias("b")
     sh = (
         a.join(

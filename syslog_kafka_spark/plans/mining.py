@@ -908,24 +908,23 @@ def llm_bpe_encode_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge-count path, gated as the tokenizer's COMPRESSION CURVE.
     llm_bpe_encode_frozen inlines each merge as one fold expression, the
     fastest shape at 8 merges but one whose plan grows with the table:
-    measured (scripts/bpe_crossover_probe.py, sf0.01, vocab cached so
-    the timed region is the encode alone; r12 cold/warm split — cold
-    rebuilds the kernel closure so the memo never flatters a repeat)
-    the expression path climbs through ~5 s cold by 32 merges and
+    measured (scripts/bpe_crossover_probe.py, deleted; see git history;
+    sf0.01, vocab cached so the timed region is the encode alone; r12
+    cold/warm split — cold rebuilds the kernel closure so the memo never
+    flatters a repeat) the expression path climbs through ~5 s cold by 32 merges and
     HARD-FAILS past ~48 — Catalyst analyzer max-iterations; DuckDB's
     binder refuses the same depths — while the table path stays flat
     ≤1.6 s cold / ≤0.17 s warm through all 89 ranks and through
     256/1024/4096 padded ranks. At production rank counts the kernel's
     pair→rank indexed walk is what keeps it flat: 44× over the rank
     scan at the 6,770-rank matching-merge table, single-threaded
-    (probe --wide; operators/bpe_kernel.py). A real tokenizer's
-    32k–100k merges
+    (operators/bpe_kernel.py). A real tokenizer's 32k–100k merges
     therefore ship as DATA: here the FULL to-convergence table
     (operators/bpe_frozen_full.py — 89 merges, this corpus's entire
     pair space, fit by scripts/fit_bpe_merges.py --k 0 with the exact
     gated trainer loop) rides the Arrow kernel's closure to every
     executor (one copy per executor, a broadcast's distribution shape)
-    and encoding is a vocab-sized Arrow-batched pass
+    and encoding is a vocab-sized Arrow-batched pass over the words
     (operators/bpe_kernel.py).
 
     Output: the tokens-per-word histogram AT EACH checkpoint rank
@@ -955,7 +954,7 @@ def llm_bpe_encode_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = F.array(*[F.lit(c) for c in _BPE_CURVE_CHECKPOINTS])
     enc = (
         bpe_vocab(d)
-        .select("word", "freq", F.posexplode(curve(F.col("syms"))))
+        .select("word", "freq", F.posexplode(curve(F.col("word"))))
         .select(
             F.get(ranks, F.col("pos")).cast("int").alias("merges_applied"),
             "word",

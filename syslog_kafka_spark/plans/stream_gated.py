@@ -399,10 +399,11 @@ def stream_custom_state_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary-state streaming operator (applyInPandasWithState): a
     per-user running profile (event count, max gauge, first/last event
     time) maintained across microbatches with explicit state — the custom
-    path Structured Streaming's built-in aggregates can't express
-    (streaming/stateful.py holds the syslog twin). Update mode emits one
-    row per key per microbatch; every tracked stat is monotone (count and
-    last_ts only grow, first_ts only shrinks, max only grows), so
+    path Structured Streaming's built-in aggregates can't express (its
+    syslog twin, streaming/stateful.py, was deleted; see git history).
+    Update mode emits one row per key per microbatch; every tracked stat
+    is monotone (count and last_ts only grow, first_ts only shrinks, max
+    only grows), so
     aggregating the drained updates with max/min equals the final state
     regardless of how the file source splits microbatches — which is what
     makes this custom operator hash-gateable at all."""
@@ -1868,18 +1869,14 @@ def bpe_fertility_frame(raw: DataFrame) -> DataFrame:
     plan."""
     from syslog_kafka_spark.functions.text import tokens
     from syslog_kafka_spark.operators.bpe_frozen_full import BPE_MERGES_FULL
-    from syslog_kafka_spark.operators.bpe_kernel import (
-        bpe_checkpoint_counts_from_words,
-    )
+    from syslog_kafka_spark.operators.bpe_kernel import bpe_checkpoint_token_counts
     from syslog_kafka_spark.plans.mining import (
         _BPE_CURVE_CHECKPOINTS,
         _ENC_MAX_BUCKET,
         _US,
     )
 
-    curve = bpe_checkpoint_counts_from_words(
-        BPE_MERGES_FULL, _BPE_CURVE_CHECKPOINTS
-    )
+    curve = bpe_checkpoint_token_counts(BPE_MERGES_FULL, _BPE_CURVE_CHECKPOINTS)
     ranks = F.array(*[F.lit(c) for c in _BPE_CURVE_CHECKPOINTS])
     words = raw.select(F.explode(tokens("text")).alias("word")).filter(
         ~F.col("word").contains(_US)

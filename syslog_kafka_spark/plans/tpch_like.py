@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from syslog_kafka_spark.operators.session_cache import session_cache
 from syslog_kafka_spark.plans.registry import query
 from syslog_kafka_spark.sources.readers import load_tables
 
@@ -316,7 +317,7 @@ def tpch_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     t = load_tables(spark, sf_dir)
-    revenue = (
+    revenue = session_cache(
         t.lineitem.filter(
             (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
         )
@@ -325,8 +326,8 @@ def tpch_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100, 0)
             .cast("bigint")
             .alias("cents")
-        )
-        .cache()
+        ),
+        eager=False,
     )
     return (
         t.supplier.join(revenue, F.col("s_suppkey") == F.col("supplier_no"))

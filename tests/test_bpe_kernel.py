@@ -15,7 +15,6 @@ from syslog_kafka_spark.operators.bpe_frozen import BPE_MERGES
 from syslog_kafka_spark.operators.bpe_kernel import (
     apply_merges,
     bpe_checkpoint_token_counts,
-    bpe_encode_tokens,
 )
 from syslog_kafka_spark.plans.mining import bpe_apply_fold
 from syslog_kafka_spark.plans.registry import load_all
@@ -62,26 +61,6 @@ def test_python_kernel_matches_spark_fold_symbol_by_symbol(spark, merges):
             r.word,
             merges,
         )
-
-
-def test_arrow_kernel_histogram_equals_frozen_expression_query(spark, sf_dir):
-    """bpe_encode_tokens on the 8-merge frozen table == the gated
-    llm_bpe_encode_frozen output, row for row — the data path and the
-    expression path cannot de-twin."""
-    from syslog_kafka_spark.plans.mining import _bpe_histogram, bpe_vocab
-    from syslog_kafka_spark.plans.tpch_like import load_tables
-
-    d = load_tables(spark, sf_dir).documents
-    encode = bpe_encode_tokens(BPE_MERGES)
-    enc = bpe_vocab(d).select(
-        "word", "freq", F.size(encode(F.col("syms"))).alias("n_tokens")
-    )
-    via_kernel = [tuple(r) for r in _bpe_histogram(enc).collect()]
-    via_expr = [
-        tuple(r)
-        for r in load_all()["llm_bpe_encode_frozen"].build(spark, sf_dir).collect()
-    ]
-    assert via_kernel == via_expr
 
 
 def test_curve_rank8_slice_equals_frozen_histogram(spark, sf_dir):
@@ -171,40 +150,28 @@ def test_indexed_walk_equals_rank_scan_property():
 
 
 def test_kernels_indexed_and_scan_paths_hash_equal(spark):
-    """The shipped kernels' two paths (indexed default vs scan escape)
-    must produce identical columns over the adversarial words on the
-    full 89-merge table — the gate that lets the indexed default stand
-    in for the scan everywhere the registry hash-gates."""
+    """The shipped checkpoint kernel (the indexed walk over a word
+    column) must equal the rank-ordered scan reference at every
+    checkpoint, over the adversarial words on the full 89-merge table —
+    the gate that lets the indexed walk stand in for the scan everywhere
+    the registry hash-gates."""
     from syslog_kafka_spark.operators.bpe_frozen_full import BPE_MERGES_FULL
-    from syslog_kafka_spark.operators.bpe_kernel import (
-        bpe_checkpoint_counts_from_words,
-    )
 
-    df = spark.createDataFrame([(w,) for w in _ADVERSARIAL], "word string").select(
-        "word",
-        F.expr(
-            "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-        ).alias("syms"),
-    )
     cks = [8, 32, len(BPE_MERGES_FULL)]
-    rows = df.select(
-        "word",
-        bpe_encode_tokens(BPE_MERGES_FULL, indexed=True)(F.col("syms")).alias("ei"),
-        bpe_encode_tokens(BPE_MERGES_FULL, indexed=False)(F.col("syms")).alias("es"),
-        bpe_checkpoint_counts_from_words(BPE_MERGES_FULL, cks, indexed=True)(
-            F.col("word")
-        ).alias("ci"),
-        bpe_checkpoint_counts_from_words(BPE_MERGES_FULL, cks, indexed=False)(
-            F.col("word")
-        ).alias("cs"),
-    ).collect()
+    curve = bpe_checkpoint_token_counts(BPE_MERGES_FULL, cks)
+    rows = (
+        spark.createDataFrame([(w,) for w in _ADVERSARIAL], "word string")
+        .select("word", curve(F.col("word")).alias("counts"))
+        .collect()
+    )
+    assert len(rows) == len(_ADVERSARIAL)
     for r in rows:
-        assert list(r.ei) == list(r.es), r.word
-        assert list(r.ci) == list(r.cs), r.word
+        scan = [len(apply_merges(list(r.word), BPE_MERGES_FULL[:c])) for c in cks]
+        assert list(r.counts) == scan, r.word
 
 
 def test_local_trainer_twin_reproduces_the_spark_fit_table(spark):
-    """operators/bpe_wide.local_bpe_fit is the pure-Python twin of the
+    """operators/bpe_kernel.local_bpe_fit is the pure-Python twin of the
     gated Spark trainer loop — run to convergence on the real corpus
     vocab it must reproduce operators/bpe_frozen_full.BPE_MERGES_FULL
     rank for rank. Pinned to sf0.01 (NOT the suite's default sf): the
@@ -213,7 +180,7 @@ def test_local_trainer_twin_reproduces_the_spark_fit_table(spark):
     import os
 
     from syslog_kafka_spark.operators.bpe_frozen_full import BPE_MERGES_FULL
-    from syslog_kafka_spark.operators.bpe_wide import local_bpe_fit
+    from syslog_kafka_spark.operators.bpe_kernel import local_bpe_fit
     from syslog_kafka_spark.plans.mining import bpe_vocab
     from syslog_kafka_spark.plans.tpch_like import load_tables
 
@@ -222,52 +189,4 @@ def test_local_trainer_twin_reproduces_the_spark_fit_table(spark):
         pytest.skip("fit-scale corpus not present")
     d = load_tables(spark, fit_dir).documents
     vocab = [(r.word, r.freq) for r in bpe_vocab(d).collect()]
-    assert local_bpe_fit(vocab, 0) == BPE_MERGES_FULL
-
-
-def test_widen_vocab_is_deterministic_and_prefix_stable():
-    from syslog_kafka_spark.operators.bpe_wide import widen_vocab
-
-    base = [("join", 10), ("scan", 7)]
-    w8 = widen_vocab(base, 8)
-    assert w8 == widen_vocab(base, 8)
-    assert len(w8) == 16  # bijective maps keep the two words distinct
-    assert ("join", 10) in w8  # permutation 0 is the identity
-    # growing the family never rewrites earlier permutations' words
-    w16 = dict(widen_vocab(base, 16))
-    assert all(w16[w] == f for w, f in w8)
-
-
-def test_indexed_walk_equals_rank_scan_on_the_wide_table(spark, sf_dir):
-    """The 6,770-rank matching-merge table (operators/bpe_wide_frozen)
-    is the one place the indexed walk's rank-window arithmetic meets
-    production-shape data — duplicate-pair rank lists, multi-char
-    symbols, thousands of genuinely-firing ranks. Scan equality on the
-    probe's own vocab, as a pytest gate (the probe's paths_agree is
-    ad-hoc; this pins it). Words derive from the corpus vocab widened
-    by the frozen WIDE_PERMS — the word SET is sf-invariant, so the
-    suite's default sf corpus is fine."""
-    from syslog_kafka_spark.operators.bpe_kernel import (
-        apply_merges_indexed,
-        build_merge_index,
-    )
-    from syslog_kafka_spark.operators.bpe_wide import widen_vocab
-    from syslog_kafka_spark.operators.bpe_wide_frozen import (
-        BPE_MERGES_WIDE,
-        WIDE_PERMS,
-    )
-    from syslog_kafka_spark.plans.mining import bpe_vocab
-    from syslog_kafka_spark.plans.tpch_like import load_tables
-
-    d = load_tables(spark, sf_dir).documents
-    base = [(r.word, r.freq) for r in bpe_vocab(d).collect()]
-    words = [w for w, _ in widen_vocab(base, WIDE_PERMS)]
-    table = [(str(a), str(b)) for a, b in BPE_MERGES_WIDE]
-    index = build_merge_index(table)
-    mismatches = [
-        w
-        for w in words
-        if apply_merges_indexed(list(w), table, index)
-        != apply_merges(list(w), table)
-    ]
-    assert not mismatches, mismatches[:5]
+    assert local_bpe_fit(vocab) == BPE_MERGES_FULL

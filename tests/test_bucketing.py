@@ -55,3 +55,19 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, bucketed_tables):
         assert rows == expected
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_bucketed_gate_leaves_same_named_user_tables_alone(spark, sf_dir):
+    """join_bucketed_colocated writes its bucketed tables under names of
+    its own: a user table called ``_gate_bkt_orders`` survives a build
+    with its rows, and the build leaves no ``_gate_bkt_*`` table behind."""
+    from syslog_kafka_spark.plans.registry import load_all
+
+    spark.range(3).write.mode("overwrite").saveAsTable("_gate_bkt_orders")
+    try:
+        assert load_all()["join_bucketed_colocated"].build(spark, sf_dir).collect()
+        assert spark.table("_gate_bkt_orders").count() == 3
+        names = {t.name for t in spark.catalog.listTables()}
+        assert {n for n in names if n.startswith("_gate_bkt")} == {"_gate_bkt_orders"}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS _gate_bkt_orders")

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from syslog_kafka_spark.operators import session_cache as session_cache_module
 from syslog_kafka_spark.operators.session_cache import (
     _CKPTS,
     _LRU,
@@ -61,7 +62,7 @@ def test_same_plan_shares_storage_and_aliases_stay_correct(spark):
 
 def test_budget_evicts_lru_from_spark_storage(spark, monkeypatch):
     clear_session_caches(spark)
-    monkeypatch.setenv("SPARK_GRAFT_CACHE_ENTRIES", "2")
+    monkeypatch.setattr(session_cache_module, "CACHE_ENTRIES", 2)
     first = session_cache(spark.range(10).select((F.col("id") + 1).alias("a")))
     session_cache(spark.range(10).select((F.col("id") + 2).alias("b")))
     used_two = _storage_used(spark)
@@ -192,7 +193,7 @@ def test_collision_shaped_slots_evict_every_handle(spark, monkeypatch):
     stored ONE handle, so the displaced plan's storage leaked beyond
     eviction and clear)."""
     clear_session_caches(spark)
-    monkeypatch.setenv("SPARK_GRAFT_CACHE_ENTRIES", "2")
+    monkeypatch.setattr(session_cache_module, "CACHE_ENTRIES", 2)
     a = session_cache(spark.range(30).select((F.col("id") + 101).alias("a")))
     b = session_cache(spark.range(30).select((F.col("id") + 103).alias("b")))
     foreigners = []
@@ -322,3 +323,39 @@ def test_one_shot_probe_failure_keeps_colliding_live_handle(spark):
     assert any(h is flaky for h in _LRU[spark][key])  # slot survives
     assert _is_cached(foreign)
     clear_session_caches(spark)
+
+
+# builders that cache a twice-read partial: each must cache it through the
+# LRU so clear_session_caches releases it
+_PARTIAL_CACHING_BUILDERS = (
+    "tpch_top_supplier_revenue",
+    "agg_rollup_cascade",
+    "agg_key_skew_audit",
+    "llm_mixture_subsample",
+    "llm_epoch_upsample_plan",
+    "llm_source_overlap_matrix",
+    "llm_pq_quantization_audit",
+    "llm_embedding_covariance_audit",
+)
+
+
+def test_builder_partials_are_released_by_clear(spark, sf_dir):
+    """A raw ``.cache()`` in a builder outlives every sweep boundary: no
+    registry holds it, so clear_session_caches cannot release it and its
+    storage lives as long as the shared session. After building and
+    collecting every partial-caching builder, one clear must leave both
+    the CacheManager and the persisted-RDD map as they were."""
+    from syslog_kafka_spark.plans.registry import load_all
+
+    clear_session_caches(spark)
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty()
+    before = _persisted_ids(spark)
+    specs = load_all()
+    for name in _PARTIAL_CACHING_BUILDERS:
+        assert specs[name].build(spark, sf_dir).collect(), name
+    assert not cm.isEmpty()  # the builders did cache their partials
+    clear_session_caches(spark)
+    assert cm.isEmpty()
+    assert _persisted_ids(spark) - before == set()

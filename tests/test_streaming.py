@@ -460,36 +460,6 @@ def test_syslog_socket_source_live(spark, tmp_path, protocol):
     assert stamped and all(r.received_ts is not None for r in stamped)
 
 
-def test_stateful_host_profiles_across_batches(spark, tmp_path):
-    """applyInPandasWithState: state persists across microbatches (two file
-    drops processed as separate batches via maxFilesPerTrigger=1)."""
-    from syslog_kafka_spark.streaming.stateful import host_profiles
-
-    d = tmp_path / "stateful"
-    d.mkdir()
-    line = "<13>Aug 13 03:38:00 web01 nginx[912]: GET /index.html 200"
-    (d / "a.txt").write_text((line + "\n") * 3)
-    (d / "b.txt").write_text((line + "\n") * 2)
-
-    raw = spark.readStream.option("maxFilesPerTrigger", "1").text(str(d))
-    messages = raw.select(
-        F.col("value").alias("line"),
-        F.lit("collector").alias("source"),
-        F.current_timestamp().alias("received_ts"),
-    )
-    profiles = host_profiles(parsed_messages(messages))
-    name = f"t{uuid.uuid4().hex[:8]}"
-    q = profiles.writeStream.format("memory").queryName(name).outputMode("update").start()
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql(f"SELECT * FROM {name} WHERE host='web01' ORDER BY total_lines").collect()
-    # one emission per microbatch touching the host; the LAST total is the
-    # running count across both batches (3 then 5) in either file order
-    assert rows[-1].total_lines == 5
-    assert rows[-1].max_severity == 5
-    assert len(rows) == 2
-
-
 def test_available_now_trigger_drains_and_stops(spark, tmp_path):
     """Trigger.AvailableNow: process everything present, then stop on its
     own — the batch-draining mode a scheduled backfill job uses (vs the

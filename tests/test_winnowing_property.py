@@ -79,8 +79,9 @@ def test_mirror_matches_spark_engine(spark, sf_dir):
     """The pure-Python mirror computes the identical fingerprint multiset
     as the gated Arrow-kernel pipeline (plans/llm.winnow_arrow_pairs)
     over real corpus docs — so the hypothesis properties above speak for
-    the gated query. The interpreted-expression twin lives in
-    scripts/winnow_arrow_experiment.py and is cross-checked there."""
+    the gated query. The interpreted-expression twin that lost the r6
+    measurement lived in scripts/winnow_arrow_experiment.py (deleted;
+    see git history)."""
     from collections import defaultdict
 
     import pyspark.sql.functions as F
