@@ -93,7 +93,7 @@ PROBE = [
     # gated artifact — its pipeline ratio vs the frozen-16 sibling IS the
     # deliverable), the iterated BPE merge-apply loop (per-iteration work
     # must stay vocab-bounded), and the streaming LSH probe twin (stateless
-    # stream-static probe; should track lsh_candidate_pairs' linear tier)
+    # stream-static probe; should track minhash_pairs_banded's linear tier)
     "llm_embedding_neardup_refit64",
     "llm_bpe_merge_apply",
     "stream_lsh_probe_digest",

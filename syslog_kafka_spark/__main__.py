@@ -15,6 +15,7 @@ from __future__ import annotations
 import argparse
 import signal
 import sys
+from typing import NoReturn
 
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
@@ -27,7 +28,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--udp.port", dest="udp_port", type=int, default=5141)
     # the Spark analog of --num.producers: sink-side partitions per query
     p.add_argument("--num.producers", dest="num_producers", type=int, default=1)
-    # None sentinels let a --producer.config file supply these (flags win)
+    # None: a --producer.config file or the defaults supply these (flags win)
     p.add_argument("--required.acks", dest="required_acks", type=int, default=None, choices=(-1, 0, 1))
     p.add_argument("--acks.timeout", dest="acks_timeout", type=int, default=None)
     p.add_argument(
@@ -45,47 +46,44 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     return p.parse_args(argv)
 
 
+def _fail(message: str) -> NoReturn:
+    print(message, file=sys.stderr)
+    raise SystemExit(1)
+
+
 def validate(args: argparse.Namespace) -> dict:
     """Reference validate() parity (syslog.go:93-131): required flags, tag
-    parsing, encoding selection. A --producer.config properties file fills
-    producer knobs first (ProducerConfigFromFile parity); explicit flags
-    override file values, which override built-in defaults."""
-    producer: dict = {"linger_ms": 1000, "batch_size": 1000, "compression": None}
-    if args.producer_config:
-        from syslog_kafka_spark.encode.producer_config import producer_settings_from_file
+    parsing, encoding selection. The producer settings merge as in
+    ProducerConfigFromFile: explicit flags override a --producer.config
+    properties file, which overrides the defaults; ``kafka_options`` in
+    the result is the Kafka sink option map they make."""
+    from syslog_kafka_spark.encode.producer_config import kafka_sink_options, producer_settings
 
-        settings = producer_settings_from_file(args.producer_config)
-        if not args.broker_list and settings.get("broker_list"):
-            args.broker_list = settings["broker_list"]
-        if args.required_acks is None and "required_acks" in settings:
-            args.required_acks = settings["required_acks"]
-        if args.acks_timeout is None and "acks_timeout" in settings:
-            args.acks_timeout = settings["acks_timeout"]
-        for k in ("linger_ms", "batch_size", "compression"):
-            if k in settings:
-                producer[k] = settings[k]
-    if args.required_acks is None:
-        args.required_acks = 1
-    if args.acks_timeout is None:
-        args.acks_timeout = 1000
-    if not args.broker_list:
-        print("broker.list is required.", file=sys.stderr)
-        raise SystemExit(1)
+    flags = {
+        "bootstrap.servers": args.broker_list or None,
+        "acks": args.required_acks,
+        "timeout.ms": args.acks_timeout,
+    }
+    try:
+        kafka_options = kafka_sink_options(producer_settings(args.producer_config, flags))
+    except (OSError, ValueError) as e:
+        _fail(f"invalid --producer.config: {e}")
+    if "kafka.bootstrap.servers" not in kafka_options:
+        _fail("broker.list is required.")
     if not args.topic:
-        print("Topic is required.", file=sys.stderr)
-        raise SystemExit(1)
+        _fail("Topic is required.")
     if args.avro and not args.schema_registry_url:
-        print("Schema Registry URL is required for --avro flag", file=sys.stderr)
-        raise SystemExit(1)
+        _fail("Schema Registry URL is required for --avro flag")
+    if args.num_producers < 1:
+        _fail(f"num.producers must be at least 1, got {args.num_producers}")
     tags: dict[str, str] = {}
     for kv in args.tag:
         if "=" not in kv:
-            print(f"invalid --tag {kv!r}, expected key=value", file=sys.stderr)
-            raise SystemExit(1)
+            _fail(f"invalid --tag {kv!r}, expected key=value")
         k, v = kv.split("=", 1)
         tags[k] = v
     encoding = "avro" if args.avro else "proto" if args.proto else "string"
-    return {"tags": tags or None, "encoding": encoding, "producer": producer}
+    return {"tags": tags or None, "encoding": encoding, "kafka_options": kafka_options}
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -117,18 +115,14 @@ def main(argv: list[str] | None = None) -> int:
                 port=port,
                 protocol=protocol,
                 topic=args.topic,
-                brokers=args.broker_list,
+                brokers=extra["kafka_options"]["kafka.bootstrap.servers"],
                 checkpoint=f"{args.checkpoint}/{protocol}",
                 encoding=extra["encoding"],
                 schema_id=schema_id,
                 tags=extra["tags"],
                 logtypeid=args.log_type_id,
                 num_producers=args.num_producers,
-                acks=args.required_acks,
-                acks_timeout_ms=args.acks_timeout,
-                linger_ms=extra["producer"]["linger_ms"],
-                batch_size=extra["producer"]["batch_size"],
-                compression=extra["producer"]["compression"],
+                kafka_options=extra["kafka_options"],
             )
         )
 

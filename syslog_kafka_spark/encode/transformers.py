@@ -18,7 +18,8 @@ computes the varints (lengths, timestamps) in numpy and joins the pieces
 with one ``binary_join_element_wise``. The byte formats stay pinned to the
 reference writers by a differential test (tests/test_encodings.py). Output
 schema is the Kafka sink row contract: key BINARY, value BINARY, topic
-STRING [, partition INT].
+STRING. The key is always null, so, as with the reference's nil-key
+records (R11/R12), the Kafka client picks each record's partition.
 """
 
 from __future__ import annotations
@@ -35,7 +36,6 @@ from syslog_kafka_spark.encode.avro_binary import (
     zigzag,
 )
 from syslog_kafka_spark.encode.proto_wire import _key, _len_delimited, _varint_field, encode_tag
-from syslog_kafka_spark.functions.hashes import fnv1a32_partition
 
 
 def string_transform(messages: DataFrame, topic: str) -> DataFrame:
@@ -157,84 +157,3 @@ def proto_transform(
         ),
         F.lit(topic).alias("topic"),
     )
-
-
-def with_fnv1a_partition(records: DataFrame, key_col: str, num_partitions: int) -> DataFrame:
-    """R11 parity: explicit partition column = abs(int32(fnv1a32(key))) % n
-    so the Kafka sink routes exactly like the reference's HashPartitioner."""
-    return records.withColumn("partition", fnv1a32_partition(key_col, num_partitions).cast("int"))
-
-
-def with_random_partition(
-    records: DataFrame, num_partitions: int, seed: int | None = None
-) -> DataFrame:
-    """R12 parity: RandomPartitioner (reference partitioner.go:46-55,
-    rand.Int31n(len(partitions))) — a uniform random partition per record.
-    ``seed`` pins the stream for deterministic tests; production use leaves
-    it None (Spark picks a random seed per query, like the reference's
-    time-seeded rand)."""
-    if num_partitions <= 0:
-        raise ValueError(f"num_partitions must be positive, got {num_partitions}")
-    rnd = F.rand(seed) if seed is not None else F.rand()
-    return records.withColumn(
-        "partition", F.floor(rnd * num_partitions).cast("int")
-    )
-
-
-def kafka_writer_options(
-    *,
-    brokers: str,
-    acks: int = 1,
-    linger_ms: int = 1000,
-    batch_size: int = 1000,
-    acks_timeout_ms: int | None = None,
-    compression: str | None = None,
-) -> dict[str, str]:
-    """The Kafka sink option map for the reference's producer knob set
-    (kafka_producer.go:57-67: acks / timeout.ms / linger / batch.size /
-    compression.type / bootstrap.servers). Split out from the writer so the
-    contract can be asserted in tests without a broker."""
-    opts = {
-        "kafka.bootstrap.servers": brokers,
-        "kafka.acks": str(acks),
-        "kafka.linger.ms": str(linger_ms),
-        "kafka.batch.size": str(batch_size),
-    }
-    if acks_timeout_ms is not None:
-        # reference AckTimeoutMs / timeout.ms → producer request.timeout.ms
-        opts["kafka.request.timeout.ms"] = str(acks_timeout_ms)
-    if compression:
-        opts["kafka.compression.type"] = compression
-    return opts
-
-
-def write_kafka_stream(
-    records: DataFrame,
-    *,
-    brokers: str,
-    checkpoint: str,
-    acks: int = 1,
-    linger_ms: int = 1000,
-    batch_size: int = 1000,
-    acks_timeout_ms: int | None = None,
-    compression: str | None = None,
-):
-    """R14-R16 parity via the Kafka sink's own producer options: batching
-    (batch.size), group-commit (linger.ms), ack level + timeout — the knobs
-    the reference exposes as --required.acks / --acks.timeout. Returns the
-    StreamingQuery.
-
-    Not exercised against a live broker in tests (none in this
-    environment); the projection feeding it is byte-golden-tested and the
-    option map is contract-tested via kafka_writer_options."""
-    writer = records.writeStream.format("kafka").option("checkpointLocation", checkpoint)
-    for k, v in kafka_writer_options(
-        brokers=brokers,
-        acks=acks,
-        linger_ms=linger_ms,
-        batch_size=batch_size,
-        acks_timeout_ms=acks_timeout_ms,
-        compression=compression,
-    ).items():
-        writer = writer.option(k, v)
-    return writer.start()

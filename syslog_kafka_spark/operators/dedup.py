@@ -4,8 +4,8 @@ Four tiers, all DataFrame-native (no Python in the hot path):
 
 - exact_dedup: normalize → md5 → one hash-aggregate. One shuffle on the
   digest; survivors are min-id per group (deterministic).
-- minhash_lsh_pairs: shingle → MinHash signature → band buckets → bucket
-  equi-join → (optionally) exact Jaccard verify. The join shuffles on
+- minhash_pairs_banded: shingle → MinHash signature → band buckets →
+  bucket equi-join → exact Jaccard verify. The join shuffles on
   (band, band_hash) — candidate pairs only, never all pairs.
 - simhash64: 64-bit SimHash via per-bit majority over token hashes —
   computed with 64 aggregate expressions in ONE groupBy pass.
@@ -73,44 +73,6 @@ def cached_duplicate_groups(
     on the md5 digest (not the normalized text) keeps the shuffle rows
     at digest width; min-id and count per group are unchanged."""
     return session_cache(duplicate_groups(df, text_col, id_col))
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    k: int = 5,
-    n_hashes: int = 16,
-    bands: int = 4,
-    verify_threshold: float | None = 0.5,
-) -> DataFrame:
-    """Candidate near-duplicate pairs via MinHash + LSH banding.
-
-    rows_per_band = n_hashes // bands; docs collide when one band of their
-    signatures matches exactly. Returns (id_a, id_b, jaccard) with
-    id_a < id_b; ``verify_threshold`` filters by exact shingle Jaccard
-    (None skips verification and returns jaccard = null).
-    """
-    if verify_threshold is None:
-        # No verify stage → the shingle arrays would be dead columns, but
-        # Catalyst cannot prune the join-backs that produce them (no
-        # unique-key constraint), so skip them at construction.
-        pairs = lsh_candidate_pairs(
-            df, text_col, id_col, k=k, n_hashes=n_hashes, bands=bands,
-            with_shingles=False,
-        )
-        return pairs.select("id_a", "id_b", F.lit(None).cast("double").alias("jaccard"))
-    pairs = lsh_candidate_pairs(
-        df, text_col, id_col, k=k, n_hashes=n_hashes, bands=bands
-    )
-    # |A ∪ B| = |A| + |B| - |A ∩ B|: one intersect, no array_union pass
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    verified = pairs.withColumn(
-        "jaccard", F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
-    )
-    return verified.filter(F.col("jaccard") >= verify_threshold).select("id_a", "id_b", "jaccard")
 
 
 def cached_minhash_pairs(
@@ -370,7 +332,7 @@ def banded_buckets(base: DataFrame, n_hashes: int, bands: int) -> DataFrame:
     """(_id, _band, _bucket) LSH bucket keys from a (…, _sig) base frame:
     each band's bucket is hash64 of the comma-joined signature slice.
     ONE definition shared by the batch candidate self-join
-    (lsh_candidate_pairs) and the streaming probe twin
+    (minhash_pairs_banded) and the streaming probe twin
     (stream_lsh_probe_digest) so the bucket arithmetic cannot de-twin.
     Pure select + posexplode — drops into batch or streaming plans."""
     rows_per_band = n_hashes // bands
@@ -419,122 +381,6 @@ def cached_lsh_base(
             k,
             n_hashes,
         )
-    )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    k: int = 5,
-    n_hashes: int = 16,
-    bands: int = 4,
-    with_shingles: bool = True,
-    with_signatures: bool = False,
-) -> DataFrame:
-    """LSH candidate pairs (id_a < id_b) carrying both shingle-HASH sets
-    — the shared front half of every verify stage (Jaccard, containment).
-    ``with_shingles=False`` returns ids only, skipping both join-backs —
-    for callers that want candidates without a verify stage.
-    ``with_signatures=True`` additionally carries both MinHash signature
-    arrays (sig_a/sig_b) on the same join-backs — for estimate-vs-exact
-    calibration audits; costs nothing extra beyond the wider join rows.
-
-    EAGER by construction: building this frame executes the full LSH base
-    job (kernel shingling + signatures) to fill the cache before the
-    banded self-join references it four ways — N concurrent map stages
-    racing a COLD cache each recompute it (measured 36 s vs 16 s at sf1).
-    The cache entry is keyed by plan and lives for the session, shared by
-    every same-parameter dedup query (pairs, components, containment,
-    dedup_then_lsh) — a deliberate session-level working set (~signature
-    + shingle arrays per doc, bounded by corpus size, the same budget a
-    warehouse materialized intermediate would hold). Callers that need a
-    lazy plan (explain-only tooling) should call lsh_base_arrow directly.
-
-    Shingles ride as distinct 60-bit ints, not strings: ~2.5x smaller
-    pair shuffle and integer intersects in the verify stage (measured the
-    string path at 36 s cold for 512k candidates at sf1 — verify-bound).
-    Signatures/buckets are bit-identical to the string path, and the
-    oracle hashes its shingle lists with the same md5 family, so verify
-    counts match exactly cross-engine.
-
-    Shuffle shape (r7): the band join and the pair dedup move IDS ONLY;
-    the shingle arrays are joined back from the cached base AFTER the
-    pair space has collapsed to distinct candidates. Carrying the arrays
-    through both shuffles (the pre-r7 shape) shipped ~3 KB per banded
-    row and again per candidate pair — measured 9.8 s warm at sf1 vs
-    5.7 s for the join-back shape, identical output. At 100 TB the gap
-    widens: arrays cross the wire once per matched document, not once
-    per band replica plus once per bucket collision."""
-    # Eager fill + LRU bound (operators/session_cache, via the shared
-    # cached_lsh_base): the plan references base FOUR times (banded + two
-    # join-backs), and Spark submits those as concurrent map stages — on
-    # a cold cache each stage races to compute the kernel partitions
-    # (measured 36 s vs 16 s cold at sf1). The cache entry is shared with
-    # every same-plan consumer in the session (pairs, components,
-    # containment, the streaming probe twin), while the LRU budget keeps
-    # a long session's working set bounded (the r8 sf10 sweep blew an
-    # 8 GiB driver heap on unbounded accumulation).
-    base = cached_lsh_base(df, k, n_hashes, text_col, id_col)
-
-    # band value = hash64 of the band's signature slice, exploded to
-    # (band_idx, band_hash) rows: the LSH bucket key. Ids only — the
-    # shingle arrays rejoin after the dedup (see docstring).
-    banded = banded_buckets(base, n_hashes, bands)
-
-    left = banded.select(F.col("_id").alias("id_a"), "_band", "_bucket")
-    right = banded.select(F.col("_id").alias("id_b"), "_band", "_bucket")
-    pairs = (
-        left.join(right, ["_band", "_bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    if not with_shingles and not with_signatures:
-        return pairs
-    cols_a = [F.col("_id").alias("id_a")]
-    cols_b = [F.col("_id").alias("id_b")]
-    if with_shingles:
-        cols_a.append(F.col("_sh").alias("sh_a"))
-        cols_b.append(F.col("_sh").alias("sh_b"))
-    if with_signatures:
-        cols_a.append(F.col("_sig").alias("sig_a"))
-        cols_b.append(F.col("_sig").alias("sig_b"))
-    return pairs.join(base.select(*cols_a), "id_a").join(
-        base.select(*cols_b), "id_b"
-    )
-
-
-def containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    k: int = 5,
-    n_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.6,
-) -> DataFrame:
-    """Asymmetric containment over LSH candidates: |A∩B|/|A| and
-    |A∩B|/|B|, keeping pairs where either direction crosses ``threshold``.
-
-    Containment is the dedup signal Jaccard misses: a short document
-    fully embedded in a long one (quote, boilerplate, excerpt) has high
-    containment but low Jaccard because the union is dominated by the
-    long side. Same candidate generation as the Jaccard path — banding
-    bounds the pair space, never all-pairs."""
-    pairs = lsh_candidate_pairs(df, text_col, id_col, k=k, n_hashes=n_hashes, bands=bands)
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    len_a = F.size("sh_a").cast("double")
-    len_b = F.size("sh_b").cast("double")
-    c_ab = F.when(len_a == 0, F.lit(1.0)).otherwise(inter / len_a)
-    c_ba = F.when(len_b == 0, F.lit(1.0)).otherwise(inter / len_b)
-    return (
-        pairs.withColumn("containment_ab", c_ab)
-        .withColumn("containment_ba", c_ba)
-        .filter(F.greatest("containment_ab", "containment_ba") >= threshold)
-        .select("id_a", "id_b", "containment_ab", "containment_ba")
     )
 
 
@@ -797,7 +643,7 @@ def simhash_neardup_multiprobe(
     step = 60 // tables
     # both sides of the self-join derive from this frame; without the
     # barrier the 60-aggregate simhash pass runs twice (checkpoint /
-    # intermediate table at warehouse scale, same as minhash_lsh_pairs)
+    # intermediate table at warehouse scale, same as cached_lsh_base)
     sims = session_cache(simhash64(df, text_col, id_col), eager=False)
     blocks = F.array(
         *[

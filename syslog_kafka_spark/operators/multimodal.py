@@ -36,8 +36,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from syslog_kafka_spark.session import scoped_conf
-
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -84,18 +82,6 @@ def fake_decoder(payload: bytes, fmt: str) -> np.ndarray:
     return arr
 
 
-def arrow_batch_size(spark, n: int):
-    """Scope ``spark.sql.execution.arrow.maxRecordsPerBatch`` to a block,
-    restoring the prior value (or unsetting) on exit. The knob is read at
-    execution time, so callers must keep the block open while the action
-    that consumes the mapInPandas output runs:
-
-        with arrow_batch_size(spark, 64):
-            extract_features(media, ...).write.parquet(out)
-    """
-    return scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": str(n)})
-
-
 def extract_features(
     media: DataFrame,
     *,
@@ -109,9 +95,9 @@ def extract_features(
 
     Peak executor memory is O(one Arrow batch of payloads); for large
     blobs bound it with the session knob
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` (see
-    :func:`arrow_batch_size` for scoped use). The operator itself never
-    mutates session config.
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``, scoped with
+    ``session.scoped_conf`` around the action that runs the operator.
+    The operator itself never mutates session config.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -51,19 +51,11 @@ def norm_expr(a: Column) -> Column:
     )
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Cosine from raw vectors. In pair joins prefer precomputing
-    norm_expr per SIDE before the join (see prenorm pattern below):
-    Catalyst does not CSE across higher-order functions, so this
-    3-fold form costs 3 aggregate folds per PAIR, while prenormed
-    sides cost one fold per pair plus one per row (measured 2x on the
-    sf0.1 near-dup query)."""
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def _prenorm_score(vec_a: Column, vec_b: Column, norm_a: Column, norm_b: Column) -> Column:
-    """dot/(na*nb) with norms precomputed per side — bit-identical to
-    cosine_expr (same fold order, same multiplication grouping)."""
+    """Cosine as dot/(na*nb) with each side's norm precomputed once per
+    row before the join: Catalyst does not CSE across higher-order
+    functions, so folding both norms per PAIR costs 3 aggregate folds
+    instead of one (measured 2x on the sf0.1 near-dup query)."""
     return dot_expr(vec_a, vec_b) / (norm_a * norm_b)
 
 

@@ -3280,8 +3280,7 @@ def llm_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame — its _inter/_sz_a/_sz_b integer columns are exactly the
     array-verify ingredients (same sizes, same intersect), so the
     containment ratios are two divisions over the materialized frame
-    instead of a per-face candidate self-join + array verify
-    (containment_pairs stays the standalone operator form)."""
+    instead of a per-face candidate self-join + array verify."""
     from syslog_kafka_spark.operators.dedup import cached_minhash_pairs_banded
 
     d = load_tables(spark, sf_dir).documents

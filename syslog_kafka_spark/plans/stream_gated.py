@@ -1641,7 +1641,7 @@ def _stream_lsh_probe_oracle() -> str:
 )
 def stream_lsh_probe_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONLINE near-duplicate probing — the streaming face of
-    lsh_candidate_pairs, the last §2B.10 batch dedup capability without
+    minhash_pairs_banded, the last §2B.10 batch dedup capability without
     one: documents arrive as a stream, MinHash-sign inside their scan
     task, and probe the already-ingested corpus' banded LSH base via a
     stateless stream-static join; a complete-mode per-band digest

@@ -51,8 +51,9 @@ _DEFAULTS = {
 }
 
 
-# Gitignored scratch root for gate temp dirs, next to the package.
-_WAREHOUSE = os.path.join(
+# Gitignored scratch root for gate temp dirs and the pyds corpus file,
+# next to the package.
+WAREHOUSE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "spark-warehouse"
 )
 
@@ -80,9 +81,9 @@ def warehouse_tmp(prefix: str) -> tempfile.TemporaryDirectory:
     """A fresh temp dir under the gitignored spark-warehouse root, removed
     when its ``with`` block exits. Unique per call, so concurrent builds
     never share a path."""
-    os.makedirs(_WAREHOUSE, exist_ok=True)
+    os.makedirs(WAREHOUSE, exist_ok=True)
     return tempfile.TemporaryDirectory(
-        prefix=prefix, dir=_WAREHOUSE, ignore_cleanup_errors=True
+        prefix=prefix, dir=WAREHOUSE, ignore_cleanup_errors=True
     )
 
 

@@ -268,11 +268,13 @@ def register(spark) -> None:
 
 def corpus_file(spark) -> str:
     """Materialize the fixture corpus as a newline-delimited UTF-8 file at
-    a stable warehouse-local path (idempotent overwrite)."""
+    a stable path under the gitignored warehouse root next to the package,
+    whatever the working directory (idempotent overwrite)."""
+    from syslog_kafka_spark.session import WAREHOUSE
     from syslog_kafka_spark.sources.syslog_fixtures import SYSLOG_CORPUS
 
-    os.makedirs("spark-warehouse", exist_ok=True)
-    path = os.path.join("spark-warehouse", "pyds_syslog_corpus.log")
+    os.makedirs(WAREHOUSE, exist_ok=True)
+    path = os.path.join(WAREHOUSE, "pyds_syslog_corpus.log")
     data = "".join(line + "\n" for line in SYSLOG_CORPUS).encode("utf-8")
     if not os.path.exists(path) or open(path, "rb").read() != data:
         with open(path, "wb") as f:

@@ -99,21 +99,6 @@ def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> Tables
     return tables
 
 
-def read_text(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-on-read text ingest: one row per line, column ``value``."""
-    return spark.read.text(path)
-
-
-def read_csv(spark: SparkSession, path: str, **options: str) -> DataFrame:
-    opts = {"header": "true", "inferSchema": "true"}
-    opts.update(options)
-    return spark.read.options(**opts).csv(path)
-
-
-def read_json(spark: SparkSession, path: str, **options: str) -> DataFrame:
-    return spark.read.options(**options).json(path)
-
-
 # spread() decision cache: session -> {(sorted input files, target):
 # under-split?}. The probe (`df.rdd.getNumPartitions()`) compiles a
 # separate RDD conversion plan per call, so hot paths that re-build the

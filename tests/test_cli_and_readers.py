@@ -1,14 +1,13 @@
-"""CLI validation parity (R22) + schema-on-read smoke tests (§2B.1)."""
+"""CLI validation parity (R22), the producer settings the CLI hands the
+Kafka sink (R14-R16), and package entry-point smoke tests."""
 
 from __future__ import annotations
 
 import json
 
 import pytest
-import pyspark.sql.functions as F
 
 from syslog_kafka_spark.__main__ import parse_args, validate
-from syslog_kafka_spark.sources.readers import read_csv, read_json, read_text
 
 
 def test_cli_requires_broker_and_topic(capsys):
@@ -45,37 +44,28 @@ def test_cli_encoding_selection():
     )
 
 
-def test_cli_producer_knob_defaults_and_flags():
-    base = ["--broker.list", "b:9092", "--topic", "t"]
-    args = parse_args(base)
-    validate(args)
-    assert (args.required_acks, args.acks_timeout, args.num_producers) == (1, 1000, 1)
-
-    args = parse_args([*base, "--required.acks", "0", "--acks.timeout", "250", "--num.producers", "4"])
-    validate(args)
-    assert (args.required_acks, args.acks_timeout, args.num_producers) == (0, 250, 4)
+class QueryDied(Exception):
+    pass
 
 
-def test_cli_exits_with_the_error_of_a_failed_query(monkeypatch):
-    """When one listener's query dies (here UDP), main() raises its error
-    instead of blocking on the healthy TCP query, and stops every query
-    on the way out. Fakes stand in for the session and the queries."""
+def _fake_ingest(monkeypatch, failing=()):
+    """Stand fakes in for the session and ``run_syslog_ingest``, so main()
+    runs without Spark. Returns the list that collects one fake query per
+    ``run_syslog_ingest`` call, each with the kwargs of its call; the
+    queries of the protocols in ``failing`` die."""
     import signal
     import threading
 
     import syslog_kafka_spark.session as session
     import syslog_kafka_spark.streaming.pipeline as pipeline
-    from syslog_kafka_spark.__main__ import main
-
-    class QueryDied(Exception):
-        pass
 
     queries = []
 
     class FakeQuery:
-        def __init__(self, protocol):
-            self.protocol = protocol
-            self.error = QueryDied(f"{protocol} listener died") if protocol == "udp" else None
+        def __init__(self, kwargs):
+            self.kwargs = kwargs
+            self.protocol = kwargs["protocol"]
+            self.error = QueryDied(f"{self.protocol} listener died") if self.protocol in failing else None
             self.stopped = threading.Event()
 
         def stop(self):
@@ -88,26 +78,61 @@ def test_cli_exits_with_the_error_of_a_failed_query(monkeypatch):
 
     class FakeStreams:
         def awaitAnyTermination(self):
-            raise next(q.error for q in queries if q.error)
+            for q in queries:
+                if q.error:
+                    raise q.error
 
     class FakeSpark:
         streams = FakeStreams()
 
-    def fake_ingest(spark, *, protocol, **_):
-        queries.append(FakeQuery(protocol))
+    def fake_ingest(spark, **kwargs):
+        queries.append(FakeQuery(kwargs))
         return queries[-1]
 
     monkeypatch.setattr(session, "get_spark", lambda *a, **k: FakeSpark())
     monkeypatch.setattr(pipeline, "run_syslog_ingest", fake_ingest)
     monkeypatch.setattr(signal, "signal", lambda *a: None)
+    return queries
+
+
+def test_cli_producer_knob_defaults_and_flags(monkeypatch, capsys):
+    """--num.producers reaches run_syslog_ingest (1 by default); a count
+    below 1 is rejected like the other bad flags, not run as one sink
+    partition."""
+    from syslog_kafka_spark.__main__ import main
+
+    base = ["--broker.list", "b:9092", "--topic", "t"]
+    for flags, expected in (([], 1), (["--num.producers", "4"], 4)):
+        queries = _fake_ingest(monkeypatch)
+        assert main([*base, *flags]) == 0
+        assert [q.kwargs["num_producers"] for q in queries] == [expected, expected]
+
+    for n in ("0", "-3"):
+        with pytest.raises(SystemExit):
+            validate(parse_args([*base, "--num.producers", n]))
+        assert f"num.producers must be at least 1, got {n}" in capsys.readouterr().err
+
+
+def test_cli_exits_with_the_error_of_a_failed_query(monkeypatch):
+    """When one listener's query dies (here UDP), main() raises its error
+    instead of blocking on the healthy TCP query, and stops every query
+    on the way out. Fakes stand in for the session and the queries."""
+    from syslog_kafka_spark.__main__ import main
+
+    queries = _fake_ingest(monkeypatch, failing={"udp"})
     with pytest.raises(QueryDied, match="udp listener died"):
         main(["--broker.list", "b:9092", "--topic", "t"])
     assert [q.protocol for q in queries] == ["tcp", "udp"]
     assert all(q.stopped.is_set() for q in queries)
 
 
-def test_cli_producer_config_file_merges_with_flag_precedence(tmp_path):
-    # reference ProducerConfigFromFile key names (kafka_producer.go:158-205)
+def test_kafka_writer_options_contract(monkeypatch, tmp_path):
+    """R14-R16 parity without a broker: the exact Kafka sink option map
+    main() starts both listeners' queries with, for the defaults, flags,
+    a properties file (reference ProducerConfigFromFile key names,
+    kafka_producer.go:158-205) and flags over that file."""
+    from syslog_kafka_spark.__main__ import main
+
     cfg = tmp_path / "producer.properties"
     cfg.write_text(
         "# producer settings\n"
@@ -117,28 +142,69 @@ def test_cli_producer_config_file_merges_with_flag_precedence(tmp_path):
         "linger=2s\n"
         "batch.size=5000\n"
         "compression.type=gzip\n"
+        "client.id=syslog\n"
     )
-    args = parse_args(["--topic", "t", "--producer.config", str(cfg)])
-    out = validate(args)
-    assert args.broker_list == "file-broker:9092"
-    assert (args.required_acks, args.acks_timeout) == (0, 750)
-    assert out["producer"] == {"linger_ms": 2000, "batch_size": 5000, "compression": "gzip"}
+    defaults = {
+        "kafka.bootstrap.servers": "b:9092",
+        "kafka.acks": "1",
+        "kafka.request.timeout.ms": "1000",
+        "kafka.linger.ms": "1000",
+        "kafka.batch.size": "1000",
+    }
+    from_file = {
+        "kafka.bootstrap.servers": "file-broker:9092",
+        "kafka.acks": "0",
+        "kafka.request.timeout.ms": "750",
+        "kafka.linger.ms": "2000",
+        "kafka.batch.size": "5000",
+        "kafka.compression.type": "gzip",
+        "kafka.client.id": "syslog",
+    }
+    cases = [
+        (["--broker.list", "b:9092"], defaults),
+        (
+            ["--broker.list", "b:9092", "--required.acks", "0", "--acks.timeout", "250"],
+            {**defaults, "kafka.acks": "0", "kafka.request.timeout.ms": "250"},
+        ),
+        (["--producer.config", str(cfg)], from_file),
+        # flags beat file values; the rest still come from the file
+        (
+            ["--producer.config", str(cfg), "--broker.list", "flag-broker:9092", "--required.acks", "1"],
+            {**from_file, "kafka.bootstrap.servers": "flag-broker:9092", "kafka.acks": "1"},
+        ),
+    ]
+    for flags, expected in cases:
+        queries = _fake_ingest(monkeypatch)
+        assert main(["--topic", "t", *flags]) == 0
+        assert [q.kwargs["kafka_options"] for q in queries] == [expected, expected], flags
+        assert {q.kwargs["brokers"] for q in queries} == {expected["kafka.bootstrap.servers"]}
 
-    # explicit flags beat file values
-    args = parse_args(
-        ["--topic", "t", "--producer.config", str(cfg),
-         "--broker.list", "flag-broker:9092", "--required.acks", "1"]
-    )
-    validate(args)
-    assert args.broker_list == "flag-broker:9092"
-    assert args.required_acks == 1
-    assert args.acks_timeout == 750  # still from the file
+
+def test_cli_producer_config_file_merges_with_flag_precedence(tmp_path, capsys):
+    """The broker list: --broker.list beats the file; in the file
+    bootstrap.servers beats metadata.broker.list, which fills in when it
+    is the only one (reference fallback order); with neither the CLI
+    refuses to start."""
+
+    def brokers(props: str, *flags: str) -> str:
+        cfg = tmp_path / "p.properties"
+        cfg.write_text(props)
+        out = validate(parse_args(["--topic", "t", "--producer.config", str(cfg), *flags]))
+        return out["kafka_options"]["kafka.bootstrap.servers"]
+
+    assert brokers("metadata.broker.list=old:9092\n") == "old:9092"
+    assert brokers("metadata.broker.list=old:9092\nbootstrap.servers=new:9092\n") == "new:9092"
+    assert brokers("bootstrap.servers=new:9092\n", "--broker.list", "flag:9092") == "flag:9092"
+    with pytest.raises(SystemExit):
+        brokers("acks=1\n")
+    assert "broker.list is required." in capsys.readouterr().err
 
 
-def test_producer_properties_parsing(tmp_path):
+def test_producer_properties_parsing(tmp_path, caplog):
     from syslog_kafka_spark.encode.producer_config import (
+        kafka_sink_options,
         parse_duration_ms,
-        producer_settings_from_file,
+        producer_settings,
     )
 
     assert parse_duration_ms("100ms") == 100
@@ -150,71 +216,38 @@ def test_producer_properties_parsing(tmp_path):
 
     cfg = tmp_path / "p.properties"
     cfg.write_text(
-        "metadata.broker.list=old:9092\n"
-        "bootstrap.servers=new:9092\n"
+        "! comment\n"
+        "  bootstrap.servers = new:9092  \n"
         "client.id=syslog\n"
         "send.routines=8\n"
+        "retries=3\n"
     )
-    s = producer_settings_from_file(str(cfg))
-    # bootstrap.servers wins over metadata.broker.list (reference fallback order)
-    assert s["broker_list"] == "new:9092"
-    assert s["client_id"] == "syslog"
-    assert s["extra"] == {"send.routines": "8"}
+    with caplog.at_level("WARNING", logger="syslog_kafka_spark.encode.producer_config"):
+        opts = kafka_sink_options(producer_settings(str(cfg)))
+    assert opts["kafka.bootstrap.servers"] == "new:9092"
+    # client.id is forwarded, not dropped
+    assert opts["kafka.client.id"] == "syslog"
+    # keys with no sink option are named, all in one warning
+    assert [r.getMessage() for r in caplog.records] == [
+        "producer settings with no Kafka sink option, ignored: retries, send.routines"
+    ]
 
 
-def test_kafka_writer_options_contract():
-    """R14-R16 knob parity without a broker: the option map the sink is
-    started with carries acks / linger / batch.size / timeout / codec
-    (reference kafka_producer.go:57-67 knob set)."""
-    from syslog_kafka_spark.encode.transformers import kafka_writer_options
+def test_malformed_producer_settings_are_rejected(tmp_path, capsys):
+    """Non-integer acks / timeout.ms / batch.size and a bad linger
+    duration fail the CLI with the offending key, before any query
+    starts."""
+    from syslog_kafka_spark.encode.producer_config import kafka_sink_options, producer_settings
 
-    opts = kafka_writer_options(
-        brokers="b:9092", acks=0, linger_ms=500, batch_size=2000,
-        acks_timeout_ms=750, compression="snappy",
-    )
-    assert opts == {
-        "kafka.bootstrap.servers": "b:9092",
-        "kafka.acks": "0",
-        "kafka.linger.ms": "500",
-        "kafka.batch.size": "2000",
-        "kafka.request.timeout.ms": "750",
-        "kafka.compression.type": "snappy",
-    }
-    # defaults omit the optional knobs
-    opts = kafka_writer_options(brokers="b:9092")
-    assert "kafka.request.timeout.ms" not in opts
-    assert "kafka.compression.type" not in opts
-
-
-def test_random_partitioner_range_and_distribution(spark):
-    """R12 parity (partitioner.go:46-55): uniform over [0, n)."""
-    from syslog_kafka_spark.encode.transformers import with_random_partition
-
-    n = 8
-    df = spark.range(8000).select(F.col("id").cast("string").alias("value"))
-    parts = with_random_partition(df, n, seed=7).groupBy("partition").count().collect()
-    got = {r["partition"]: r["count"] for r in parts}
-    assert set(got) == set(range(n))  # every partition hit, none out of range
-    for c in got.values():
-        assert abs(c - 1000) < 300  # roughly uniform
-
-    with pytest.raises(ValueError):
-        with_random_partition(df, 0)
-
-
-def test_read_text_csv_json(spark, tmp_path):
-    (tmp_path / "f.txt").write_text("line one\nline two\n")
-    assert read_text(spark, str(tmp_path / "f.txt")).count() == 2
-
-    (tmp_path / "f.csv").write_text("a,b\n1,x\n2,y\n")
-    csv = read_csv(spark, str(tmp_path / "f.csv"))
-    assert csv.columns == ["a", "b"] and csv.count() == 2
-    assert csv.schema["a"].dataType.typeName() in ("integer", "long")  # inferSchema on
-
-    rows = [{"k": 1, "s": "x"}, {"k": 2, "s": "y"}]
-    (tmp_path / "f.json").write_text("\n".join(json.dumps(r) for r in rows))
-    js = read_json(spark, str(tmp_path / "f.json"))
-    assert sorted(js.columns) == ["k", "s"] and js.count() == 2
+    cfg = tmp_path / "p.properties"
+    for line in ("acks=all", "timeout.ms=1.5", "batch.size=big", "linger=soon"):
+        cfg.write_text(f"bootstrap.servers=b:9092\n{line}\n")
+        key = line.split("=")[0]
+        with pytest.raises(ValueError, match=f"invalid {key}="):
+            kafka_sink_options(producer_settings(str(cfg)))
+        with pytest.raises(SystemExit):
+            validate(parse_args(["--topic", "t", "--producer.config", str(cfg)]))
+        assert f"invalid {key}=" in capsys.readouterr().err
 
 
 def test_package_sql_entry_point(spark, sf_dir):

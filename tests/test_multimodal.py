@@ -8,7 +8,6 @@ import pytest
 
 from syslog_kafka_spark.operators.multimodal import (
     MEDIA_SCHEMA,
-    arrow_batch_size,
     extract_features,
     fake_decoder,
     frame_sample_plan,
@@ -56,7 +55,7 @@ def test_extract_features_does_not_mutate_session_config(spark, media):
 def test_arrow_batch_size_scopes_and_restores(spark, media):
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     before = spark.conf.get(key, None)
-    with arrow_batch_size(spark, 2):
+    with scoped_conf(spark, {key: "2"}):
         assert spark.conf.get(key) == "2"
         # the knob is live while the action runs inside the block
         out = extract_features(media, dim=8, decoder=fake_decoder).collect()

@@ -18,6 +18,7 @@ from syslog_kafka_spark.sources.pyds import (
     LineRange,
     SyslogTextBatchReader,
     SyslogTextStreamReader,
+    corpus_file,
 )
 from syslog_kafka_spark.sources.syslog_fixtures import SYSLOG_CORPUS
 
@@ -35,6 +36,20 @@ def expected_rows():
         rows.append((pos, line))
         pos += len((line + "\n").encode("utf-8"))
     return rows
+
+
+def test_corpus_file_lands_under_the_warehouse_root(tmp_path, monkeypatch):
+    """The gates' corpus file is written next to the package, not into
+    whatever directory the process runs in."""
+    from syslog_kafka_spark.session import WAREHOUSE
+
+    monkeypatch.chdir(tmp_path)
+    path = corpus_file(None)
+    assert os.path.isabs(path)
+    assert os.path.commonpath([path, WAREHOUSE]) == WAREHOUSE
+    assert list(tmp_path.iterdir()) == []
+    with open(path, "rb") as f:
+        assert f.read() == "".join(line + "\n" for line in SYSLOG_CORPUS).encode("utf-8")
 
 
 @pytest.mark.parametrize("splits", [1, 2, 3, 4, 7, 16, 64])

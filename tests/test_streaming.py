@@ -12,15 +12,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from syslog_kafka_spark.sources.syslog_fixtures import SYSLOG_CORPUS
-from syslog_kafka_spark.streaming.pipeline import (
-    deduped_stream,
-    incremental_dedup_stream,
-    parsed_messages,
-    sessionized_host_activity,
-    stream_static_enrich,
-    stream_stream_interval_join,
-    windowed_severity_counts,
-)
+from syslog_kafka_spark.streaming.pipeline import parsed_messages
 
 
 def _replay_stream(spark, tmp_path, lines):
@@ -51,126 +43,6 @@ def test_file_replay_parse_counts(spark, tmp_path):
     parsed_ok = [r for r in out if r.pri is not None]
     assert len(parsed_ok) == 13  # corpus has 4 unparseable lines
     assert all(r.source == "test-collector" for r in out)
-
-
-def test_windowed_severity_counts(spark, tmp_path):
-    messages = _replay_stream(spark, tmp_path, SYSLOG_CORPUS)
-    win = windowed_severity_counts(parsed_messages(messages), window="5 minutes")
-    name = _run_to_memory(win, f"t{uuid.uuid4().hex[:8]}", mode="update")
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    # all lines arrive "now" → one 5-min window; severities grouped
-    assert sum(r.n for r in rows) == len(SYSLOG_CORPUS)  # unparseable lines count too (severity NULL)
-    assert {r.severity for r in rows} <= {0, 2, 5, 6, 7, None}
-
-
-def test_sliding_window_counts(spark, tmp_path):
-    messages = _replay_stream(spark, tmp_path, SYSLOG_CORPUS)
-    win = windowed_severity_counts(
-        parsed_messages(messages), window="10 minutes", slide="5 minutes"
-    )
-    name = _run_to_memory(win, f"t{uuid.uuid4().hex[:8]}", mode="update")
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    # sliding: every row lands in 2 overlapping windows
-    assert sum(r.n for r in rows) == 2 * len(SYSLOG_CORPUS)
-
-
-def test_streaming_dedup(spark, tmp_path):
-    lines = [SYSLOG_CORPUS[0]] * 5 + [SYSLOG_CORPUS[7]] * 3
-    messages = _replay_stream(spark, tmp_path, lines)
-    name = _run_to_memory(deduped_stream(messages), f"t{uuid.uuid4().hex[:8]}")
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    assert len(rows) == 2
-
-
-def test_session_window(spark, tmp_path):
-    messages = _replay_stream(spark, tmp_path, SYSLOG_CORPUS)
-    sess = sessionized_host_activity(parsed_messages(messages), gap="30 minutes")
-    name = _run_to_memory(sess, f"t{uuid.uuid4().hex[:8]}", mode="complete")
-    rows = spark.sql(f"SELECT * FROM {name} WHERE host = 'web01'").collect()
-    # exactly one parseable web01 line in the corpus → one session
-    assert len(rows) == 1 and rows[0].n_lines == 1
-
-
-def test_stream_static_join(spark, tmp_path):
-    dim = spark.createDataFrame(
-        [("web01", "frontend"), ("db01", "database")], ["host", "tier"]
-    )
-    messages = _replay_stream(spark, tmp_path, SYSLOG_CORPUS)
-    joined = stream_static_enrich(parsed_messages(messages), dim, "host")
-    name = _run_to_memory(joined, f"t{uuid.uuid4().hex[:8]}")
-    rows = spark.sql(f"SELECT * FROM {name} WHERE tier IS NOT NULL").collect()
-    hosts = {r.host for r in rows}
-    assert hosts == {"web01", "db01"}
-
-
-def test_incremental_dedup_stream(spark, tmp_path):
-    import hashlib
-
-    # corpus already contains doc "alpha beta"; stream brings one known
-    # doc, one novel doc repeated 3x (with whitespace variance), one more
-    # novel doc
-    known = "alpha beta"
-    seen = spark.createDataFrame(
-        [(hashlib.md5(known.encode()).hexdigest(),)], ["digest"]
-    )
-    lines = [known, "gamma  delta", "gamma delta", " Gamma Delta ", "epsilon"]
-    d = tmp_path / "docs"
-    d.mkdir()
-    (d / "part-0.txt").write_text("\n".join(lines) + "\n")
-    docs = (
-        spark.readStream.text(str(d))
-        .select(
-            F.col("value").alias("text"),
-            F.current_timestamp().alias("received_ts"),
-        )
-    )
-    out = incremental_dedup_stream(docs, seen)
-    name = _run_to_memory(out, f"t{uuid.uuid4().hex[:8]}")
-    rows = spark.sql(f"SELECT text FROM {name}").collect()
-    # known doc dropped; the three "gamma delta" variants collapse to one
-    texts = sorted(r.text.strip().lower().replace("  ", " ") for r in rows)
-    assert texts == ["epsilon", "gamma delta"]
-
-
-def _replay_keyed_stream(spark, tmp_path, subdir, ts_col, lines):
-    """CSV-ish replay with explicit event times: 'key,2024-01-01 00:00:00'."""
-    d = tmp_path / subdir
-    d.mkdir()
-    (d / "part-0.txt").write_text("\n".join(lines) + "\n")
-    raw = spark.readStream.text(str(d))
-    return raw.select(
-        F.split("value", ",")[0].alias("k"),
-        F.to_timestamp(F.split("value", ",")[1]).alias(ts_col),
-    )
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    alerts = _replay_keyed_stream(
-        spark, tmp_path, "alerts", "alert_ts",
-        ["web01,2024-01-01 00:00:00", "db01,2024-01-01 01:00:00"],
-    )
-    deploys = _replay_keyed_stream(
-        spark, tmp_path, "deploys", "deploy_ts",
-        [
-            "web01,2024-01-01 00:02:00",  # within 5 min of the web01 alert
-            "web01,2024-01-01 00:20:00",  # outside the interval -> no match
-            "db01,2024-01-01 01:04:00",   # within 5 min of the db01 alert
-            "app01,2024-01-01 00:01:00",  # key never alerts -> no match
-        ],
-    )
-    joined = stream_stream_interval_join(
-        alerts, deploys, "k",
-        left_time="alert_ts", right_time="deploy_ts", interval="5 minutes",
-    )
-    name = _run_to_memory(joined, f"t{uuid.uuid4().hex[:8]}")
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    assert {(r.k, r.deploy_ts.minute) for r in rows} == {("web01", 2), ("db01", 4)}
-
-
-def test_stream_stream_join_requires_distinct_time_cols(spark, tmp_path):
-    df = _replay_keyed_stream(spark, tmp_path, "x", "ts", ["a,2024-01-01 00:00:00"])
-    with pytest.raises(ValueError, match="distinct"):
-        stream_stream_interval_join(df, df, "k", left_time="ts", right_time="ts")
 
 
 def test_foreach_batch_collects(spark, tmp_path):
