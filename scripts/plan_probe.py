@@ -19,7 +19,11 @@ import contextlib
 import io
 import json
 import os
+import sys
 import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -33,19 +37,17 @@ def main() -> None:
     ap.add_argument("--suffix", default="", help="filename suffix, e.g. _before/_after")
     args = ap.parse_args()
 
+    from bench import first_touch
     from syslog_kafka_spark.plans.registry import load_all
     from syslog_kafka_spark.session import get_spark
 
     spark = get_spark("plan-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     specs = load_all()
     names = [n for n in specs if specs[n].bench] if args.all_benched else args.names
 
     os.makedirs(args.outdir, exist_ok=True)
-    # Warm the JVM/footers the same way bench.py does.
-    specs["agg_revenue_forecast"].build(spark, args.sf_dir).collect()
+    first_touch(spark, args.sf_dir)
 
     from syslog_kafka_spark.operators.session_cache import release_session_checkpoints
 

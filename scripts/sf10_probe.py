@@ -9,8 +9,8 @@ construction — the probe records that honestly), and the scan-bound
 TPC-H outlier from the r7 sf1 sweep.
 
 Protocol (the r6/r7 measurement rules):
-- one warmup query per sf_dir before any timing (first-job JVM/scan
-  costs ~6 s even at sf0.1);
+- one ``bench.first_touch`` per sf_dir before any timing (first-job
+  JVM/scan costs ~6 s even at sf0.1, plus the Python-worker start);
 - each query measured TWICE in the same session (call1 = includes any
   per-query cold cost: lambda warmup, cache fill; call2 = warm) — the
   r7 lesson that sweep-adjacent and cold numbers must not be compared
@@ -133,6 +133,7 @@ def main() -> int:
     ap.add_argument("--only", default=None)
     args = ap.parse_args()
 
+    from bench import _HOST_FLOOR_FACTOR, _HOST_REF_LINES_PER_SEC, first_touch
     from syslog_kafka_spark.plans.registry import load_all
     from syslog_kafka_spark.session import get_spark
 
@@ -175,7 +176,7 @@ def main() -> int:
 
     results: dict[str, dict[str, float]] = {q: {} for q in probe}
     for tag, sf_dir in (("sf1", args.sf1), ("sf10", args.sf10)):
-        specs["agg_revenue_forecast"].build(spark, sf_dir).collect()  # warmup
+        first_touch(spark, sf_dir)
         for q in probe:
             for call in ("call1", "call2"):
                 t0 = time.perf_counter()
@@ -200,8 +201,6 @@ def main() -> int:
     for q, r in results.items():
         r["ratio_warm"] = round(r["sf10_call2"] / r["sf1_call2"], 2)
         r["ratio_cold"] = round(r["sf10_call1"] / r["sf1_call1"], 2)
-
-    from bench import _HOST_FLOOR_FACTOR, _HOST_REF_LINES_PER_SEC
 
     factor = (
         sum(host_samples) / len(host_samples) / _HOST_REF_LINES_PER_SEC

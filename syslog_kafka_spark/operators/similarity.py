@@ -80,9 +80,26 @@ def _rank_topk(scored: DataFrame, k: int, round_to: int | None) -> DataFrame:
     return out
 
 
+def _check_sides(
+    corpus: DataFrame | None,
+    queries: DataFrame | None,
+    corpus_base: DataFrame | None,
+    query_base: DataFrame | None,
+) -> None:
+    """Each side of a top-k search takes exactly one of a raw frame and a
+    pre-built :func:`ann_tier_base` frame; a frame passed beside its base
+    would otherwise be ignored without a word."""
+    for frame, base, names in (
+        (corpus, corpus_base, "corpus/corpus_base"),
+        (queries, query_base, "queries/query_base"),
+    ):
+        if (frame is None) == (base is None):
+            raise ValueError(f"pass exactly one of {names}")
+
+
 def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
+    corpus: DataFrame | None = None,
+    queries: DataFrame | None = None,
     *,
     k: int = 5,
     id_col: str = "vec_id",
@@ -98,11 +115,12 @@ def cosine_topk(
     the final per-query top-k window over Q x N candidate rows (bounded by
     pushing the rank filter — Spark plans it as a WindowGroupLimit).
 
-    ``corpus_base``/``query_base``: optional pre-built
-    :func:`ann_tier_base` frames (ignore ``corpus``/``queries`` when
-    given) — id/vector/norm are read from the shared frame instead of
-    recomputed, same expressions, bit-identical scores.
+    ``corpus_base``/``query_base``: pre-built :func:`ann_tier_base` frames,
+    each passed instead of ``corpus``/``queries`` — id/vector/norm are
+    read from the shared frame instead of recomputed, same expressions,
+    bit-identical scores.
     """
+    _check_sides(corpus, queries, corpus_base, query_base)
     if query_base is not None:
         q = query_base.select(
             F.col("_id").alias("query_id"),
@@ -367,10 +385,10 @@ def blocked_assignment(
 
 
 def srp_topk_frozen(
-    corpus: DataFrame,
-    queries: DataFrame,
-    planes: list[list[list[float]]],
+    corpus: DataFrame | None = None,
+    queries: DataFrame | None = None,
     *,
+    planes: list[list[list[float]]],
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -381,11 +399,12 @@ def srp_topk_frozen(
     """Approximate top-k cosine neighbors: multi-table SRP LSH with
     FROZEN hyperplanes.
 
-    ``corpus_base``/``query_base``: optional pre-built
-    :func:`ann_tier_base` frames — the bucket arrays come off the shared
-    frame's ``_srp`` column (the SAME srp_buckets_frozen_udf output)
-    instead of a private corpus pass; explode/join/dedup/score are
-    unchanged, so the candidate set and scores are bit-identical. Candidates are the union over the tables'
+    ``corpus_base``/``query_base``: pre-built :func:`ann_tier_base`
+    frames, each passed instead of ``corpus``/``queries`` — the bucket
+    arrays come off the shared frame's ``_srp`` column (the SAME
+    srp_buckets_frozen_udf output) instead of a private corpus pass;
+    explode/join/dedup/score are unchanged, so the candidate set and
+    scores are bit-identical. Candidates are the union over the tables'
     bucket joins (recall ≈ 1-(1-p^planes)^tables where p = 1 - angle/pi),
     deduplicated before the exact cosine is computed — the bucket key
     bounds the join, no full Q x N scan. The whole query is a pure
@@ -393,6 +412,7 @@ def srp_topk_frozen(
     candidates AND scores. Signatures come from the
     sequential-accumulation pandas UDF (srp_buckets_frozen_udf), whose
     sign decisions are bit-identical to the oracle's list_reduce fold."""
+    _check_sides(corpus, queries, corpus_base, query_base)
     if corpus_base is not None:
         c = corpus_base.select(
             F.col("_id").alias("neighbor_id"),
@@ -460,10 +480,10 @@ def frozen_probe_lists(sims_col: Column, n_lists: int, n_probe: int) -> Column:
 
 
 def ivf_topk_frozen(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
+    corpus: DataFrame | None = None,
+    queries: DataFrame | None = None,
     *,
+    centroids: list[list[float]],
     k: int = 5,
     n_probe: int = 3,
     id_col: str = "vec_id",
@@ -484,15 +504,17 @@ def ivf_topk_frozen(
     deterministic and hash-gateable. The rescan still touches
     ~n_probe/n_lists of the corpus; no driver-side fit in the hot path,
     which is the warehouse deployment shape."""
+    _check_sides(corpus, queries, corpus_base, query_base)
     vec = F.col(vec_col)
     argmax = (
         F.array_position(F.col("_sims"), F.array_max(F.col("_sims"))) - 1
     ).cast("int")
     probes = frozen_probe_lists(F.col("_sims"), len(centroids), n_probe)
-    # corpus_base/query_base: pre-built ann_tier_base frames — the sims
-    # arrays come off the shared ``_sims`` column (the SAME frozen_sims_udf
-    # output); argmax assignment and probe selection are the identical
-    # expressions either way, so lists/candidates/scores are bit-equal.
+    # corpus_base/query_base: pre-built ann_tier_base frames passed instead
+    # of corpus/queries — the sims arrays come off the shared ``_sims``
+    # column (the SAME frozen_sims_udf output); argmax assignment and probe
+    # selection are the identical expressions either way, so
+    # lists/candidates/scores are bit-equal.
     if corpus_base is not None:
         c = (
             corpus_base.select(

@@ -1723,9 +1723,9 @@ def llm_ann_srp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from syslog_kafka_spark.operators.similarity import srp_topk_frozen
 
     emb = load_tables(spark, sf_dir).embeddings
-    return srp_topk_frozen(emb, emb.filter(F.col("vec_id") < 10), SRP_PLANES, k=5).orderBy(
-        "query_id", "rank"
-    )
+    return srp_topk_frozen(
+        emb, emb.filter(F.col("vec_id") < 10), planes=SRP_PLANES, k=5
+    ).orderBy("query_id", "rank")
 
 
 _TFIDF_TERMS = ["spark", "query", "data"]
@@ -1904,7 +1904,7 @@ def llm_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_tables(spark, sf_dir).embeddings
     return ivf_topk_frozen(
-        emb, emb.filter(F.col("vec_id") < 10), IVF_CENTROIDS, k=5, n_probe=4
+        emb, emb.filter(F.col("vec_id") < 10), centroids=IVF_CENTROIDS, k=5, n_probe=4
     ).orderBy("query_id", "rank")
 
 
@@ -2017,16 +2017,14 @@ def llm_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # referenced twice (truth aggregate + hit join) and the brute-force
     # scan is the audit's dominant cost — barrier it so it runs once
     exact = session_cache(
-        cosine_topk(None, None, k=5, corpus_base=base, query_base=qbase).select(
+        cosine_topk(k=5, corpus_base=base, query_base=qbase).select(
             "query_id", "neighbor_id"
         ),
         eager=False,
     )
-    srp = srp_topk_frozen(
-        None, None, SRP_PLANES, k=5, corpus_base=base, query_base=qbase
-    )
+    srp = srp_topk_frozen(planes=SRP_PLANES, k=5, corpus_base=base, query_base=qbase)
     ivf = ivf_topk_frozen(
-        None, None, IVF_CENTROIDS, k=5, n_probe=4, corpus_base=base, query_base=qbase
+        centroids=IVF_CENTROIDS, k=5, n_probe=4, corpus_base=base, query_base=qbase
     )
     tier_rows = ivf.select(
         F.lit("ivf").alias("tier"), "query_id", "neighbor_id"

@@ -8,15 +8,12 @@ master URL, which is only applied when no master is configured.
 
 from __future__ import annotations
 
-import logging
 import os
 import tempfile
 from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
-
-log = logging.getLogger(__name__)
 
 # Defaults chosen for the target workload (star-schema joins + wide scans):
 # - AQE re-plans shuffles at runtime (coalesces small partitions, converts
@@ -87,79 +84,24 @@ def warehouse_tmp(prefix: str) -> tempfile.TemporaryDirectory:
     )
 
 
-def _warm_python_workers(spark: SparkSession) -> None:
-    """Spin up the executor Python-worker fleet once at session build.
-
-    The first query that crosses the JVM→Python boundary otherwise pays
-    the whole fleet bring-up INSIDE its own wall time: one worker per
-    core, each forking off the daemon and importing pyspark + numpy +
-    pandas + pyarrow (measured r14 on local[32]: the first mapInArrow
-    pass ran 7.1 s vs 1.0 s for the identical second pass — ~6 s of
-    nothing but worker spin-up, landing on whichever user query happens
-    to run first). Warming at session build is the same policy the bench
-    already applies to the JVM and parquet footers: session bring-up is a
-    session cost, not a property of any query. One partition per core so
-    every worker slot forks and imports; the no-op kernel touches no
-    data."""
-
-    def _noop_kernel(batches):
-        import numpy  # noqa: F401 — fleet import warm-up
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-
-        yield from batches
-
-    try:
-        import pyspark.sql.functions as F
-        from pyspark.sql.pandas.functions import pandas_udf
-
-        n = spark.sparkContext.defaultParallelism
-        (
-            spark.range(0, n, 1, n)
-            .mapInArrow(_noop_kernel, "id long")
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-
-        # The scalar pandas-UDF path keys a SEPARATE worker pool (the
-        # factory keys on worker env, which differs from mapInArrow), so
-        # warm it too — it serves every ArrowEvalPython stage.
-        @pandas_udf("long")
-        def _warm_identity(s):
-            return s
-
-        (
-            spark.range(0, n, 1, n)
-            .select(_warm_identity(F.col("id")))
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-    except Exception as e:
-        # Warm-up must never fail a session build (e.g. a stripped-down
-        # runtime without pandas); the first Python query then pays the
-        # bring-up itself. The socket source and the encoders run on this
-        # same worker fleet, so say why it failed.
-        log.warning("Python worker warm-up failed: %s: %s", type(e).__name__, e)
-
-
 def get_spark(app_name: str = "syslog-kafka-spark", **overrides: str) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults.
+    """Build (or reuse) a SparkSession with engine defaults. Runs no job:
+    a caller that times a query's first run warms the session itself
+    (``bench.first_touch``).
 
-    ``overrides`` take precedence over defaults. The master URL comes from
-    ``$SPARK_GRAFT_CPUS`` (``local[N]``) when launching a fresh local JVM.
+    ``overrides`` take precedence over defaults. The master URL is
+    ``$SPARK_MASTER``, else ``local[$SPARK_GRAFT_CPUS]`` (all cores when
+    unset). An active session is returned as is.
     """
-    builder = SparkSession.builder.appName(app_name)
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
+    builder = SparkSession.builder.appName(app_name).master(
+        os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    )
     conf = dict(_DEFAULTS)
     conf.update(overrides)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    _warm_python_workers(spark)
-    return spark
+    return builder.getOrCreate()

@@ -5,7 +5,7 @@ through the SAME pandas-path canonicalizer the driver simulation uses
 (scripts/driver_sim.canon_rows — imported, not duplicated), so any
 driver-contract drift (integer/float dtype rendering, unsortable
 list/struct columns, date-vs-midnight-timestamp equivalence) fails here
-in the 568-test suite, not only in the separate sim run.
+in the test suite, not only in the separate sim run.
 """
 
 from __future__ import annotations

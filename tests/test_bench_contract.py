@@ -210,3 +210,20 @@ def test_sf1_cipher_preserves_dup_structure():
     w2 = set(a.translate(t2).split())
     shared = {w for w in w1 & w2 if any(c.isalpha() for c in w)}
     assert not shared
+
+
+def test_python_warmup_failure_is_logged_not_raised(caplog):
+    """A failed worker warm-up must not fail the first touch, and must
+    not be silent either: it logs one warning naming the error."""
+    from bench import _warm_python_workers
+
+    class BrokenSession:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("no executors")
+
+    with caplog.at_level("WARNING", logger="bench"):
+        _warm_python_workers(BrokenSession())
+    assert [r.getMessage() for r in caplog.records] == [
+        "Python worker warm-up failed: RuntimeError: no executors"
+    ]

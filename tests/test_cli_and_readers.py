@@ -334,18 +334,71 @@ def test_structured_data_map_decode(spark):
     assert sd[5] == {}  # element with no params → empty map
 
 
-def test_python_warmup_failure_is_logged_not_raised(caplog):
-    """A failed worker warm-up must not fail the session build, and must
-    not be silent either: it logs one warning naming the error."""
-    from syslog_kafka_spark.session import _warm_python_workers
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records every call and
+    hands back ``session`` from ``getOrCreate``."""
 
-    class BrokenSession:
-        @property
-        def sparkContext(self):
-            raise RuntimeError("no executors")
+    def __init__(self, session):
+        self.session = session
+        self.calls = []
 
-    with caplog.at_level("WARNING", logger="syslog_kafka_spark.session"):
-        _warm_python_workers(BrokenSession())
-    assert [r.getMessage() for r in caplog.records] == [
-        "Python worker warm-up failed: RuntimeError: no executors"
-    ]
+    def appName(self, name):
+        self.calls.append(("appName", name))
+        return self
+
+    def master(self, url):
+        self.calls.append(("master", url))
+        return self
+
+    def config(self, key, value):
+        self.calls.append(("config", key, value))
+        return self
+
+    def getOrCreate(self):
+        self.calls.append(("getOrCreate",))
+        return self.session
+
+
+class _UntouchedSession:
+    """A sentinel session that records any attribute read on it."""
+
+    def __init__(self):
+        object.__setattr__(self, "reads", [])
+
+    def __getattribute__(self, name):
+        if name != "reads":
+            object.__getattribute__(self, "reads").append(name)
+        return object.__getattribute__(self, name)
+
+
+def test_get_spark_builds_and_runs_nothing(monkeypatch):
+    """get_spark merges the overrides over the defaults, picks the master
+    from $SPARK_MASTER (else local[$SPARK_GRAFT_CPUS]) and returns what the
+    builder made without touching it; an active session comes back as is
+    and no builder is called. No JVM: the builder is a recording fake."""
+    from pyspark.sql import SparkSession
+
+    from syslog_kafka_spark import session as session_mod
+
+    def run(active, **overrides):
+        built = _UntouchedSession()
+        builder = _RecordingBuilder(built)
+        monkeypatch.setattr(SparkSession, "getActiveSession", staticmethod(lambda: active))
+        monkeypatch.setattr(SparkSession, "builder", builder)
+        return session_mod.get_spark("contract", **overrides), built, builder.calls
+
+    monkeypatch.delenv("SPARK_MASTER", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    out, built, calls = run(None, **{"spark.sql.shuffle.partitions": "7"})
+    assert out is built and built.reads == []
+    confs = {c[1]: c[2] for c in calls if c[0] == "config"}
+    assert confs == {**session_mod._DEFAULTS, "spark.sql.shuffle.partitions": "7"}
+    assert ("master", "local[3]") in calls and ("appName", "contract") in calls
+
+    monkeypatch.setenv("SPARK_MASTER", "spark://head:7077")
+    _, built, calls = run(None)
+    assert ("master", "spark://head:7077") in calls and built.reads == []
+
+    active = _UntouchedSession()
+    out, _, calls = run(active)
+    assert out is active and calls == [] and active.reads == []

@@ -5,6 +5,7 @@ reference-parity of the FNV-1a partitioner."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from syslog_kafka_spark.functions.hashes import fnv1a32, fnv1a32_partition
 from syslog_kafka_spark.operators.dedup import cached_minhash_pairs, exact_dedup, simhash64
@@ -59,8 +60,8 @@ def test_frozen_ann_recall_vs_bruteforce(spark, sf_dir):
     exact = cosine_topk(emb, queries, k=5).collect()
     exact_set = {(r.query_id, r.neighbor_id) for r in exact}
     exact_scores = {(r.query_id, r.neighbor_id): r.score for r in exact}
-    srp = srp_topk_frozen(emb, queries, SRP_PLANES, k=5).collect()
-    ivf = ivf_topk_frozen(emb, queries, IVF_CENTROIDS, k=5, n_probe=4).collect()
+    srp = srp_topk_frozen(emb, queries, planes=SRP_PLANES, k=5).collect()
+    ivf = ivf_topk_frozen(emb, queries, centroids=IVF_CENTROIDS, k=5, n_probe=4).collect()
     srp_set = {(r.query_id, r.neighbor_id) for r in srp}
     ivf_set = {(r.query_id, r.neighbor_id) for r in ivf}
     # Random (near-orthogonal) vectors are the worst case for both
@@ -654,3 +655,27 @@ def test_bpe_merge_apply_fold_is_greedy_left_to_right(spark):
     got = {r["word"]: r["syms"] for r in apply(v2, "ab", "y").collect()}
     assert got["xaby"] == ["x", "aby"]
     assert got["abab"] == ["ab", "ab"]  # no 'y' neighbor: untouched
+
+
+def test_topk_side_takes_a_frame_or_a_base_not_both():
+    """Each side of a top-k search takes exactly one of a raw frame and
+    an ann_tier_base frame: a frame passed beside its base would be
+    ignored without a word, and neither leaves nothing to search. The
+    check runs before any plan is built, so placeholders do."""
+    from syslog_kafka_spark.operators.similarity import ivf_topk_frozen, srp_topk_frozen
+
+    frame, base = object(), object()
+    searches = (
+        cosine_topk,
+        lambda **kw: srp_topk_frozen(planes=[], **kw),
+        lambda **kw: ivf_topk_frozen(centroids=[], **kw),
+    )
+    for search in searches:
+        with pytest.raises(ValueError, match="queries/query_base"):
+            search(corpus=frame, queries=frame, query_base=base)
+        with pytest.raises(ValueError, match="corpus/corpus_base"):
+            search(corpus=frame, corpus_base=base, queries=frame)
+        with pytest.raises(ValueError, match="corpus/corpus_base"):
+            search(queries=frame)
+        with pytest.raises(ValueError, match="queries/query_base"):
+            search(corpus_base=base)
