@@ -9,24 +9,39 @@ Reference parity R1-R3 (/root/reference syslog/syslog_producer.go):
   a downstream operator, sources/syslog_parse.py).
 
 Implemented with the PySpark 4 Python Data Source API
-(pyspark.sql.datasource), columnar from the socket to the executor. A
-background listener thread reads raw chunks, frames them on ``\\n`` only
-(the reference's bufio.Scanner), and appends each chunk's lines with one
-arrival stamp (epoch µs) to two parallel lists. A microbatch's partition is
-one ``pyarrow.RecordBatch`` built from slices of those lists; ``read``
-yields it as is, so no line is touched by Python after framing.
+(pyspark.sql.datasource) as a ``SimpleDataSourceStreamReader``, columnar
+from the socket to the JVM. A background listener thread reads raw chunks,
+frames them on ``\\n`` only (the reference's bufio.Scanner), and appends
+each chunk's lines with one arrival stamp (epoch µs) to two parallel lists.
+The planner process that owns the listener serves each microbatch: when
+Spark asks for the latest offset, ``read(start)`` takes every pending line
+out of the buffer as one ``pyarrow.RecordBatch``, and PySpark ships that
+batch to the JVM with the batch's plan. No executor Python task runs, and
+no line is touched by Python after framing.
 
-Offsets are ``{"epoch": <listener id>, "index": n}``: ``n`` is an absolute
-index into the buffer of the listener named by ``epoch``, which is new in
-every process (and every restart of the query). Delivery contract:
+Batch rule (the reference's accumulator flushes by size or age,
+record_accumulator.go:127-134): ``read`` serves the pending lines once the
+newest is ``QUIET`` old (the sender paused, e.g. a burst ended) or the
+oldest is ``LINGER`` old; otherwise it serves nothing and Spark polls
+again. It never sleeps. At ``MAX_PENDING_LINES`` pending lines a TCP
+handler stops reading, so the kernel pushes back on the sender; UDP drops
+the datagram and counts it. The bound also caps a batch's size.
+
+Offsets are ``{"epoch": <listener id>, "index": n}``: ``n`` counts the
+lines the listener named by ``epoch`` has buffered since it started, and
+the epoch is new in every process (and every restart of the query).
+Delivery contract:
 - Lines buffered in a process that dies, or in a listener that stops,
-  before their batch commits are lost. That is the only loss: every line a
-  live listener buffers is delivered by the next batch that ends in its
-  epoch, including the first batch after a restart, whose checkpointed
-  start names the old epoch and so reads from this buffer's base.
-- No line is delivered twice by the source. A replayed batch whose end
-  names a dead epoch reads no rows, since its lines died with that
-  process; a committed prefix is trimmed and never re-read.
+  before their batch commits are lost. That is the only loss: a served
+  batch stays in PySpark's prefetch cache until it commits, and every
+  line a live listener buffers is served by a later batch, including the
+  first batch after a restart, whose checkpointed start names the old
+  epoch.
+- No line is delivered twice by the source: ``read`` drains what it
+  serves. ``readBetweenOffsets`` runs in an executor only when the cache
+  misses, i.e. for the replay after a restart of a batch whose end names
+  a dead epoch; its lines died with that process, so it reads nothing and
+  never touches a listener.
 A socket is not a replayable source, so this is not Structured Streaming's
 exactly-once; the sink's checkpoint still makes each delivered batch land
 once. The reference has the same loss window (unbuffered channel, no WAL).
@@ -47,7 +62,7 @@ import time
 import uuid
 
 import pyarrow as pa
-from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -55,55 +70,73 @@ from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
 
 ARROW_SCHEMA = to_arrow_schema(SYSLOG_MESSAGE_SCHEMA)
 CHUNK_BYTES = 65536
+# The batch rule: serve the pending lines once the newest has waited QUIET
+# seconds (the sender paused) or the oldest LINGER seconds.
+QUIET = 0.05
+LINGER = 0.5
+# Pending lines at which a TCP handler stops reading and UDP drops; above
+# the largest burst the ingest benchmark sends (55,000 lines).
+MAX_PENDING_LINES = 100_000
 
 
 class _LineBuffer:
-    """Thread-safe columnar line buffer shared with the listener.
+    """Thread-safe columnar buffer of the lines no batch has taken yet,
+    shared with the listener.
 
     ``lines`` and ``micros`` (arrival time, epoch µs) are parallel lists.
-    Offsets handed to Spark are ABSOLUTE (monotone since listener start);
-    committed prefixes are dropped and the remaining lines rebased via
-    ``_base``, so a long-running collector holds only uncommitted lines in
-    memory rather than growing without bound. ``epoch`` names this buffer
-    in offsets, so an offset from another process is never read as one of
-    ours."""
+    ``count`` is the number of lines buffered since the listener started,
+    the absolute offset one past the newest; ``take`` hands the pending
+    lines to a batch, so memory holds only lines not yet served. ``epoch``
+    names this buffer in offsets, so an offset from another process is
+    never read as one of ours."""
 
     def __init__(self) -> None:
         self.epoch = uuid.uuid4().hex
+        self.count = 0
+        self.dropped = 0  # UDP datagrams dropped at MAX_PENDING_LINES
         self._lines: list[str] = []
         self._micros: list[int] = []
-        self._base = 0  # absolute offset of _lines[0]
-        self._lock = threading.Lock()
+        self._closed = False
+        self._cond = threading.Condition()
 
-    def extend(self, lines: list[str], micros: int) -> None:
-        """Append one received chunk's lines, all stamped ``micros``."""
-        with self._lock:
-            self._lines += lines
-            self._micros += [micros] * len(lines)
+    def extend(self, lines: list[str], micros: int, wait: bool = True) -> None:
+        """Append one received chunk's lines, all stamped ``micros``. A
+        chunk that would take the pending lines past MAX_PENDING_LINES
+        waits for ``take`` (or is dropped, if not ``wait``); a chunk alone
+        larger than the bound goes into an empty buffer. Once the buffer
+        is closed nothing is appended."""
+        with self._cond:
+            while self._lines and len(self._lines) + len(lines) > MAX_PENDING_LINES and not self._closed:
+                if not wait:
+                    self.dropped += 1
+                    return
+                self._cond.wait()
+            if not self._closed:
+                self._lines += lines
+                self._micros += [micros] * len(lines)
+                self.count += len(lines)
 
-    def snapshot_len(self) -> int:
-        """Absolute offset one past the newest buffered line."""
-        with self._lock:
-            return self._base + len(self._lines)
+    def take(self) -> tuple[list[str], list[int], int]:
+        """(lines, micros, count): every pending line once the batch rule
+        holds (the newest is QUIET old or the oldest LINGER old), else
+        none; ``count`` is the absolute offset after them."""
+        with self._cond:
+            now = time.time_ns() // 1000
+            if not self._lines or (
+                now - self._micros[-1] < QUIET * 1e6 and now - self._micros[0] < LINGER * 1e6
+            ):
+                return [], [], self.count
+            lines, micros = self._lines, self._micros
+            self._lines, self._micros = [], []
+            self._cond.notify_all()
+            return lines, micros, self.count
 
-    def range(self, start: int, end: int) -> tuple[list[str], list[int]]:
-        """(lines, micros) at absolute offsets [start, end), clamped to
-        what is still buffered."""
-        with self._lock:
-            lo = max(start - self._base, 0)
-            hi = max(end - self._base, 0)
-            return self._lines[lo:hi], self._micros[lo:hi]
-
-    def truncate_to(self, offset: int) -> None:
-        """Drop lines below the committed low-water mark ``offset``.
-        Only ever called with offsets Spark has durably committed, so the
-        dropped prefix can never be replayed."""
-        with self._lock:
-            drop = min(max(offset - self._base, 0), len(self._lines))
-            if drop:
-                del self._lines[:drop]
-                del self._micros[:drop]
-                self._base += drop
+    def close(self) -> None:
+        """Append nothing more, and wake every handler waiting in
+        ``extend``."""
+        with self._cond:
+            self._closed = True
+            self._cond.notify_all()
 
 
 class _Framer:
@@ -113,10 +146,12 @@ class _Framer:
     lines. The partial last line is carried as bytes to the next chunk and
     only complete lines are decoded (UTF-8, invalid bytes → U+FFFD), so a
     character cut by a chunk boundary survives. Each chunk's lines get one
-    arrival stamp, taken when the chunk is fed."""
+    arrival stamp, taken when the chunk is fed. ``wait`` is the buffer's
+    choice at its bound: wait (TCP) or drop (UDP)."""
 
-    def __init__(self, buffer: _LineBuffer) -> None:
+    def __init__(self, buffer: _LineBuffer, wait: bool = True) -> None:
         self._buffer = buffer
+        self._wait = wait
         self._tail = b""
 
     def feed(self, chunk: bytes) -> None:
@@ -130,7 +165,7 @@ class _Framer:
             text = data[:cut].decode("utf-8", errors="replace").replace("\r\n", "\n")
             lines = list(filter(None, text.split("\n")))
             if lines:
-                self._buffer.extend(lines, micros)
+                self._buffer.extend(lines, micros, self._wait)
 
     def close(self) -> None:
         """End of stream: a non-empty unterminated last line is a line."""
@@ -194,7 +229,7 @@ def start_udp_listener(host: str, port: int, buffer: _LineBuffer):
     stop = threading.Event()
 
     def loop() -> None:
-        framer = _Framer(buffer)
+        framer = _Framer(buffer, wait=False)
         while not stop.is_set():
             try:
                 data, _ = sock.recvfrom(65535)
@@ -213,13 +248,6 @@ def start_udp_listener(host: str, port: int, buffer: _LineBuffer):
             sock.close()
 
     return _Server()
-
-
-class _BatchPartition(InputPartition):
-    """One microbatch's lines as a RecordBatch; pickles as Arrow buffers."""
-
-    def __init__(self, batch: pa.RecordBatch) -> None:
-        self.batch = batch
 
 
 def _record_batch(lines: list[str], micros: list[int], source: str) -> pa.RecordBatch:
@@ -255,12 +283,12 @@ def _get_listener(protocol: str, host: str, port: int) -> tuple[object, _LineBuf
         return _LISTENERS[key]
 
 
-class SyslogStreamReader(DataSourceStreamReader):
+class SyslogStreamReader(SimpleDataSourceStreamReader):
     """Microbatch reader over the listener buffer.
 
-    Offsets name the listener's epoch and an absolute index into its
-    buffer. The listener lives in the planner's process, and partitions
-    ship the lines to executors as one RecordBatch.
+    Offsets name the listener's epoch and the count of lines it has
+    buffered. The listener lives in the planner's process, where ``read``
+    serves each batch as one RecordBatch.
     """
 
     def __init__(self, schema: StructType, options: dict) -> None:
@@ -281,40 +309,34 @@ class SyslogStreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"epoch": self._listener().epoch, "index": 0}
 
-    def latestOffset(self) -> dict:
+    def read(self, start: dict):
+        # Every pending line follows ``start``: an offset of this epoch is
+        # the end of the last batch served, and a start from a dead
+        # listener (the first batch after a restart) precedes all this
+        # listener buffered. PySpark copies the returned iterator, so it
+        # must be a list iterator, not a generator.
         buffer = self._listener()
-        return {"epoch": buffer.epoch, "index": buffer.snapshot_len()}
+        lines, micros, count = buffer.take()
+        if not lines:
+            return iter(()), start
+        return iter([_record_batch(lines, micros, self._hostname)]), {"epoch": buffer.epoch, "index": count}
 
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        buffer = self._listener()
-        if end.get("epoch") != buffer.epoch:
-            # a replayed batch of a dead listener: its lines died with it
-            lines, micros = [], []
-        else:
-            # a start from a dead listener (the first batch after a
-            # restart) reads all this listener still holds
-            lo = start["index"] if start.get("epoch") == buffer.epoch else 0
-            lines, micros = buffer.range(lo, end["index"])
-        return [_BatchPartition(_record_batch(lines, micros, self._hostname))]
-
-    def read(self, partition: _BatchPartition):
-        yield partition.batch
-
-    def commit(self, end: dict) -> None:
-        # Batches at or below `end` are durably committed by the engine and
-        # will never be replanned, so their lines are dropped — bounded
-        # memory for long-running collectors. In-flight (uncommitted)
-        # batches stay replayable: only the committed prefix is trimmed.
-        buffer = self._listener()
-        if end.get("epoch") == buffer.epoch:
-            buffer.truncate_to(end["index"])
+    def readBetweenOffsets(self, start: dict, end: dict):
+        # Runs in an executor, only to replay a batch the prefetch cache
+        # does not hold: one whose end names a dead listener, whose lines
+        # died with it. It must not bind a listener here.
+        return iter(())
 
     def stop(self) -> None:
+        # PySpark's wrapper does not forward stop(); at query level the
+        # planner process exits on query.stop(), which frees the port.
         key = (self._protocol, self._host, self._port)
         with _LISTENERS_LOCK:
             entry = _LISTENERS.pop(key, None)
         if entry is not None:
-            entry[0].shutdown()
+            server, buffer = entry
+            buffer.close()
+            server.shutdown()
 
 
 class SyslogDataSource(DataSource):
@@ -327,5 +349,5 @@ class SyslogDataSource(DataSource):
     def schema(self) -> StructType:
         return SYSLOG_MESSAGE_SCHEMA
 
-    def streamReader(self, schema: StructType) -> SyslogStreamReader:
+    def simpleStreamReader(self, schema: StructType) -> SyslogStreamReader:
         return SyslogStreamReader(schema, dict(self.options))

@@ -57,30 +57,22 @@ def test_foreach_batch_collects(spark, tmp_path):
     assert sum(seen) == 5
 
 
-def test_line_buffer_commit_trims_with_absolute_offsets():
-    """commit() low-water-mark trimming: committed prefixes are freed but
-    absolute offsets keep working (no index shift for in-flight batches)."""
+def test_line_buffer_drain_keeps_absolute_offsets():
+    """take() drains what it serves: served lines are freed but the
+    absolute count keeps growing (offsets never shift)."""
     from syslog_kafka_spark.sources.syslog_source import _LineBuffer
 
     buf = _LineBuffer()
-    buf.extend([f"line{i}" for i in range(10)], 7)
-    assert buf.snapshot_len() == 10
-    assert buf.range(3, 6) == (["line3", "line4", "line5"], [7, 7, 7])
-
-    buf.truncate_to(6)  # batches [0,6) committed
-    assert buf.snapshot_len() == 10  # absolute offsets unchanged
-    assert buf.range(6, 10)[0] == [f"line{i}" for i in range(6, 10)]
-    assert buf.range(0, 6) == ([], [])  # committed prefix is gone
-    assert len(buf._lines) == 4 and len(buf._micros) == 4  # memory actually freed
+    buf.extend([f"line{i}" for i in range(10)], 7)  # stamped long ago: served
+    assert buf.count == 10
+    assert buf.take() == ([f"line{i}" for i in range(10)], [7] * 10, 10)
+    assert buf.count == 10  # absolute offsets unchanged
+    assert buf._lines == [] and buf._micros == []  # memory actually freed
+    assert buf.take() == ([], [], 10)  # nothing is served twice
 
     buf.extend(["line10"], 8)
-    assert buf.snapshot_len() == 11
-    assert buf.range(10, 11) == (["line10"], [8])
-    # idempotent / stale commits are safe
-    buf.truncate_to(3)
-    assert buf.snapshot_len() == 11
-    buf.truncate_to(11)
-    assert buf.snapshot_len() == 11 and buf.range(0, 11) == ([], [])
+    assert buf.count == 11
+    assert buf.take() == (["line10"], [8], 11)
 
 
 def _framed(*chunks: bytes, close: bool = True) -> list[str]:
@@ -92,7 +84,7 @@ def _framed(*chunks: bytes, close: bool = True) -> list[str]:
         framer.feed(chunk)
     if close:
         framer.close()
-    return buf.range(0, buf.snapshot_len())[0]
+    return buf._lines
 
 
 def test_framer_splits_on_newline_only():
@@ -127,7 +119,7 @@ def _live_reader(protocol: str):
     reader = SyslogStreamReader(
         SYSLOG_MESSAGE_SCHEMA, {"host": "127.0.0.1", "port": str(port), "protocol": protocol}
     )
-    reader.latestOffset()  # binds the listener
+    reader.initialOffset()  # binds the listener
     return reader, port
 
 
@@ -140,17 +132,16 @@ def _send(protocol: str, port: int, payload: bytes) -> None:
             s.sendto(payload, ("127.0.0.1", port))
 
 
-def _wait_buffered(reader, n: int) -> dict:
+def _wait_buffered(reader, n: int) -> None:
     deadline = time.time() + 20
-    while (end := reader.latestOffset())["index"] < n:
-        assert time.time() < deadline, f"listener buffered {end} of {n} lines"
+    while (count := reader._listener().count) < n:
+        assert time.time() < deadline, f"listener buffered {count} of {n} lines"
         time.sleep(0.01)
-    return end
 
 
-def _table(reader, start: dict, end: dict):
-    """The rows of partitions(start, end) as the Python worker hands them
-    to the JVM (records_to_arrow_batches), as one Arrow table."""
+def _table(rows):
+    """``rows`` as PySpark hands them to the JVM (records_to_arrow_batches),
+    as one Arrow table."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
@@ -158,9 +149,19 @@ def _table(reader, start: dict, end: dict):
     from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
     from syslog_kafka_spark.sources.syslog_source import SyslogDataSource
 
-    (part,) = reader.partitions(start, end)
-    batches = records_to_arrow_batches(reader.read(part), 10_000, SYSLOG_MESSAGE_SCHEMA, SyslogDataSource({}))
+    batches = records_to_arrow_batches(rows, 10_000, SYSLOG_MESSAGE_SCHEMA, SyslogDataSource({}))
     return pa.Table.from_batches(list(batches), schema=to_arrow_schema(SYSLOG_MESSAGE_SCHEMA))
+
+
+def _serve(reader, start: dict):
+    """Poll read(start) as the planner does until it serves a batch; that
+    batch as one Arrow table, and its end offset."""
+    deadline = time.time() + 20
+    while (got := reader.read(start))[1] == start:
+        assert time.time() < deadline, f"nothing served after {start}"
+        time.sleep(0.01)
+    rows, end = got
+    return _table(rows), end
 
 
 @pytest.mark.parametrize("protocol", ["tcp", "udp"])
@@ -169,8 +170,10 @@ def test_listener_frames_the_same_over_tcp_and_udp(protocol):
     try:
         start = reader.initialOffset()
         _send(protocol, port, "a\x0cb\u2028c\r\n\nlast".encode())
-        end = _wait_buffered(reader, 2)
-        assert _table(reader, start, end).column("line").to_pylist() == ["a\x0cb\u2028c", "last"]
+        _wait_buffered(reader, 2)
+        table, end = _serve(reader, start)
+        assert table.column("line").to_pylist() == ["a\x0cb\u2028c", "last"]
+        assert end == {"epoch": start["epoch"], "index": 2}
     finally:
         reader.stop()
 
@@ -188,9 +191,9 @@ def test_restart_delivers_every_new_line_once():
     try:
         a_start = a.initialOffset()
         _send("tcp", port_a, "".join(f"{l}\n" for l in _numbered(0, 100)).encode())
-        a_end = _wait_buffered(a, 100)
-        assert _table(a, a_start, a_end).num_rows == 100
-        a.commit(a_end)
+        _wait_buffered(a, 100)
+        table, a_end = _serve(a, a_start)
+        assert table.num_rows == 100
     finally:
         a.stop()
 
@@ -198,14 +201,17 @@ def test_restart_delivers_every_new_line_once():
     try:
         # an eager sender: all 300 lines arrive before the first poll
         _send("tcp", port_b, "".join(f"{l}\n" for l in _numbered(100, 400)).encode())
-        b_end = _wait_buffered(b, 300)
-        assert _table(b, a_end, b_end).column("line").to_pylist() == _numbered(100, 400)
-        assert _table(b, {"index": 100}, b_end).num_rows == 300  # an offset with no epoch
-        assert _table(b, a_start, a_end).num_rows == 0  # the replayed uncommitted batch
-        b.commit(a_end)  # a foreign commit trims nothing
-        assert _table(b, a_end, b_end).num_rows == 300
-        b.commit(b_end)
-        assert _table(b, b_end, b.latestOffset()).num_rows == 0
+        _wait_buffered(b, 300)
+        table, b_end = _serve(b, a_end)
+        assert table.column("line").to_pylist() == _numbered(100, 400)
+        assert b_end == {"epoch": b.initialOffset()["epoch"], "index": 300}
+        assert _table(b.readBetweenOffsets(a_start, a_end)).num_rows == 0  # the replayed uncommitted batch
+        rows, end = b.read(b_end)
+        assert end == b_end and _table(rows).num_rows == 0  # nothing is served twice
+        _send("tcp", port_b, "".join(f"{l}\n" for l in _numbered(400, 405)).encode())
+        _wait_buffered(b, 305)
+        table, end = _serve(b, {"index": 100})  # an offset with no epoch
+        assert table.column("line").to_pylist() == _numbered(400, 405) and end["index"] == 305
     finally:
         b.stop()
 
@@ -223,11 +229,11 @@ def test_received_ts_is_the_stamped_instant_in_any_local_zone():
         start = reader.initialOffset()
         before = time.time_ns() // 1000
         _send("tcp", port, b"<13>Aug 13 03:38:00 web01 nginx[912]: zoned\n")
-        end = _wait_buffered(reader, 1)
+        _wait_buffered(reader, 1)
         after = time.time_ns() // 1000
-        (got,) = _table(reader, start, end).column("received_ts").cast("int64").to_pylist()
+        table, _ = _serve(reader, start)
+        (got,) = table.column("received_ts").cast("int64").to_pylist()
         assert before <= got <= after
-        assert [got] == reader._listener().range(0, 1)[1]
     finally:
         reader.stop()
         if old is None:
@@ -237,12 +243,23 @@ def test_received_ts_is_the_stamped_instant_in_any_local_zone():
         time.tzset()
 
 
+def _buffered_reader(monkeypatch):
+    """A reader over a fresh buffer, with no listener; (buffer, reader)."""
+    from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
+    from syslog_kafka_spark.sources import syslog_source
+
+    buf = syslog_source._LineBuffer()
+    monkeypatch.setattr(syslog_source, "_get_listener", lambda *endpoint: (None, buf))
+    return buf, syslog_source.SyslogStreamReader(SYSLOG_MESSAGE_SCHEMA, {})
+
+
 @pytest.mark.parametrize("lines", [SYSLOG_CORPUS, ["héllo wörld", "日本語のログ", "emoji 🚀 \ufffd"], []],
                          ids=["corpus", "non_ascii", "empty"])
 def test_arrow_partition_equals_the_tuple_rows(monkeypatch, lines):
-    """Differential: the columnar partition equals the (line, source,
-    received) tuples the row path yielded, run through PySpark's own
-    tuple→Arrow conversion; the batch carries the exact Arrow schema."""
+    """Differential: the columnar batch read(start) serves equals the
+    (line, source, received) tuples the row path yielded, run through
+    PySpark's own tuple→Arrow conversion; the batch carries the exact Arrow
+    schema, and an empty buffer serves nothing."""
     from datetime import datetime, timedelta, timezone
 
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -251,22 +268,28 @@ def test_arrow_partition_equals_the_tuple_rows(monkeypatch, lines):
     from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
     from syslog_kafka_spark.sources import syslog_source
 
-    buf = syslog_source._LineBuffer()
+    buf, reader = _buffered_reader(monkeypatch)
+    micros = []
     for i in range(0, len(lines), 4):  # chunks of 4 lines, one stamp each
-        buf.extend(lines[i : i + 4], 1_700_000_000_000_000 + 1_000_003 * i)
-    monkeypatch.setattr(syslog_source, "_get_listener", lambda *endpoint: (None, buf))
-    reader = syslog_source.SyslogStreamReader(SYSLOG_MESSAGE_SCHEMA, {})
+        chunk, stamp = lines[i : i + 4], 1_700_000_000_000_000 + 1_000_003 * i
+        buf.extend(chunk, stamp)
+        micros += [stamp] * len(chunk)
 
-    (part,) = reader.partitions(reader.initialOffset(), reader.latestOffset())
-    (batch,) = reader.read(part)
+    start = reader.initialOffset()
+    rows, end = reader.read(start)
+    batches = list(rows)
+    if not lines:
+        assert batches == [] and end == start
+        return
+    (batch,) = batches
     assert batch.schema == to_arrow_schema(SYSLOG_MESSAGE_SCHEMA)
+    assert end == {"epoch": buf.epoch, "index": len(lines)}
 
     epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
-    got_lines, got_micros = buf.range(0, len(lines))
-    rows = [(l, socket.gethostname(), epoch + timedelta(microseconds=us)) for l, us in zip(got_lines, got_micros)]
-    want = list(records_to_arrow_batches(iter(rows), 10_000, SYSLOG_MESSAGE_SCHEMA, syslog_source.SyslogDataSource({})))
+    tuples = [(l, socket.gethostname(), epoch + timedelta(microseconds=us)) for l, us in zip(lines, micros)]
+    want = list(records_to_arrow_batches(iter(tuples), 10_000, SYSLOG_MESSAGE_SCHEMA, syslog_source.SyslogDataSource({})))
     assert batch.to_pylist() == [r for b in want for r in b.to_pylist()]
-    assert got_lines == list(lines)
+    assert batch.column("line").to_pylist() == list(lines)
 
 
 @pytest.mark.parametrize("protocol", ["tcp", "udp"])
@@ -582,12 +605,327 @@ def test_tcp_stop_frees_the_port_and_ends_open_connections():
             except OSError:
                 break
         time.sleep(0.2)
-    assert buffer.snapshot_len() == 1
+    assert buffer.count == 1
 
     again = SyslogStreamReader(
         SYSLOG_MESSAGE_SCHEMA, {"host": "127.0.0.1", "port": str(port), "protocol": "tcp"}
     )
     try:
-        again.latestOffset()  # binds the same port
+        again.initialOffset()  # binds the same port
     finally:
         again.stop()
+
+
+def test_read_serves_a_batch_when_the_sender_is_quiet_or_the_oldest_line_lingered(monkeypatch):
+    """The batch rule, through PySpark's own wrapper (the planner's
+    latestOffset → read(start) → prefetch cache): young lines from a busy
+    sender wait; every pending line is served once the newest is QUIET old
+    or the oldest LINGER old; a read that serves rows always advances."""
+    from pyspark.sql.datasource_internal import _SimpleStreamReaderWrapper
+
+    from syslog_kafka_spark.sources import syslog_source
+
+    buf, reader = _buffered_reader(monkeypatch)
+    planner = _SimpleStreamReaderWrapper(reader)
+    now = time.time_ns() // 1000
+    second = 1_000_000
+
+    def lines_between(start, end):
+        return _table(planner.getCache(start, end)).column("line").to_pylist()
+
+    start = planner.initialOffset()
+    assert planner.latestOffset() == start  # nothing buffered
+
+    # young lines, busy sender: served by neither rule
+    monkeypatch.setattr(syslog_source, "QUIET", 3600.0)
+    monkeypatch.setattr(syslog_source, "LINGER", 3600.0)
+    buf.extend(["a", "b"], now)
+    assert planner.latestOffset() == start
+    assert buf.count == 2 and buf._lines == ["a", "b"]
+
+    # the oldest lingered: all pending lines, the young ones too
+    monkeypatch.setattr(syslog_source, "LINGER", 2.0)
+    buf._micros[:] = [now - 3 * second] * 2
+    buf.extend(["c"], now)
+    end = planner.latestOffset()
+    assert end == {"epoch": buf.epoch, "index": 3}
+    assert lines_between(start, end) == ["a", "b", "c"] and buf._lines == []
+
+    # the sender went quiet: served though no line lingered
+    monkeypatch.setattr(syslog_source, "QUIET", 1.0)
+    monkeypatch.setattr(syslog_source, "LINGER", 3600.0)
+    buf.extend(["d", "e"], now - 2 * second)
+    nxt = planner.latestOffset()
+    assert nxt == {"epoch": buf.epoch, "index": 5}
+    assert lines_between(end, nxt) == ["d", "e"]
+    assert lines_between(start, nxt) == ["a", "b", "c", "d", "e"]  # both cached batches
+
+    # with the real constants, lines stamped long ago are served at once
+    monkeypatch.undo()
+    monkeypatch.setattr(syslog_source, "_get_listener", lambda *endpoint: (None, buf))
+    buf.extend(["f"], now - int(2 * syslog_source.LINGER * second))
+    assert planner.latestOffset()["index"] == 6
+
+
+def test_read_between_offsets_never_touches_a_listener(monkeypatch):
+    """The executor path: a cache miss replays a batch of a dead listener,
+    whose lines died with it; it reads nothing and binds no socket."""
+    from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
+    from syslog_kafka_spark.sources import syslog_source
+
+    def no_listener(*endpoint):
+        raise AssertionError("readBetweenOffsets bound a listener")
+
+    monkeypatch.setattr(syslog_source, "_get_listener", no_listener)
+    reader = syslog_source.SyslogStreamReader(SYSLOG_MESSAGE_SCHEMA, {})
+    rows = reader.readBetweenOffsets({"epoch": "dead", "index": 0}, {"epoch": "dead", "index": 100})
+    assert _table(rows).num_rows == 0
+
+
+def test_full_buffer_waits_for_tcp_drops_for_udp_and_wakes_on_close(monkeypatch):
+    """At MAX_PENDING_LINES a waiting (TCP) extend blocks until take()
+    drains the buffer, a non-waiting (UDP) one drops the datagram and
+    counts it, and close() wakes a blocked extend without appending."""
+    import threading
+
+    from syslog_kafka_spark.sources import syslog_source
+
+    monkeypatch.setattr(syslog_source, "MAX_PENDING_LINES", 3)
+    buf = syslog_source._LineBuffer()
+    buf.extend(["a", "b", "c", "d"], 1)  # one chunk alone over the bound fills an empty buffer
+    buf.extend(["e"], 1, wait=False)
+    assert (buf.count, buf.dropped) == (4, 1)
+
+    blocked = threading.Thread(target=buf.extend, args=(["e"], 1))
+    blocked.start()
+    blocked.join(0.2)
+    assert blocked.is_alive() and buf.count == 4
+    assert buf.take()[0] == ["a", "b", "c", "d"]
+    blocked.join(5)
+    assert not blocked.is_alive() and buf.take()[0] == ["e"]
+
+    buf.extend(["f", "g", "h"], 1)
+    blocked = threading.Thread(target=buf.extend, args=(["i"], 1))
+    blocked.start()
+    blocked.join(0.2)
+    assert blocked.is_alive()
+    buf.close()
+    blocked.join(5)
+    assert not blocked.is_alive() and buf.count == 8
+
+
+def test_line_buffer_under_concurrent_handlers_loses_and_repeats_no_line(monkeypatch):
+    """Stress: more handler threads than cores extend a small bounded
+    buffer while one reader takes from it, with a short switch interval;
+    every line is taken exactly once and ``count`` matches."""
+    import sys
+    import threading
+
+    from syslog_kafka_spark.sources import syslog_source
+
+    monkeypatch.setattr(syslog_source, "MAX_PENDING_LINES", 50)
+    monkeypatch.setattr(syslog_source, "QUIET", 0.0)
+    buf = syslog_source._LineBuffer()
+    writers, chunks = 8, 200
+
+    def write(w: int) -> None:
+        for c in range(chunks):
+            buf.extend([f"{w}:{c}:{i}" for i in range(7)], 1)
+
+    taken: list[str] = []
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=write, args=(w,), daemon=True) for w in range(writers)]
+        for t in threads:
+            t.start()
+        deadline = time.time() + 60
+        while len(taken) < writers * chunks * 7:
+            assert time.time() < deadline, f"{len(taken)} lines taken"
+            lines, _, count = buf.take()
+            assert len(lines) <= 50 and count >= len(taken) + len(lines)
+            taken += lines
+        for t in threads:
+            t.join(5)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    want = [f"{w}:{c}:{i}" for w in range(writers) for c in range(chunks) for i in range(7)]
+    assert sorted(taken) == sorted(want) and buf.count == len(want)
+
+
+def test_tcp_sender_stalls_at_the_bound_and_every_line_arrives_once(monkeypatch):
+    """With no reads, a TCP sender stalls once the pending lines reach
+    MAX_PENDING_LINES and the kernel buffers fill: the listener holds no
+    more than the bound. Once reads resume, every line arrives exactly
+    once, in order."""
+    import threading
+
+    from syslog_kafka_spark.sources import syslog_source
+
+    monkeypatch.setattr(syslog_source, "MAX_PENDING_LINES", 200)
+    # more bytes than loopback's socket buffers hold (32 MB receive, 4 MB
+    # send at most), so the sender must stall
+    total, pad = 48_000, "x" * 1000
+    reader, port = _live_reader("tcp")
+    buf = reader._listener()
+    done = threading.Event()
+
+    def send() -> None:
+        with socket.create_connection(("127.0.0.1", port), timeout=60) as s:
+            for lo in range(0, total, 500):
+                s.sendall("".join(f"{i:06d} {pad}\n" for i in range(lo, lo + 500)).encode())
+        done.set()
+
+    sender = threading.Thread(target=send, daemon=True)
+    sender.start()
+    try:
+        last, stable_since, deadline = -1, time.time(), time.time() + 30
+        while time.time() - stable_since < 0.5:  # wait for the stall
+            assert time.time() < deadline and not done.is_set(), "the sender never stalled"
+            if buf.count != last:
+                last, stable_since = buf.count, time.time()
+            time.sleep(0.05)
+        assert 0 < buf.count <= 200 and not done.is_set()
+
+        monkeypatch.setattr(syslog_source, "QUIET", 0.0)  # serve at every read
+        start, seen, deadline = reader.initialOffset(), 0, time.time() + 60
+        while seen < total:
+            assert time.time() < deadline, f"{seen} of {total} lines arrived"
+            rows, end = reader.read(start)
+            for batch in rows:
+                assert batch.num_rows <= 200
+                for line in batch.column("line").to_pylist():
+                    assert line == f"{seen:06d} {pad}"
+                    seen += 1
+            assert end["index"] == seen
+            start = end
+        assert done.wait(10) and buf.count == total
+        assert reader.read(start)[1] == start  # nothing more
+    finally:
+        reader.stop()
+        sender.join(10)
+
+
+def _wait_port(port: int, listening: bool) -> None:
+    """Block until a connection to ``port`` succeeds (or is refused)."""
+    deadline = time.time() + 60
+    while True:
+        try:
+            socket.create_connection(("127.0.0.1", port), timeout=1).close()
+            up = True
+        except ConnectionRefusedError:
+            up = False
+        if up == listening:
+            return
+        assert time.time() < deadline, f"port {port} listening={up} after 60 s"
+        time.sleep(0.05)
+
+
+def _ingest(spark, port: int, work):
+    from syslog_kafka_spark.streaming.pipeline import run_syslog_ingest
+
+    query = run_syslog_ingest(
+        spark, host="127.0.0.1", port=port, protocol="tcp", topic="t", brokers=None,
+        checkpoint=str(work / "checkpoint"), output_path=str(work / "sink"),
+    )
+    _wait_port(port, listening=True)
+    return query
+
+
+def _sink_lines(work) -> list[str]:
+    from perfbench.check import read_sink_values
+
+    return [v.decode() for v in read_sink_values(str(work / "sink"))]
+
+
+def _wait_sink(work, done) -> list[str]:
+    deadline = time.time() + 60
+    while not done(lines := _sink_lines(work)):
+        assert time.time() < deadline, f"sink holds {len(lines)} lines after 60 s"
+        time.sleep(0.2)
+    return lines
+
+
+def test_query_restart_on_the_same_checkpoint_and_port_delivers_each_line_once(spark, tmp_path):
+    """Clean restart through run_syslog_ingest: 100 lines committed, stop,
+    restart on the same checkpoint and port, 300 more lines: the sink holds
+    all 400, each once."""
+    port = _free_port("tcp")
+    query = _ingest(spark, port, tmp_path)
+    try:
+        _send("tcp", port, "".join(f"{l}\n" for l in _numbered(0, 100)).encode())
+        _wait_sink(tmp_path, lambda lines: len(lines) >= 100)
+    finally:
+        query.stop()
+    _wait_port(port, listening=False)
+
+    query = _ingest(spark, port, tmp_path)
+    try:
+        _send("tcp", port, "".join(f"{l}\n" for l in _numbered(100, 400)).encode())
+        lines = _wait_sink(tmp_path, lambda lines: len(lines) >= 400)
+    finally:
+        query.stop()
+    assert sorted(lines) == sorted(_numbered(0, 400))
+
+
+def test_query_stopped_mid_burst_restarts_without_duplicates(spark, tmp_path):
+    """Stop a query while a sender streams into it, then restart it on the
+    same checkpoint and port: lines of the dead listener may be lost, but
+    none arrives twice, and every line sent after the restart arrives."""
+    import threading
+
+    port = _free_port("tcp")
+    stop_sending = threading.Event()
+
+    def stream() -> None:
+        try:
+            with socket.create_connection(("127.0.0.1", port), timeout=5) as s:
+                for lo in range(0, 1_000_000, 50):
+                    if stop_sending.is_set():
+                        return
+                    s.sendall("".join(f"{l}\n" for l in _numbered(lo, lo + 50)).encode())
+                    time.sleep(0.01)
+        except OSError:  # the stopped listener closed the connection
+            pass
+
+    query = _ingest(spark, port, tmp_path)
+    sender = threading.Thread(target=stream, daemon=True)
+    try:
+        sender.start()
+        _wait_sink(tmp_path, lambda lines: len(lines) > 0)
+    finally:
+        query.stop()
+        stop_sending.set()
+        sender.join(10)
+    _wait_port(port, listening=False)
+    before = _sink_lines(tmp_path)
+
+    query = _ingest(spark, port, tmp_path)
+    new = [f"after restart #{i}" for i in range(300)]
+    try:
+        _send("tcp", port, "".join(f"{l}\n" for l in new).encode())
+        lines = _wait_sink(tmp_path, lambda lines: len(lines) >= len(before) + 300)
+    finally:
+        query.stop()
+    assert len(lines) == len(set(lines)), "a line arrived twice"
+    assert sorted(set(lines) - set(before)) == sorted(new)
+
+
+def test_query_stop_frees_the_port_and_ends_open_connections(spark, tmp_path):
+    """query.stop() ends the planner process that owns the listener (PySpark
+    does not forward stop() to a simple reader): the port stops listening
+    and a client connection that is still open reads EOF."""
+    port = _free_port("tcp")
+    query = _ingest(spark, port, tmp_path)
+    with socket.create_connection(("127.0.0.1", port), timeout=30) as client:
+        try:
+            client.sendall(b"before stop\n")
+            _wait_sink(tmp_path, lambda lines: lines == ["before stop"])
+        finally:
+            query.stop()
+        try:
+            assert client.recv(1) == b""
+        except ConnectionResetError:
+            pass
+    _wait_port(port, listening=False)
