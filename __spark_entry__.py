@@ -14,27 +14,23 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from syslog_kafka_spark.plans.registry import load_all
+from syslog_kafka_spark.session import RESULT_CONFS, set_confs
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 FLAGSHIP = "agg_pricing_summary"
 
 
 def _utc(build: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
-    """Pin the session timezone to UTC before building.
+    """Set ``session.RESULT_CONFS`` on the session before building.
 
-    The driver supplies its own SparkSession; timestamp collection and
-    string→timestamp casts are session-tz-dependent, and every oracle
-    compares against DuckDB's tz-naive UTC values.
+    The driver supplies its own SparkSession, which ``get_spark`` never
+    built: its time zone, its parquet timestamp inference and its reading
+    of nanosecond timestamps would otherwise be whatever it was built with,
+    and every oracle compares against DuckDB's tz-naive UTC values.
     """
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # Spark 4.1 reads tz-naive parquet timestamps as TIMESTAMP_NTZ, which
-        # unix_micros()/withWatermark() reject; read as TIMESTAMP instead
-        # (values unchanged under the pinned-UTC session tz). The loaders also
-        # cast any NTZ column defensively — this conf covers the driver's own
-        # scans too.
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        set_confs(spark, RESULT_CONFS)
         return build(spark, sf_dir)
 
     return wrapped

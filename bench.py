@@ -187,66 +187,61 @@ def main() -> None:
         release_session_checkpoints,
     )
 
-    def run_sweep() -> tuple[dict[str, float], list[float]]:
-        timings: dict[str, float] = {}
-        for name in sorted(specs):
-            spec = specs[name]
-            if not spec.bench or (subset is not None and name not in subset):
-                continue
-            t0 = time.perf_counter()
-            try:
-                spec.build(spark, sf_dir).collect()
-                timings[name] = round(time.perf_counter() - t0, 3)
-            except Exception as exc:  # keep the bench line well-formed on a bad query
-                print(f"bench: {name} failed: {exc}", file=sys.stderr)
-                timings[name] = -1.0
-            # Sweep-boundary hygiene: caches stay warm (the LRU bounds them;
-            # cross-query reuse is part of what the sweep measures) but
-            # checkpoint pins are per-build artifacts no later query reuses —
-            # without this release the inventory sweep accumulates one pinned
-            # RDD per checkpointing query, the unbounded-growth class the
-            # session-cache module exists to prevent.
+    def timed(name: str, label: str) -> float | None:
+        """Build and collect ``name``: its wall seconds, unrounded, or None
+        after printing why it failed, so a bad query keeps the bench line
+        well-formed. Caches stay warm (the LRU bounds them; cross-query
+        reuse is part of what the sweep measures), but each build's
+        checkpoint pins are released: no later query reuses them, and the
+        sweep would otherwise hold one pinned RDD per checkpointing query."""
+        t0 = time.perf_counter()
+        try:
+            specs[name].build(spark, sf_dir).collect()
+            return time.perf_counter() - t0
+        except Exception as exc:
+            print(f"bench: {label} failed: {exc}", file=sys.stderr)
+            return None
+        finally:
             release_session_checkpoints(spark)
 
-        # Host-speed probe, SECOND sample right after the sweep: the sweep's
-        # own stream_replay_throughput row is the first (steady-state, fully
-        # warm — it lands alphabetically ~85% through the run and carries the
-        # one-time streaming machinery cost exactly like every prior round's
-        # archive, so sweep totals stay cross-round comparable). Both samples
-        # are steady-state by construction — a pre-sweep sample is NOT (r11
-        # measured the session's 2nd replay run still 1.9x slower than its
-        # 3rd), and averaging a machinery-polluted sample into the factor
-        # flips the normalization direction on a fast host.
-        lps_samples: list[float] = []
-        replay_spec = specs.get("stream_replay_throughput")
-        if (
-            replay_spec is not None
-            and replay_spec.bench
-            and subset is None
-            and timings.get("stream_replay_throughput", -1) > 0
-        ):
+    def run_sweep() -> tuple[dict[str, float], list[float]]:
+        """Per-query seconds, and the replay lines/sec samples that measure
+        the host: the sweep's own stream_replay_throughput row, then (full
+        runs) a second sample right after the sweep.
+
+        The in-sweep row is steady-state, fully warm: it lands
+        alphabetically ~85% through the run and carries the one-time
+        streaming machinery cost exactly like every prior round's archive,
+        so sweep totals stay cross-round comparable. A pre-sweep sample is
+        NOT steady-state (r11 measured the session's 2nd replay run still
+        1.9x slower than its 3rd), and averaging a machinery-polluted
+        sample into the factor flips the normalization direction on a
+        fast host."""
+        timings: dict[str, float] = {}
+        for name in sorted(specs):
+            if not specs[name].bench or (subset is not None and name not in subset):
+                continue
+            wall = timed(name, name)
+            timings[name] = -1.0 if wall is None else round(wall, 3)
+
+        samples: list[float] = []
+        replay_wall = timings.get("stream_replay_throughput", -1.0)
+        if replay_wall > 0:
             from syslog_kafka_spark.plans.extras import replay_line_count
 
-            try:
-                t0 = time.perf_counter()
-                replay_spec.build(spark, sf_dir).collect()
-                lps_samples.append(replay_line_count() / (time.perf_counter() - t0))
-            except Exception as exc:
-                print(f"bench: post-sweep replay probe failed: {exc}", file=sys.stderr)
-        return timings, lps_samples
+            samples.append(replay_line_count() / replay_wall)
+            if subset is None:
+                wall = timed("stream_replay_throughput", "post-sweep replay probe")
+                if wall is not None:
+                    samples.append(replay_line_count() / wall)
+        return timings, samples
 
-    def host_factor(timings: dict[str, float], lps_samples: list[float]) -> float | None:
+    def host_factor(lps_samples: list[float]) -> float | None:
         """Mean replay lines/sec over the quiet-host reference, or None
         when the run carries no replay sample to measure the host with."""
-        samples = list(lps_samples)
-        replay_wall = timings.get("stream_replay_throughput")
-        if replay_wall and replay_wall > 0:
-            from syslog_kafka_spark.plans.extras import replay_line_count
-
-            samples.insert(0, replay_line_count() / replay_wall)
-        if not samples:
+        if not lps_samples:
             return None
-        return sum(samples) / len(samples) / _HOST_REF_LINES_PER_SEC
+        return sum(lps_samples) / len(lps_samples) / _HOST_REF_LINES_PER_SEC
 
     # Host-floor policy (pinned round 12, r11 verdict item #4): the r11
     # headline was recorded on a host running at factor 0.458 while the
@@ -259,7 +254,7 @@ def main() -> None:
     sweep_attempts = 1
     host_floor_missed = False
     if subset is None:
-        factor = host_factor(timings, lps_samples)
+        factor = host_factor(lps_samples)
         if factor is not None and factor < _HOST_FLOOR_FACTOR:
             print(
                 f"bench: host_speed_factor {factor:.3f} < {_HOST_FLOOR_FACTOR}"
@@ -279,7 +274,7 @@ def main() -> None:
             clear_session_caches(spark)
             timings, lps_samples = run_sweep()
             sweep_attempts = 2
-            factor = host_factor(timings, lps_samples)
+            factor = host_factor(lps_samples)
             # A failed probe (factor None) cannot PROVE floor compliance,
             # and this branch only runs after a measured miss — declare
             # the miss rather than silently recording a loaded-host
@@ -321,21 +316,13 @@ def main() -> None:
     if deltas:
         isolated: dict[str, dict[str, float]] = {}
         for delta, name in deltas:
-            t0 = time.perf_counter()
-            try:
-                specs[name].build(spark, sf_dir).collect()
-                iso = round(time.perf_counter() - t0, 3)
-            except Exception as exc:
-                print(f"bench: isolated re-measure {name} failed: {exc}", file=sys.stderr)
-                iso = -1.0
+            iso = timed(name, f"isolated re-measure {name}")
+            iso = -1.0 if iso is None else round(iso, 3)
             isolated[name] = {
                 "sweep": timings[name],
                 "prev_sweep": prev[name],
                 "isolated": iso,
             }
-            # Same sweep hygiene as the main loop: a re-measured build may
-            # pin checkpoints that nothing later releases.
-            release_session_checkpoints(spark)
         payload["deltas_isolated"] = isolated
 
     # Scale-ratio protocol (pinned round 8): when SPARK_GRAFT_BENCH_RATIO_BASE
@@ -361,13 +348,8 @@ def main() -> None:
                 continue
             if timings[name] / base <= 10:
                 continue
-            t0 = time.perf_counter()
-            try:
-                specs[name].build(spark, sf_dir).collect()
-                iso = round(time.perf_counter() - t0, 3)
-            except Exception as exc:
-                print(f"bench: ratio re-measure {name} failed: {exc}", file=sys.stderr)
-                iso = -1.0
+            iso = timed(name, f"ratio re-measure {name}")
+            iso = -1.0 if iso is None else round(iso, 3)
             ratio_isolated[name] = {
                 "sweep": timings[name],
                 "base": base,
@@ -375,19 +357,14 @@ def main() -> None:
                 "isolated": iso,
                 "ratio_isolated": round(iso / base, 2) if iso > 0 else -1.0,
             }
-            release_session_checkpoints(spark)
         if ratio_isolated:
             payload["ratio_isolated"] = ratio_isolated
 
     # Ingestion parity as a number, not a smoke test: the reference's
     # identity is a syslog->Kafka producer, so the streaming replay's
     # sustained parse rate is the headline throughput figure.
-    replay_wall = timings.get("stream_replay_throughput")
-    if replay_wall and replay_wall > 0:
-        from syslog_kafka_spark.plans.extras import replay_line_count
-
-        # in-sweep sample leads the list; the post-sweep re-measure follows
-        lps_samples.insert(0, replay_line_count() / replay_wall)
+    # The replay samples lead with the in-sweep row; the post-sweep
+    # re-measure follows.
     if lps_samples:
         lps = round(sum(lps_samples) / len(lps_samples))
         payload["replay_lines_per_sec"] = lps

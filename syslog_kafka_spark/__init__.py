@@ -26,16 +26,19 @@ def sql(spark, sf_dir: str, query: str):
     """Run ad-hoc SQL over the standard tables — the one-liner a reference
     user reaches for first.
 
-    Registers every standard table of ``sf_dir`` as a temp view (``region``,
-    ``nation``, ..., ``documents``, ``embeddings``) and returns the result
-    DataFrame of ``query``. Views are plain lazy parquet scans, so Catalyst
+    Sets ``session.RESULT_CONFS`` on ``spark``, registers every standard
+    table of ``sf_dir`` as a temp view (``region``, ``nation``, ...,
+    ``documents``, ``embeddings``) and returns the result DataFrame of
+    ``query``. Views are plain lazy parquet scans, so Catalyst
     pushdown/pruning applies end to end.
 
     >>> import syslog_kafka_spark as sks
     >>> sks.sql(spark, "/root/testdata/sf0.01",
     ...         "SELECT lang, count(*) FROM documents GROUP BY lang")
     """
+    from syslog_kafka_spark.session import RESULT_CONFS, set_confs
     from syslog_kafka_spark.sources.readers import register_views
 
+    set_confs(spark, RESULT_CONFS)
     register_views(spark, sf_dir)
     return spark.sql(query)

@@ -22,29 +22,23 @@ from weakref import WeakKeyDictionary
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
-from pyspark.sql.types import LongType, TimestampNTZType
 
 from syslog_kafka_spark.plans.registry import query
 from syslog_kafka_spark.session import scoped_conf, warehouse_tmp
-from syslog_kafka_spark.sources.readers import load_tables
+from syslog_kafka_spark.sources.readers import load_tables, normalize_timestamps
 
 # Streaming-source schema memo, keyed weakly per session: every gate build
 # re-reads the parquet footer just to hand readStream its schema (~40-80 ms
 # of driver time per build, twice for gates that also load the batch twin).
 # Schemas are immutable metadata for a given path within a session — the
 # same reuse argument as readers._TABLE_CACHE, and nothing row-valued is
-# ever memoized here (the r14 no-result-caching rule). The inferred `ts`
-# type depends on spark.sql.legacy.parquet.nanosAsLong, so that conf's
-# value is part of the key.
+# ever memoized here (the r14 no-result-caching rule).
 _SCHEMA_MEMO: WeakKeyDictionary = WeakKeyDictionary()
 
 
 def _parquet_schema(spark: SparkSession, path: str):
     per_session = _SCHEMA_MEMO.setdefault(spark, {})
-    key = (
-        os.path.abspath(path),
-        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
-    )
+    key = os.path.abspath(path)
     if key not in per_session:
         per_session[key] = spark.read.parquet(path).schema
     return per_session[key]
@@ -69,24 +63,9 @@ def _stream_table(
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table as a file-source STREAM with the same ns→µs
-    timestamp normalization the batch loader applies."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_event_ts(_stream_table(spark, sf_dir, "events"))
-
-
-def normalize_event_ts(raw: DataFrame) -> DataFrame:
-    """ns→µs / NTZ→TIMESTAMP normalization for the events `ts` column —
-    shared by the gate source and the multi-batch replay tests so both
-    read the same values the batch loader produces."""
-    dtype = raw.schema["ts"].dataType
-    if isinstance(dtype, LongType):
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif isinstance(dtype, TimestampNTZType):
-        # Spark 4.1 NTZ inference: withWatermark() requires TIMESTAMP; the
-        # session tz is UTC so the cast is value-preserving.
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    """The events table as a file-source STREAM with the same timestamp
+    normalization the batch loader applies."""
+    return normalize_timestamps(_stream_table(spark, sf_dir, "events"), "events")
 
 
 def run_stream(

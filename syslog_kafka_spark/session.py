@@ -15,6 +15,22 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+# The confs every result depends on: the session time zone decides how a
+# timestamp collects and how a string casts to one; Spark 4.1 would infer
+# tz-naive parquet timestamps as TIMESTAMP_NTZ, which unix_micros() and
+# withWatermark() reject; and an INT64 TIMESTAMP(NANOS) column (pyarrow's
+# default) fails to read (PARQUET_TYPE_ILLEGAL) unless it reads as raw
+# longs, which the loaders truncate to µs as DuckDB does
+# (``readers.normalize_timestamps``). Every session that enters the
+# package gets them: ``get_spark`` builds with them, and
+# ``__spark_entry__`` and ``syslog_kafka_spark.sql`` set them on a session
+# the caller built. No loader or builder sets them.
+RESULT_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
 # Defaults chosen for the target workload (star-schema joins + wide scans):
 # - AQE re-plans shuffles at runtime (coalesces small partitions, converts
 #   sort-merge joins to broadcast when the built side turns out small, and
@@ -29,7 +45,6 @@ _DEFAULTS = {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.session.timeZone": "UTC",
     "spark.sql.shuffle.partitions": "32",
     # local[*] runs driver == executor; size the one heap for the data scale
     # ($SPARK_GRAFT_DRIVER_MEM — the sf10 probe needs more than the 8g that
@@ -41,10 +56,7 @@ _DEFAULTS = {
     # them anyway so a misconfigured environment can't silently disable.
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.enableVectorizedReader": "true",
-    # Spark 4.1 infers tz-naive parquet timestamps as TIMESTAMP_NTZ, which
-    # unix_micros()/withWatermark() reject. Read them as TIMESTAMP (session
-    # tz is pinned UTC, so values are unchanged).
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    **RESULT_CONFS,
 }
 
 
@@ -55,6 +67,17 @@ WAREHOUSE = os.path.join(
 )
 
 
+def set_confs(spark: SparkSession, confs: dict[str, str | None]) -> None:
+    """Set each session conf in ``confs``; a None value unsets the key.
+    Outside this module, only an entry point calls it, with
+    ``RESULT_CONFS``."""
+    for key, value in confs.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+
 @contextmanager
 def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
     """Set each session conf in ``confs`` for the block. On exit (also
@@ -62,16 +85,11 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
     it was unset before. This is the one way plan code pins a session
     conf, so no builder leaves a flip behind on a shared session."""
     prior = {key: spark.conf.get(key, None) for key in confs}
-    for key, value in confs.items():
-        spark.conf.set(key, value)
+    set_confs(spark, confs)
     try:
         yield
     finally:
-        for key, value in prior.items():
-            if value is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, value)
+        set_confs(spark, prior)
 
 
 def warehouse_tmp(prefix: str) -> tempfile.TemporaryDirectory:

@@ -17,11 +17,11 @@ from pyspark.sql.types import LongType, TimestampNTZType
 
 from syslog_kafka_spark.model import TABLE_NAMES
 
-# Parquet written with nanosecond timestamps (pyarrow default) is illegal
-# for Spark's vectorized reader. We read nanos as raw longs and truncate to
-# microseconds — the same ns→µs truncation DuckDB applies on read, so both
-# engines see identical values. Integer `div` (not `/`) avoids the double
-# round-trip that would corrupt 19-digit nanosecond epochs.
+# Timestamp columns per table. Parquet written with nanosecond timestamps
+# (pyarrow's default) reads as raw longs under the session's
+# ``spark.sql.legacy.parquet.nanosAsLong`` (``session.RESULT_CONFS``), and
+# ``normalize_timestamps`` truncates them to microseconds — the same ns→µs
+# truncation DuckDB applies on read, so both engines see identical values.
 _TIMESTAMP_COLUMNS = {
     "orders": ["o_orderdate"],
     "lineitem": ["l_shipdate"],
@@ -52,16 +52,18 @@ class Tables:
         return [f.name for f in fields(self)]
 
 
-def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for col in _TIMESTAMP_COLUMNS.get(name, []):
+def normalize_timestamps(df: DataFrame, table: str) -> DataFrame:
+    """``table``'s timestamp columns in ``df`` as TIMESTAMP: ns longs
+    truncated to µs, TIMESTAMP_NTZ cast. Shared by the batch loader and the
+    streaming events source, so both read the same values."""
+    for col in _TIMESTAMP_COLUMNS.get(table, []):
         dtype = df.schema[col].dataType
         if isinstance(dtype, LongType):
+            # integer `div`, not `/`: a double would corrupt 19-digit epochs
             df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
         elif isinstance(dtype, TimestampNTZType):
-            # Spark 4.1 infers tz-naive parquet timestamps as TIMESTAMP_NTZ,
-            # which unix_micros()/withWatermark() reject. Session tz is pinned
-            # UTC, so the cast changes only the type, never the value.
+            # unix_micros()/withWatermark() reject TIMESTAMP_NTZ. The session
+            # tz is UTC, so the cast changes only the type, never the value.
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
 
@@ -74,19 +76,22 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _TABLE_CACHE: WeakKeyDictionary = WeakKeyDictionary()
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *, refresh: bool = False) -> Tables:
+def load_tables(spark: SparkSession, sf_dir: str) -> Tables:
     """Load every standard table from ``sf_dir`` as a lazy DataFrame.
 
     Memoized per (session, sf_dir): DataFrames are lazy immutable plans,
     so reuse is safe and saves the per-table schema-inference round trips.
-    ``refresh=True`` forces a rebuild (e.g. after overwriting fixtures).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = os.path.abspath(sf_dir)
     per_session = _TABLE_CACHE.setdefault(spark, {})
-    if refresh or key not in per_session:
+    if key not in per_session:
         per_session[key] = Tables(
-            **{name: _read_table(spark, sf_dir, name) for name in TABLE_NAMES}
+            **{
+                name: normalize_timestamps(
+                    spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")), name
+                )
+                for name in TABLE_NAMES
+            }
         )
     return per_session[key]
 

@@ -261,34 +261,13 @@ def _record_batch(lines: list[str], micros: list[int], source: str) -> pa.Record
     )
 
 
-# The reader can be constructed more than once for the same query (schema
-# resolution + execution); listeners are process-global per endpoint so a
-# second construction reuses the live socket instead of re-binding.
-_LISTENERS: dict[tuple[str, str, int], tuple[object, _LineBuffer]] = {}
-_LISTENERS_LOCK = threading.Lock()
-
-
-def _get_listener(protocol: str, host: str, port: int) -> tuple[object, _LineBuffer]:
-    key = (protocol, host, port)
-    with _LISTENERS_LOCK:
-        if key not in _LISTENERS:
-            buffer = _LineBuffer()
-            if protocol == "tcp":
-                server = start_tcp_listener(host, port, buffer)
-            elif protocol == "udp":
-                server = start_udp_listener(host, port, buffer)
-            else:
-                raise ValueError(f"protocol must be tcp or udp, got {protocol!r}")
-            _LISTENERS[key] = (server, buffer)
-        return _LISTENERS[key]
-
-
 class SyslogStreamReader(SimpleDataSourceStreamReader):
     """Microbatch reader over the listener buffer.
 
     Offsets name the listener's epoch and the count of lines it has
-    buffered. The listener lives in the planner's process, where ``read``
-    serves each batch as one RecordBatch.
+    buffered. PySpark builds one reader in the planner process, which
+    owns the listener and where ``read`` serves each batch as one
+    RecordBatch; a reader built in an executor never binds a socket.
     """
 
     def __init__(self, schema: StructType, options: dict) -> None:
@@ -298,13 +277,18 @@ class SyslogStreamReader(SimpleDataSourceStreamReader):
         if self._protocol not in ("tcp", "udp"):
             raise ValueError(f"protocol must be tcp or udp, got {self._protocol!r}")
         self._hostname = socket.gethostname()
+        self._server = None
+        self._buffer: _LineBuffer | None = None
 
-    # The listener binds lazily on the first offset call: __init__ may run
-    # more than once (schema resolution vs execution) and only the
-    # long-lived planner process should own the socket.
+    # The listener binds lazily, on the first offset call: only the
+    # planner's reader asks for offsets.
     def _listener(self) -> _LineBuffer:
-        _, buffer = _get_listener(self._protocol, self._host, self._port)
-        return buffer
+        if self._buffer is None:
+            buffer = _LineBuffer()
+            start = start_tcp_listener if self._protocol == "tcp" else start_udp_listener
+            self._server = start(self._host, self._port, buffer)
+            self._buffer = buffer
+        return self._buffer
 
     def initialOffset(self) -> dict:
         return {"epoch": self._listener().epoch, "index": 0}
@@ -330,13 +314,10 @@ class SyslogStreamReader(SimpleDataSourceStreamReader):
     def stop(self) -> None:
         # PySpark's wrapper does not forward stop(); at query level the
         # planner process exits on query.stop(), which frees the port.
-        key = (self._protocol, self._host, self._port)
-        with _LISTENERS_LOCK:
-            entry = _LISTENERS.pop(key, None)
-        if entry is not None:
-            server, buffer = entry
-            buffer.close()
-            server.shutdown()
+        if self._buffer is not None:
+            self._buffer.close()
+            self._server.shutdown()
+            self._server = self._buffer = None
 
 
 class SyslogDataSource(DataSource):

@@ -1,20 +1,15 @@
-"""The end-to-end ingest pipeline: syslog source → parse → encode → sink.
-The streaming operator surface (SURVEY §2B.9: windows, dedup, joins) is
-hash-gated in plans/stream_gated.py.
+"""The end-to-end ingest pipeline: syslog source → encode → sink, the
+reference's listen → frame → transform → produce. Like the reference, the
+ingest path does not parse a line; ``parsed_messages`` is the parse
+operator the analytics surface and the replay gate apply. The streaming
+operator surface (SURVEY §2B.9: windows, dedup, joins) is hash-gated in
+plans/stream_gated.py.
 
 Delivery semantics: the parquet sink is exactly-once per Structured
 Streaming's checkpoint contract; the Kafka sink is at-least-once (a batch
-retried after a failure can write its records again). The socket source
-is served from the planner process that owns the listener: each batch
-takes every pending line once the sender has been quiet for
-``syslog_source.QUIET`` or the oldest line has waited
-``syslog_source.LINGER``, and ships it to the JVM with the batch's plan.
-It delivers no line twice; lines buffered in a process that dies before
-their batch commits are lost, and that is its only loss (offsets name the
-listener that buffered them, so a restart serves every line the new
-listener holds and replays nothing of the dead one). The reference's
-unbuffered channel has the same loss window
-(syslog/syslog_producer.go:89 — no WAL).
+retried after a failure can write its records again). The socket source's
+own contract (how batches are served, and the one way it loses lines) is
+stated in ``sources/syslog_source.py``.
 """
 
 from __future__ import annotations

@@ -30,10 +30,10 @@ from syslog_kafka_spark.plans.registry import load_all
 from syslog_kafka_spark.plans.stream_gated import (
     cms_sketch_frame,
     ivf_occupancy_frame,
-    normalize_event_ts,
     session_transcript_frame,
     transcript_digest,
 )
+from syslog_kafka_spark.sources.readers import normalize_timestamps
 from tests.conftest import assert_matches_oracle
 
 
@@ -119,7 +119,6 @@ def test_stream_session_transcripts_multibatch_state_merge(
     still hashes equal to the batch lag-gap oracle — extension of an open
     session and in-order token assembly across batch boundaries both
     proven, not asserted."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     d = tmp_path / "events"
     d.mkdir()
     t = pq.read_table(os.path.join(sf_dir, "events.parquet")).sort_by(
@@ -174,7 +173,7 @@ def test_stream_session_transcripts_multibatch_state_merge(
         .option("maxFilesPerTrigger", "1")
         .parquet(str(d))
     )
-    ev = normalize_event_ts(raw).filter(F.col("user_id") < 40)
+    ev = normalize_timestamps(raw, "events").filter(F.col("user_id") < 40)
     drained, n_batches = _drain_counted(session_transcript_frame(ev), "complete")
     assert n_batches >= len(cuts) - 1, f"expected ≥{len(cuts) - 1} microbatches, ran {n_batches}"
     oracle = load_all()["stream_session_transcripts"].oracle

@@ -178,6 +178,22 @@ def test_listener_frames_the_same_over_tcp_and_udp(protocol):
         reader.stop()
 
 
+def test_udp_datagram_of_60000_bytes_is_one_line():
+    """A datagram is read whole: a 60,000-byte line, longer than
+    socketserver's 8,192-byte default read, arrives as one line."""
+    reader, port = _live_reader("udp")
+    try:
+        start = reader.initialOffset()
+        line = "".join(chr(ord("a") + i % 26) for i in range(60_000))
+        _send("udp", port, line.encode())
+        _wait_buffered(reader, 1)
+        table, end = _serve(reader, start)
+        assert table.column("line").to_pylist() == [line]
+        assert end["index"] == 1
+    finally:
+        reader.stop()
+
+
 def _numbered(lo: int, hi: int) -> list[str]:
     return [f"{SYSLOG_CORPUS[i % len(SYSLOG_CORPUS)]} #{i}" for i in range(lo, hi)]
 
@@ -249,8 +265,9 @@ def _buffered_reader(monkeypatch):
     from syslog_kafka_spark.sources import syslog_source
 
     buf = syslog_source._LineBuffer()
-    monkeypatch.setattr(syslog_source, "_get_listener", lambda *endpoint: (None, buf))
-    return buf, syslog_source.SyslogStreamReader(SYSLOG_MESSAGE_SCHEMA, {})
+    reader = syslog_source.SyslogStreamReader(SYSLOG_MESSAGE_SCHEMA, {})
+    monkeypatch.setattr(reader, "_buffer", buf)
+    return buf, reader
 
 
 @pytest.mark.parametrize("lines", [SYSLOG_CORPUS, ["héllo wörld", "日本語のログ", "emoji 🚀 \ufffd"], []],
@@ -517,15 +534,19 @@ def test_run_stream_pins_confs_for_the_query_only(spark, sf_dir):
 def test_stream_gates_leave_no_views_dirs_or_confs(spark, sf_dir):
     """Building and collecting the memory-sink, foreachBatch, state-store
     and AvailableNow gates registers no temp view, leaves nothing under
-    the warehouse dir and restores the session confs."""
+    the warehouse dir and leaves every session conf as it was. The builds
+    run on a child session, which has its own confs and temp views, so a
+    conf or view that an earlier test left on the shared session cannot
+    hide a leak."""
     import os
 
     from syslog_kafka_spark.plans.registry import load_all
 
+    session = spark.newSession()
     warehouse = os.path.join(os.path.dirname(os.path.dirname(__file__)), "spark-warehouse")
 
     def temp_views():
-        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        return {t.name for t in session.catalog.listTables() if t.isTemporary}
 
     def warehouse_entries():
         return {
@@ -535,26 +556,25 @@ def test_stream_gates_leave_no_views_dirs_or_confs(spark, sf_dir):
         }
 
     inventory = load_all()
-    views, entries = temp_views(), warehouse_entries()
-    confs = [spark.conf.get(k) for k in _DRAIN_CONFS]
+    views, entries, confs = temp_views(), warehouse_entries(), session.conf.getAll
     for name in (
         "stream_sliding_window_agg",
         "stream_state_store_read",
         "stream_foreach_batch_sink",
         "stream_available_now_trigger",
     ):
-        assert inventory[name].build(spark, sf_dir).collect(), name
+        assert inventory[name].build(session, sf_dir).collect(), name
     assert temp_views() == views
     assert warehouse_entries() - entries == set()
-    assert [spark.conf.get(k) for k in _DRAIN_CONFS] == confs
+    assert session.conf.getAll == confs
 
 
 def test_batch_builders_leave_no_views_or_functions(spark, sf_dir):
     """Building every non-streaming query whose builder calls spark.sql
-    registers no temp view and no temp function. The builds run on a
-    child session, which has its own temp views and functions but shares
-    the context, so a view that an earlier test left on the shared
-    session cannot hide a leak."""
+    registers no temp view and no temp function, and sets no session conf.
+    The builds run on a child session, which has its own confs, temp views
+    and functions but shares the context, so a view or conf that an
+    earlier test left on the shared session cannot hide a leak."""
     import inspect
 
     from syslog_kafka_spark.plans.registry import load_all
@@ -575,11 +595,12 @@ def test_batch_builders_leave_no_views_or_functions(spark, sf_dir):
     ]
     # A floor, so a refactor that hides the calls cannot empty the sweep.
     assert len(names) >= 30, names
-    views, functions = temp_views(), temp_functions()
+    views, functions, confs = temp_views(), temp_functions(), session.conf.getAll
     for name in names:
         inventory[name].build(session, sf_dir)
     assert temp_views() == views
     assert temp_functions() == functions
+    assert session.conf.getAll == confs
 
 
 def test_tcp_stop_frees_the_port_and_ends_open_connections():
@@ -587,10 +608,10 @@ def test_tcp_stop_frees_the_port_and_ends_open_connections():
     after it never reach the dropped buffer, and frees the port for a new
     listener at once."""
     from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
-    from syslog_kafka_spark.sources.syslog_source import SyslogStreamReader, _get_listener
+    from syslog_kafka_spark.sources.syslog_source import SyslogStreamReader
 
     reader, port = _live_reader("tcp")
-    _, buffer = _get_listener("tcp", "127.0.0.1", port)
+    buffer = reader._listener()
     with socket.create_connection(("127.0.0.1", port), timeout=5) as client:
         client.sendall(b"before stop\n")
         _wait_buffered(reader, 1)
@@ -662,7 +683,7 @@ def test_read_serves_a_batch_when_the_sender_is_quiet_or_the_oldest_line_lingere
 
     # with the real constants, lines stamped long ago are served at once
     monkeypatch.undo()
-    monkeypatch.setattr(syslog_source, "_get_listener", lambda *endpoint: (None, buf))
+    monkeypatch.setattr(reader, "_buffer", buf)
     buf.extend(["f"], now - int(2 * syslog_source.LINGER * second))
     assert planner.latestOffset()["index"] == 6
 
@@ -673,11 +694,11 @@ def test_read_between_offsets_never_touches_a_listener(monkeypatch):
     from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
     from syslog_kafka_spark.sources import syslog_source
 
-    def no_listener(*endpoint):
+    def no_listener():
         raise AssertionError("readBetweenOffsets bound a listener")
 
-    monkeypatch.setattr(syslog_source, "_get_listener", no_listener)
     reader = syslog_source.SyslogStreamReader(SYSLOG_MESSAGE_SCHEMA, {})
+    monkeypatch.setattr(reader, "_listener", no_listener)
     rows = reader.readBetweenOffsets({"epoch": "dead", "index": 0}, {"epoch": "dead", "index": 100})
     assert _table(rows).num_rows == 0
 
