@@ -94,10 +94,11 @@ def extract_features(
     deterministic, cheap, and shaped exactly like a real embedding head.
 
     Peak executor memory is O(one Arrow batch of payloads); for large
-    blobs bound it with the session knob
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``, scoped with
-    ``session.scoped_conf`` around the action that runs the operator.
-    The operator itself never mutates session config.
+    blobs bound it with ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    on a session made for the purpose
+    (``session.child_session(spark, {key: n})``, or ``confs=`` on the
+    ``@query`` that runs the operator). The operator itself never mutates
+    session config.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -12,8 +12,9 @@ r8 sf10 sweep needed a 48 GiB driver heap plus manual
 long-lived session needs an unpersist policy, not a bigger heap.
 
 :func:`session_cache` is that policy: an LRU of eviction HANDLES keyed
-by Catalyst's ``semanticHash`` of the analyzed plan, per session
-(weakly referenced, so a stopped session drops its registry). Hitting
+by Catalyst's ``semanticHash`` of the analyzed plan, per parent session
+(``session.parent_session``: a session and its children share one;
+weakly referenced, so a stopped session drops its registry). Hitting
 the entry budget unpersists the least-recently-used frame BEFORE the
 new one is filled, so the persisted peak never exceeds the budget.
 Re-requesting an evicted plan simply re-caches and re-fills it —
@@ -57,11 +58,16 @@ from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 
+from syslog_kafka_spark.session import parent_session
+
+# Both registries key on ``parent_session``: a child session shares its
+# parent's CacheManager and context, so one LRU serves the whole family,
+# and clearing the parent releases what a query cached on its child.
 _LRU: WeakKeyDictionary = WeakKeyDictionary()  # SparkSession -> OrderedDict
 # SparkSession -> list[(checkpointed frame, frozenset of persisted RDD ids)]
 _CKPTS: WeakKeyDictionary = WeakKeyDictionary()
 
-# LRU budget: distinct cached plans per session
+# LRU budget: distinct cached plans per parent session
 CACHE_ENTRIES = 12
 
 
@@ -84,8 +90,7 @@ def session_cache(df: DataFrame, *, eager: bool = True) -> DataFrame:
     (a collision over-counts the slot as one budget entry — acceptable
     for a 1-in-4-billion event; a silent leak is not).
     """
-    spark = df.sparkSession
-    lru: OrderedDict = _LRU.setdefault(spark, OrderedDict())
+    lru: OrderedDict = _LRU.setdefault(parent_session(df.sparkSession), OrderedDict())
     analyzed = df._jdf.queryExecution().analyzed()
     key = analyzed.semanticHash()
     cached = df.cache()
@@ -115,10 +120,7 @@ def session_cache(df: DataFrame, *, eager: bool = True) -> DataFrame:
             # persistent Py4J failure). Dropping it from the slot makes its
             # storage unreachable by eviction/clear, so best-effort
             # unpersist first — a no-op on a truly dead frame.
-            try:
-                handle.unpersist(blocking=False)
-            except Exception:
-                pass
+            _unpersist([handle])
             probe_failed = True
             continue
         if not same:
@@ -141,12 +143,7 @@ def session_cache(df: DataFrame, *, eager: bool = True) -> DataFrame:
     # budget — filling first would transiently hold budget+1 corpus-sized
     # frames, exactly the spike the policy exists to prevent.
     while len(lru) > CACHE_ENTRIES:
-        _, evicted_slot = lru.popitem(last=False)
-        for evicted in evicted_slot:
-            try:
-                evicted.unpersist(blocking=False)
-            except Exception:
-                pass  # session shutting down mid-evict is fine
+        _unpersist(lru.popitem(last=False)[1])
     if eager:
         # Eager fill: concurrent downstream stages race a cold cache and
         # each recompute the plan; one count() fills it in a single pass.
@@ -185,7 +182,6 @@ def session_checkpoint(df: DataFrame) -> DataFrame:
     can never be a mid-use event. Release happens only at the explicit
     sweep boundary, where no returned frame is still live.
     """
-    spark = df.sparkSession
     ck = df.localCheckpoint(eager=True)
     try:
         # localCheckpoint returns a frame whose analyzed plan IS the
@@ -193,7 +189,7 @@ def session_checkpoint(df: DataFrame) -> DataFrame:
         ids = frozenset([int(ck._jdf.queryExecution().analyzed().rdd().id())])
     except Exception:
         ids = frozenset()  # unexpected plan shape: keep the frame, leak one RDD
-    _CKPTS.setdefault(spark, []).append((ck, ids))
+    _CKPTS.setdefault(parent_session(df.sparkSession), []).append((ck, ids))
     return ck
 
 
@@ -207,23 +203,33 @@ def release_checkpoint(ck: DataFrame) -> bool:
     O(iterations) × corpus. The frame must not be read again (a local
     checkpoint cannot recompute). Returns False if ``ck`` is not a
     registered checkpoint (already released, or never managed)."""
-    spark = ck.sparkSession
-    ckpts: list | None = _CKPTS.get(spark)
-    if not ckpts:
-        return False
-    for i, (frame, ids) in enumerate(ckpts):
+    ckpts: list | None = _CKPTS.get(parent_session(ck.sparkSession))
+    for i, (frame, ids) in enumerate(ckpts or ()):
         if frame is ck:
-            try:
-                rdds = spark.sparkContext._jsc.getPersistentRDDs()
-                for rid in ids:
-                    handle = rdds.get(rid)
-                    if handle is not None:
-                        handle.unpersist(False)
-            except Exception:
-                pass
+            _unpersist_rdds(ck.sparkSession, ids)
             ckpts.pop(i)
             return True
     return False
+
+
+def _unpersist(frames: list[DataFrame]) -> None:
+    for frame in frames:
+        try:
+            frame.unpersist(blocking=False)
+        except Exception:
+            pass  # a dead frame, or a session shutting down
+
+
+def _unpersist_rdds(spark: SparkSession, ids: frozenset) -> None:
+    """Unpersist the persisted RDDs among ``ids``."""
+    try:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        for rid in ids:
+            handle = rdds.get(rid)
+            if handle is not None:
+                handle.unpersist(False)
+    except Exception:
+        pass  # a session shutting down mid-release
 
 
 def release_session_checkpoints(spark: SparkSession) -> int:
@@ -237,39 +243,25 @@ def release_session_checkpoints(spark: SparkSession) -> int:
     so between queries they are pure dead weight. Returns the number of
     checkpoint frames released.
     """
-    n = 0
-    ckpts: list | None = _CKPTS.get(spark)
-    if ckpts:
-        try:
-            rdds = spark.sparkContext._jsc.getPersistentRDDs()
-            for _frame, ids in ckpts:
-                for rid in ids:
-                    handle = rdds.get(rid)
-                    if handle is not None:
-                        handle.unpersist(False)
-                n += 1
-        except Exception:
-            pass  # session shutting down mid-clear is fine
-        ckpts.clear()
+    ckpts: list = _CKPTS.get(parent_session(spark)) or []
+    for _frame, ids in ckpts:
+        _unpersist_rdds(spark, ids)
+    n = len(ckpts)
+    ckpts.clear()
     return n
 
 
 def clear_session_caches(spark: SparkSession) -> int:
     """Unpersist every frame and checkpoint this registry holds for
-    ``spark``.
+    ``spark``, its parent and their child sessions.
 
     For sweep harnesses (scripts/sf10_probe.py) that previously needed
     ``catalog.clearCache()`` — this drops only the engine's own entries,
     leaving caller-managed caches alone. Returns the number evicted.
     """
     n = 0
-    lru: OrderedDict | None = _LRU.get(spark)
+    lru: OrderedDict | None = _LRU.get(parent_session(spark))
     while lru:
-        _, evicted_slot = lru.popitem(last=False)
+        _unpersist(lru.popitem(last=False)[1])
         n += 1
-        for evicted in evicted_slot:
-            try:
-                evicted.unpersist(blocking=False)
-            except Exception:
-                pass
     return n + release_session_checkpoints(spark)

@@ -14,10 +14,13 @@ The registry is the single source of truth for ``__spark_entry__.queries()``
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from syslog_kafka_spark.session import child_session
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -36,6 +39,7 @@ class QuerySpec:
     # registry can't express. Turns "ungated by design" into a pointer at
     # the gate that does exist (tests/test_registry_window.py enforces it).
     gated_twin: str | None = None
+    confs: dict[str, str] = field(default_factory=dict)  # see query()
 
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -47,27 +51,40 @@ def query(
     oracle: str | None = None,
     bench: bool = True,
     gated_twin: str | None = None,
+    confs: dict[str, str] | None = None,
 ) -> Callable[[Builder], Builder]:
     """Register a query builder under ``name``.
 
     ``oracle`` is ANSI/DuckDB SQL equivalent to the Spark plan; ``None``
     marks a non-SQL-expressible op (driver falls back to rows-only check)
     and requires ``gated_twin`` to name its hash-gated counterpart.
+
+    ``confs`` are session confs the query needs: the builder the decorator
+    registers and returns runs on ``session.child_session(spark, confs)``,
+    so it never sets a conf on the session it is handed.
     """
 
     def deco(fn: Builder) -> Builder:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
+        build = fn
+        if confs:
+
+            @functools.wraps(fn)
+            def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+                return fn(child_session(spark, confs), sf_dir)
+
         QUERIES[name] = QuerySpec(
             name=name,
             family=family,
-            build=fn,
+            build=build,
             oracle=oracle,
             doc=(fn.__doc__ or "").strip(),
             bench=bench,
             gated_twin=gated_twin,
+            confs=confs or {},
         )
-        return fn
+        return build
 
     return deco
 

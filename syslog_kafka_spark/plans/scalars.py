@@ -13,7 +13,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from syslog_kafka_spark.plans.registry import query
-from syslog_kafka_spark.session import scoped_conf
 from syslog_kafka_spark.sources.readers import load_tables
 
 
@@ -940,6 +939,7 @@ def scalar_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT yr, revenue FROM proj ORDER BY yr
     """,
+    confs={"spark.sql.scripting.enabled": "true"},
 )
 def scalar_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL scripting (Spark 4): a BEGIN...END block with DECLARE'd
@@ -950,30 +950,29 @@ def scalar_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration is one Catalyst-planned statement, so the script's data
     work (the initial aggregate) still runs distributed; only the scalar
     loop state lives on the driver."""
-    with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
-        out = spark.sql(
-            """
-            BEGIN
-              DECLARE base DOUBLE;
-              DECLARE yr INT DEFAULT 1;
-              DECLARE rows_acc ARRAY<STRUCT<yr: INT, revenue: DOUBLE>>
-                DEFAULT array();
-              SET base = (SELECT round(sum(o_totalprice), 2)
-                            FROM {orders} WHERE o_orderstatus = 'O');
-              WHILE yr <= 5 DO
-                SET rows_acc = array_append(rows_acc,
-                                            named_struct('yr', yr, 'revenue', base));
-                SET base = round(base * 1.05, 2);
-                SET yr = yr + 1;
-              END WHILE;
-              SELECT t.yr, t.revenue FROM (SELECT explode(rows_acc) AS t)
-              ORDER BY t.yr;
-            END
-            """,
-            orders=load_tables(spark, sf_dir).orders,
-        )
-        rows = out.collect()
-    return spark.createDataFrame(rows, out.schema).orderBy("yr")
+    # The script runs when spark.sql is called; its result is the last
+    # statement's rows, already materialized as a local relation.
+    return spark.sql(
+        """
+        BEGIN
+          DECLARE base DOUBLE;
+          DECLARE yr INT DEFAULT 1;
+          DECLARE rows_acc ARRAY<STRUCT<yr: INT, revenue: DOUBLE>>
+            DEFAULT array();
+          SET base = (SELECT round(sum(o_totalprice), 2)
+                        FROM {orders} WHERE o_orderstatus = 'O');
+          WHILE yr <= 5 DO
+            SET rows_acc = array_append(rows_acc,
+                                        named_struct('yr', yr, 'revenue', base));
+            SET base = round(base * 1.05, 2);
+            SET yr = yr + 1;
+          END WHILE;
+          SELECT t.yr, t.revenue FROM (SELECT explode(rows_acc) AS t)
+          ORDER BY t.yr;
+        END
+        """,
+        orders=load_tables(spark, sf_dir).orders,
+    ).orderBy("yr")
 
 
 @query(

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from syslog_kafka_spark.plans.registry import query
-from syslog_kafka_spark.session import scoped_conf, warehouse_tmp
+from syslog_kafka_spark.session import warehouse_tmp
 
 _FIXTURE_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -519,28 +519,24 @@ def scan_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(round(max(o_totalprice), 2) AS DOUBLE) AS max_price
         FROM orders
     """,
+    confs={
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.sql.sources.useV1SourceList": "",
+    },
 )
 def scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet AGGREGATE pushdown (DataSource V2): COUNT/MIN/MAX answer
     from row-group footer statistics without materializing a single data
     page — the difference between a metadata read and a 100 TB scan for
     the `SELECT count(*), min(x), max(x)` class of audit queries. The V2
-    reader is scoped to this query (the session default stays V1 —
-    Spark's own default — so every other gate is untouched), and
+    reader is declared for this query alone (it runs on a child session;
+    the session default stays V1, Spark's own default), and
     tests/test_plan_quality.py asserts `PushedAggregation` actually
     appears in the physical plan. Values are exact (footer stats are
     exact for fully-written files), so the plain-aggregate oracle
     hash-matches."""
-    confs = {
-        "spark.sql.parquet.aggregatePushdown": "true",
-        "spark.sql.sources.useV1SourceList": "",
-    }
-    with scoped_conf(spark, confs):
-        df = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-        agg = df.agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.min("o_totalprice"), 2).alias("min_price"),
-            F.round(F.max("o_totalprice"), 2).alias("max_price"),
-        )
-        rows = agg.collect()
-    return spark.createDataFrame(rows, agg.schema)
+    return spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).agg(
+        F.count("*").alias("n_orders"),
+        F.round(F.min("o_totalprice"), 2).alias("min_price"),
+        F.round(F.max("o_totalprice"), 2).alias("max_price"),
+    )

@@ -17,32 +17,18 @@ from __future__ import annotations
 
 import os
 import uuid
-from weakref import WeakKeyDictionary
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from syslog_kafka_spark.plans.registry import query
-from syslog_kafka_spark.session import scoped_conf, warehouse_tmp
-from syslog_kafka_spark.sources.readers import load_tables, normalize_timestamps
-
-# Streaming-source schema memo, keyed weakly per session: every gate build
-# re-reads the parquet footer just to hand readStream its schema (~40-80 ms
-# of driver time per build, twice for gates that also load the batch twin).
-# Schemas are immutable metadata for a given path within a session — the
-# same reuse argument as readers._TABLE_CACHE, and nothing row-valued is
-# ever memoized here (the r14 no-result-caching rule).
-_SCHEMA_MEMO: WeakKeyDictionary = WeakKeyDictionary()
-
-
-def _parquet_schema(spark: SparkSession, path: str):
-    per_session = _SCHEMA_MEMO.setdefault(spark, {})
-    key = os.path.abspath(path)
-    if key not in per_session:
-        per_session[key] = spark.read.parquet(path).schema
-    return per_session[key]
-
+from syslog_kafka_spark.session import warehouse_tmp
+from syslog_kafka_spark.sources.readers import (
+    load_tables,
+    normalize_timestamps,
+    parquet_schema,
+)
 
 def _stream_table(
     spark: SparkSession, sf_dir: str, table: str, *, spread: bool = False
@@ -55,7 +41,7 @@ def _stream_table(
     the file source wants a directory; ``spread=True`` then re-spreads each
     microbatch over ``defaultParallelism`` tasks (see ``_stream_docs``)."""
     path = os.path.join(sf_dir, f"{table}.parquet")
-    reader = spark.readStream.schema(_parquet_schema(spark, path))
+    reader = spark.readStream.schema(parquet_schema(spark, path))
     if os.path.isdir(path):
         return reader.parquet(path)
     raw = reader.option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
@@ -68,28 +54,13 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_timestamps(_stream_table(spark, sf_dir, "events"), "events")
 
 
-def run_stream(
-    writer: DataStreamWriter,
-    *,
-    state_partitions: int | None = None,
-    no_data_batch: bool = True,
-) -> StreamingQuery:
+def run_stream(writer: DataStreamWriter) -> StreamingQuery:
     """Start ``writer``, process everything available, stop the query and
-    return it (stopped; ``recentProgress`` stays readable).
-
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` and
-    ``no_data_batch=False`` turns off the trailing no-data microbatch (see
-    :func:`drain` for when each applies). Both are scoped to ``start()``
-    only: a streaming query clones the session conf when it starts, so the
-    query keeps the pinned values while the session is restored before
-    the first microbatch runs."""
-    confs = {}
-    if state_partitions is not None:
-        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
-    if not no_data_batch:
-        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    with scoped_conf(writer._spark, confs):
-        q = writer.start()
+    return it (stopped; ``recentProgress`` stays readable). The query runs
+    with the confs of the session that built its frame: a gate declares
+    the pins below on its ``@query`` and builds on a child that carries
+    them."""
+    q = writer.start()
     try:
         q.processAllAvailable()
     finally:
@@ -105,62 +76,37 @@ def _take_memory_table(spark: SparkSession, name: str) -> DataFrame:
     return table
 
 
-def drain(
-    df: DataFrame,
-    *,
-    mode: str,
-    state_partitions: int | None = None,
-    no_data_batch: bool = True,
-) -> DataFrame:
+def drain(df: DataFrame, *, mode: str) -> DataFrame:
     """Run a streaming frame to completion into a memory sink and return
     the drained table (batch DataFrame). The sink's temp view is dropped
-    before returning, so a drain leaves nothing registered on the session.
-
-    ``no_data_batch=False`` disables the trailing no-data microbatch for
-    drains whose EMISSION does not depend on watermark advancement — the
-    stream-stream INNER interval join (matches emit the batch they arrive;
-    the no-data batch only evicts state that dies with the one-shot query
-    anyway) and dropDuplicatesWithinWatermark (first-seen rows emit on
-    arrival). Measured r14: the inner join's no-data batch cost as much as
-    its data batch (~1.4 s — a full plan + state commit cycle across both
-    stores, zero rows emitted); drained rows verified identical with it
-    off. Drains whose append-mode output IS flushed by the watermark
-    (left-outer join's null-padded rows, the chained rollup's closed day
-    windows) must keep the default.
-
-    ``state_partitions`` right-sizes the state store when fixed per-
-    partition cost dominates: every state partition pays provider-init +
-    commit per microbatch, and a two-sided interval join pays it for TWO
-    stores per partition (measured on local[32]: 12.6 s at 32 partitions
-    → 2.8 s at 4 for the same tiny-state join). The r13 optimization
-    sweep (OPTIMIZATION_r13.md, all 28 gates at 32/16/8) found the
-    tiny-state digests — KB of state, one microbatch — uniformly
-    provider-bound: ~0.4-1.1 s/query cheaper at 8 than at the session's
-    32 (e.g. sliding window 1.56→0.95 s, bloom build 3.01→1.93 s warm),
-    so those gates now pin 8 (or 16 where 8 was noise-band). Streaming
-    state is exempt from AQE coalescing — the partition count is fixed at
-    plan time and carried by the checkpoint — which is why the batch-side
-    default (32 + AQE) cannot fix this and an explicit pin is the only
-    lever. Drains that pass ``state_partitions=None`` follow the session's
-    shuffle setting. Both pins are scoped to the query's start
-    (:func:`run_stream`), so batch queries are unaffected.
-
-    Measurement-history note (r13 reconciliation): this docstring used
-    to claim the sliding-window agg DEGRADES 2.2 s → 8.5 s at 8
-    partitions. That number was a single cold reading taken while five
-    gates were being brought up in one loaded session, before the r7
-    isolated-probe protocol existed; the r13 min-of-3 interleaved A/B
-    on the identical gate measured 1.56 s → 0.95 s at 8, and the r13
-    full-map delta agreed (2.06 → 1.58). The old reading was bring-up
-    noise, not a property of the partition count — tiny-state gates are
-    provider-bound at every replication since."""
+    before returning, so a drain leaves nothing registered on the
+    session."""
     name = f"gate_{uuid.uuid4().hex[:8]}"
-    run_stream(
-        df.writeStream.format("memory").queryName(name).outputMode(mode),
-        state_partitions=state_partitions,
-        no_data_batch=no_data_batch,
-    )
+    run_stream(df.writeStream.format("memory").queryName(name).outputMode(mode))
     return _take_memory_table(df.sparkSession, name)
+
+
+# The confs a gate declares (``@query(confs=...)``); a gate that declares
+# none follows the session it is handed. STATE_<n> pins the state store's
+# partition count, which AQE cannot coalesce (it is fixed at plan time and
+# carried by the checkpoint). Each state partition pays provider init +
+# commit per microbatch, twice for a two-sided join (local[32]: 12.6 s at
+# 32 partitions, 2.8 s at 4, same tiny-state join). The r13 sweep
+# (OPTIMIZATION_r13.md, all 28 gates at 32/16/8) found the tiny-state
+# digests provider-bound, ~0.4-1.1 s cheaper at 8 than at 32 (sliding
+# window 1.56 -> 0.95 s): they pin 8, or 16 where 8 was within noise.
+STATE_8 = {"spark.sql.shuffle.partitions": "8"}
+STATE_16 = {"spark.sql.shuffle.partitions": "16"}
+STATE_4 = {"spark.sql.shuffle.partitions": "4"}
+# ..._NO_DATA drops the trailing no-data microbatch where emission does not
+# wait on the watermark: an inner interval join emits a match in the batch
+# it arrives, dropDuplicatesWithinWatermark a first-seen row on arrival,
+# and the no-data batch only evicts state that dies with the one-shot
+# query. Measured r14: the join's no-data batch cost as much as its data
+# batch (~1.4 s, zero rows emitted). A drain whose append output the
+# watermark flushes (left-outer join, chained rollup) keeps it.
+STATE_4_NO_DATA = {**STATE_4, "spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+STATE_8_NO_DATA = {**STATE_8, "spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
 @query(
@@ -181,6 +127,7 @@ def drain(
         GROUP BY window_start, event_type
         ORDER BY window_start, event_type
     """,
+    confs=STATE_8,
 )
 def stream_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding (hopping) window aggregation through the streaming state
@@ -195,7 +142,7 @@ def stream_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
     )
-    return drain(windowed, mode="complete", state_partitions=8).orderBy("window_start", "event_type")
+    return drain(windowed, mode="complete").orderBy("window_start", "event_type")
 
 
 @query(
@@ -225,6 +172,7 @@ def stream_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY user_id, session_no
         ORDER BY user_id, session_start
     """,
+    confs=STATE_8,
 )
 def stream_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native streaming session windows (30-minute gap) per user vs the
@@ -245,7 +193,7 @@ def stream_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return drain(sessions, mode="complete", state_partitions=8).orderBy("user_id", "session_start")
+    return drain(sessions, mode="complete").orderBy("user_id", "session_start")
 
 
 @query(
@@ -257,6 +205,7 @@ def stream_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY event_type
         ORDER BY event_type
     """,
+    confs=STATE_8,
 )
 def stream_dedup_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dropDuplicates state: the stream projects to its key
@@ -269,7 +218,7 @@ def stream_dedup_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    drained = drain(pairs, mode="append", state_partitions=8)
+    drained = drain(pairs, mode="append")
     return (
         drained.groupBy("event_type")
         .agg(F.count("*").alias("n_users"))
@@ -289,6 +238,7 @@ def stream_dedup_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY n.n_name
         ORDER BY n.n_name
     """,
+    confs=STATE_8,
 )
 def stream_static_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static equi-join (the microbatch-planned broadcast lookup):
@@ -307,7 +257,7 @@ def stream_static_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
     )
-    return drain(joined, mode="complete", state_partitions=8).orderBy("n_name")
+    return drain(joined, mode="complete").orderBy("n_name")
 
 
 @query(
@@ -325,6 +275,7 @@ def stream_static_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY v.user_id
         ORDER BY v.user_id
     """,
+    confs=STATE_4_NO_DATA,
 )
 def stream_stream_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join (view→purchase attribution within 10
@@ -354,10 +305,7 @@ def stream_stream_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id")
     )
-    # Inner interval joins emit on match, so the trailing no-data batch
-    # (state eviction only) is pure overhead here — measured as expensive
-    # as the data batch itself (drain() docstring).
-    drained = drain(joined, mode="append", state_partitions=4, no_data_batch=False)
+    drained = drain(joined, mode="append")
     return drained.groupBy("user_id").agg(F.count("*").alias("n_matches")).orderBy("user_id")
 
 
@@ -373,6 +321,7 @@ def stream_stream_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY user_id
         ORDER BY user_id
     """,
+    confs=STATE_8,
 )
 def stream_custom_state_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary-state streaming operator (applyInPandasWithState): a
@@ -444,7 +393,7 @@ def stream_custom_state_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    drained = drain(profiles, mode="update", state_partitions=8)
+    drained = drain(profiles, mode="update")
     return (
         drained.groupBy("user_id")
         .agg(
@@ -466,6 +415,7 @@ def stream_custom_state_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY event_type
         ORDER BY event_type
     """,
+    confs=STATE_8,
 )
 def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch → parquet file sink, end to end: the deduplicated pair
@@ -484,11 +434,10 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output lands in a fresh temp dir under the gitignored warehouse root,
     removed once the read-back is materialized.
 
-    State is pinned to 8 partitions, the same tiny-state right-sizing the
-    drain() pins apply (r13 sweep): the dedup state is a few thousand
-    keys; at the session's 32 partitions the per-partition provider init +
-    commit dominates, and the foreachBatch writer then also lands 32
-    near-empty parquet files per batch instead of 8."""
+    State is pinned to 8 partitions (``STATE_8``): the dedup state is a
+    few thousand keys; at the session's 32 partitions the per-partition
+    provider init + commit dominates, and the foreachBatch writer then
+    also lands 32 near-empty parquet files per batch instead of 8."""
     pairs = (
         stream_events(spark, sf_dir)
         .filter(F.col("user_id") < 200)
@@ -502,10 +451,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(out_dir, f"batch-{batch_id}")
             )
 
-        run_stream(
-            pairs.writeStream.foreachBatch(write_batch).outputMode("append"),
-            state_partitions=8,
-        )
+        run_stream(pairs.writeStream.foreachBatch(write_batch).outputMode("append"))
         # recursiveFileLookup: the batch-N subdirs are layout, not hive
         # partitions — read every parquet file beneath out_dir flat.
         landed = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
@@ -616,6 +562,7 @@ def stream_python_datasource_tail(spark: SparkSession, sf_dir: str) -> DataFrame
         GROUP BY event_type
         ORDER BY event_type
     """,
+    confs=STATE_8,
 )
 def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 state data source: run a streaming aggregation to
@@ -639,8 +586,7 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream(
             counts.writeStream.format("noop")
             .outputMode("complete")
-            .option("checkpointLocation", ckpt),
-            state_partitions=8,
+            .option("checkpointLocation", ckpt)
         )
         state = spark.read.format("statestore").load(ckpt).select(
             F.col("key.event_type").alias("event_type"),
@@ -663,6 +609,7 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY 1
         ORDER BY day
     """,
+    confs=STATE_8,
 )
 def stream_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CHAINED stateful operators (Spark 3.4+): an hourly tumbling-window
@@ -675,7 +622,7 @@ def stream_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly with the max(ts) cutoff. State is bounded by (hours x types)
     + days, independent of event volume — scale-safe. Two chained
     stateful ops mean TWO state stores per partition paying provider
-    init + commit per microbatch, so the drain right-sizes state
+    init + commit per microbatch, so the gate right-sizes state
     partitions like the stream-stream join does (measured at sf0.1 on
     local[32]: 9.9 s at 32 partitions → 2.8 s at 8 for identical
     output)."""
@@ -687,7 +634,7 @@ def stream_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         hourly.groupBy(F.window(F.window_time("window"), "1 day"))
         .agg(F.sum("n").alias("n_events"), F.count(F.lit(1)).alias("n_slots"))
     )
-    drained = drain(daily, mode="append", state_partitions=8)
+    drained = drain(daily, mode="append")
     return (
         drained.select(
             F.col("window.start").alias("day"),
@@ -708,6 +655,7 @@ def stream_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY event_type
         ORDER BY event_type
     """,
+    confs=STATE_8_NO_DATA,
 )
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicatesWithinWatermark (Spark 3.5+): exactly-once semantics
@@ -720,9 +668,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     size against duplicate-window length."""
     raw = stream_events(spark, sf_dir).withWatermark("ts", "45 days")
     dd = raw.dropDuplicatesWithinWatermark(["user_id", "event_type"])
-    # first-seen rows emit on arrival; the no-data batch only expires
-    # dedup state the one-shot drain never needs again (drain() docstring)
-    drained = drain(dd, mode="append", state_partitions=8, no_data_batch=False)
+    drained = drain(dd, mode="append")
     return (
         drained.groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n_users"))
@@ -757,6 +703,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         HAVING count(*) > 0
         ORDER BY day
     """,
+    confs=STATE_8,
 )
 def stream_available_now_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigger.AvailableNow (the batch-drain trigger): the query plans
@@ -768,7 +715,9 @@ def stream_available_now_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-day view-count aggregate in complete mode via awaitTermination
     — no manual stop — and hash-checks the final table: termination
     correctness AND result correctness in one gate. State scales by
-    (day) key cardinality only."""
+    (day) key cardinality only; per-day keys in one planned batch are
+    provider-bound at 32 state partitions, so the gate pins 8 (measured
+    1.75 s → 0.86 s, r13 sweep)."""
     agg = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -781,18 +730,13 @@ def stream_available_now_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"gate_{uuid.uuid4().hex[:8]}"
-    # Same tiny-state right-sizing as drain(state_partitions=8): per-day
-    # keys, one planned batch — provider overhead dominates at 32
-    # (measured 1.75 s → 0.86 s, r13 sweep). Scoped to start(), as in
-    # run_stream; the wait below is this gate's own.
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
     try:
         # awaitTermination returns False on timeout — the AvailableNow
         # drain would still be mid-run and the memory table would read as
@@ -816,6 +760,7 @@ def stream_available_now_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY event_type
         ORDER BY event_type
     """,
+    confs=STATE_8,
 )
 def stream_static_anti_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static LEFT ANTI join — incremental ingest dedup against an
@@ -835,7 +780,7 @@ def stream_static_anti_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = stream_events(spark, sf_dir)
     fresh = ev.join(seen, ev.event_id == seen.seen_id, "left_anti")
     counts = fresh.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_new"))
-    drained = drain(counts, mode="complete", state_partitions=8)
+    drained = drain(counts, mode="complete")
     return drained.orderBy("event_type")
 
 
@@ -867,6 +812,7 @@ def stream_static_anti_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY v.user_id
         ORDER BY v.user_id
     """,
+    confs=STATE_4,
 )
 def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join — a different state
@@ -917,7 +863,7 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.max("ts"))
         .collect()[0][0]
     )
-    drained = drain(joined, mode="append", state_partitions=4)
+    drained = drain(joined, mode="append")
     return (
         drained.filter(
             F.col("view_ts") <= F.lit(vmax) - F.expr("INTERVAL 20 MINUTES")
@@ -958,7 +904,7 @@ def _ivf_routing_oracle() -> str:
     """
 
 
-@query("stream_ivf_list_routing", family="streaming", oracle=_ivf_routing_oracle())
+@query("stream_ivf_list_routing", family="streaming", oracle=_ivf_routing_oracle(), confs=STATE_8)
 def stream_ivf_list_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online IVF shard routing: embeddings arrive as a STREAM and are
     assigned to their inverted list with the same frozen coarse
@@ -974,7 +920,7 @@ def stream_ivf_list_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing as a batch over the same table, so a stream that dropped,
     duplicated, or mis-assigned any vector hash-fails."""
     raw = _stream_embeddings(spark, sf_dir)
-    return drain(ivf_occupancy_frame(raw), mode="complete", state_partitions=8).orderBy("list_id")
+    return drain(ivf_occupancy_frame(raw), mode="complete").orderBy("list_id")
 
 
 def _stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1025,7 +971,7 @@ def _stream_cms_oracle() -> str:
     """
 
 
-@query("stream_cms_sketch_build", family="streaming", oracle=_stream_cms_oracle())
+@query("stream_cms_sketch_build", family="streaming", oracle=_stream_cms_oracle(), confs=STATE_8)
 def stream_cms_sketch_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online count-min sketch maintenance: the document stream's tokens
     fold into the same 4×2048 CMS the batch heavy-hitter audit probes
@@ -1039,7 +985,7 @@ def stream_cms_sketch_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the cells over the same corpus, so a stream that
     dropped, duplicated, or mis-hashed any token hash-fails."""
     raw = _stream_docs(spark, sf_dir)
-    return drain(cms_sketch_frame(raw), mode="complete", state_partitions=8).orderBy("r", "b")
+    return drain(cms_sketch_frame(raw), mode="complete").orderBy("r", "b")
 
 
 def cms_sketch_frame(raw: DataFrame) -> DataFrame:
@@ -1111,6 +1057,7 @@ def _stream_transcripts_oracle() -> str:
     "stream_session_transcripts",
     family="streaming",
     oracle=_stream_transcripts_oracle(),
+    confs=STATE_8,
 )
 def stream_session_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONLINE transcript assembly: the streaming twin of
@@ -1127,7 +1074,7 @@ def stream_session_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session_window ≡ gap sessionization, pinned by
     stream_session_window_agg) and hashes every transcript."""
     ev = stream_events(spark, sf_dir).filter(F.col("user_id") < 40)
-    drained = drain(session_transcript_frame(ev), mode="complete", state_partitions=8)
+    drained = drain(session_transcript_frame(ev), mode="complete")
     return transcript_digest(drained)
 
 
@@ -1227,7 +1174,7 @@ def _stream_bloom_oracle() -> str:
     """
 
 
-@query("stream_bloom_build", family="streaming", oracle=_stream_bloom_oracle())
+@query("stream_bloom_build", family="streaming", oracle=_stream_bloom_oracle(), confs=STATE_8)
 def stream_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online Bloom-filter maintenance: the document stream's 8-gram
     hashes fold their Kirsch-Mitzenmacher probe positions (the IDENTICAL
@@ -1249,7 +1196,7 @@ def stream_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = ngram_hashes(raw, n=_BLOOM_N, salt="bloom-v1")
     pos = grams.select(F.explode(bloom_position_array()).alias("pos"))
     sketch = pos.groupBy("pos").agg(F.count(F.lit(1)).cast("bigint").alias("hits"))
-    drained = drain(sketch, mode="complete", state_partitions=8)
+    drained = drain(sketch, mode="complete")
     return (
         drained.groupBy(F.expr("pos div 1024").alias("bucket"))
         .agg(
@@ -1296,7 +1243,7 @@ def _stream_hll_oracle() -> str:
     """
 
 
-@query("stream_hll_build", family="streaming", oracle=_stream_hll_oracle())
+@query("stream_hll_build", family="streaming", oracle=_stream_hll_oracle(), confs=STATE_8)
 def stream_hll_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online HyperLogLog maintenance: the document stream's tokens fold
     into the IDENTICAL per-source 1024-register sketch the batch audit
@@ -1319,7 +1266,7 @@ def stream_hll_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _stream_docs(spark, sf_dir)
     tok = raw.select("source", F.explode(tokens("text")).alias("term"))
     reg = hll_register_frame(tok)
-    drained = drain(reg, mode="complete", state_partitions=8)
+    drained = drain(reg, mode="complete")
     sk = drained.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("used"),
         F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("z_used"),
@@ -1368,7 +1315,7 @@ def _stream_quality_oracle() -> str:
     """
 
 
-@query("stream_quality_filter", family="streaming", oracle=_stream_quality_oracle())
+@query("stream_quality_filter", family="streaming", oracle=_stream_quality_oracle(), confs=STATE_8)
 def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONLINE model-based filtering: arriving documents score against
     the frozen hashed-BoW classifier INSIDE their scan task (the
@@ -1401,7 +1348,7 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("doc_id").alias("max_doc_id"),
         )
     )
-    return drain(keep_counts, mode="complete", state_partitions=8).orderBy("model_keep")
+    return drain(keep_counts, mode="complete").orderBy("model_keep")
 
 
 # ---------------------------------------------------------------------------
@@ -1428,6 +1375,7 @@ def _stream_ivf_refit_oracle() -> str:
     "stream_ivf_refit_drift",
     family="streaming",
     oracle=_stream_ivf_refit_oracle(),
+    confs=STATE_8,
 )
 def stream_ivf_refit_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online quantizer-staleness monitor: the embedding stream folds
@@ -1446,7 +1394,7 @@ def stream_ivf_refit_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — a stream that dropped, duplicated, or mis-assigned any
     vector hash-fails."""
     raw = _stream_embeddings(spark, sf_dir)
-    return ivf_refit_finish(drain(ivf_refit_partials_frame(raw), mode="complete", state_partitions=8))
+    return ivf_refit_finish(drain(ivf_refit_partials_frame(raw), mode="complete"))
 
 
 # ---------------------------------------------------------------------------
@@ -1511,6 +1459,7 @@ def _stream_bpe_oracle() -> str:
     "stream_bpe_merge_candidates",
     family="streaming",
     oracle=_stream_bpe_oracle(),
+    confs=STATE_16,
 )
 def stream_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online BPE merge-candidate counting: the document stream's
@@ -1526,7 +1475,7 @@ def stream_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from syslog_kafka_spark.plans.mining import _BPE_TOPK
 
     return bpe_topk_finish(
-        drain(bpe_pair_counts_frame(raw), mode="complete", state_partitions=16), _BPE_TOPK
+        drain(bpe_pair_counts_frame(raw), mode="complete"), _BPE_TOPK
     )
 
 
@@ -1617,6 +1566,7 @@ def _stream_lsh_probe_oracle() -> str:
     "stream_lsh_probe_digest",
     family="streaming",
     oracle=_stream_lsh_probe_oracle(),
+    confs=STATE_16,
 )
 def stream_lsh_probe_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONLINE near-duplicate probing — the streaming face of
@@ -1638,7 +1588,7 @@ def stream_lsh_probe_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact pre-drain plan at maxFilesPerTrigger=1."""
     d = load_tables(spark, sf_dir).documents
     digest = lsh_probe_digest_frame(_stream_docs(spark, sf_dir), d)
-    return drain(digest, mode="complete", state_partitions=16).orderBy("band")
+    return drain(digest, mode="complete").orderBy("band")
 
 
 # ---------------------------------------------------------------------------
@@ -1798,6 +1748,7 @@ def _stream_decontamination_oracle() -> str:
     "stream_decontamination_probe",
     family="streaming",
     oracle=_stream_decontamination_oracle(),
+    confs=STATE_8,
 )
 def stream_decontamination_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONLINE decontamination — the ingest face of
@@ -1822,7 +1773,7 @@ def stream_decontamination_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     this exact pre-drain plan at maxFilesPerTrigger=1."""
     d = load_tables(spark, sf_dir).documents
     digest = bloom_probe_digest_frame(_stream_docs(spark, sf_dir), d)
-    return drain(digest, mode="complete", state_partitions=8).orderBy("bucket")
+    return drain(digest, mode="complete").orderBy("bucket")
 
 
 # ---------------------------------------------------------------------------
@@ -1921,6 +1872,7 @@ def _stream_fertility_oracle() -> str:
     "stream_bpe_encode_fertility",
     family="streaming",
     oracle=_stream_fertility_oracle(),
+    confs=STATE_8,
 )
 def stream_bpe_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONLINE tokenizer-fertility monitoring — the ingest face of
@@ -1943,7 +1895,7 @@ def stream_bpe_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-fails. The multibatch replay test re-runs this exact pre-drain
     plan at maxFilesPerTrigger=1."""
     return (
-        drain(bpe_fertility_frame(_stream_docs(spark, sf_dir)), mode="complete", state_partitions=8)
+        drain(bpe_fertility_frame(_stream_docs(spark, sf_dir)), mode="complete")
         .orderBy("merges_applied", "bucket")
     )
 
@@ -1984,6 +1936,7 @@ def _quality_gate_monitor_oracle() -> str:
     "stream_quality_gate_monitor",
     family="streaming",
     oracle=_quality_gate_monitor_oracle(),
+    confs=STATE_8,
 )
 def stream_quality_gate_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quality-gate pricing sweep (llm_quality_gate_sweep) as a LIVE
@@ -2000,4 +1953,4 @@ def stream_quality_gate_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the ledger over the same corpus, so a stream that
     dropped, duplicated, or double-priced any document hash-fails."""
     raw = _stream_docs(spark, sf_dir)
-    return drain(quality_gate_frame(raw), mode="complete", state_partitions=8).orderBy("min_uniq_ratio")
+    return drain(quality_gate_frame(raw), mode="complete").orderBy("min_uniq_ratio")

@@ -10,8 +10,8 @@ from __future__ import annotations
 
 import os
 import tempfile
-from collections.abc import Iterator
-from contextlib import contextmanager
+import threading
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -22,9 +22,9 @@ from pyspark.sql import SparkSession
 # default) fails to read (PARQUET_TYPE_ILLEGAL) unless it reads as raw
 # longs, which the loaders truncate to µs as DuckDB does
 # (``readers.normalize_timestamps``). Every session that enters the
-# package gets them: ``get_spark`` builds with them, and
-# ``__spark_entry__`` and ``syslog_kafka_spark.sql`` set them on a session
-# the caller built. No loader or builder sets them.
+# package gets them: ``get_spark`` builds with them, ``__spark_entry__``
+# and ``syslog_kafka_spark.sql`` set them on a session the caller built,
+# and ``child_session`` on every child. No loader or builder sets them.
 RESULT_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
@@ -67,29 +67,46 @@ WAREHOUSE = os.path.join(
 )
 
 
-def set_confs(spark: SparkSession, confs: dict[str, str | None]) -> None:
-    """Set each session conf in ``confs``; a None value unsets the key.
-    Outside this module, only an entry point calls it, with
-    ``RESULT_CONFS``."""
+def set_confs(spark: SparkSession, confs: dict[str, str]) -> None:
+    """Set each session conf in ``confs``. Only ``child_session`` and the
+    entry points call it."""
     for key, value in confs.items():
-        if value is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, value)
+        spark.conf.set(key, value)
 
 
-@contextmanager
-def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
-    """Set each session conf in ``confs`` for the block. On exit (also
-    when the block raises) restore each key's prior value, or unset it if
-    it was unset before. This is the one way plan code pins a session
-    conf, so no builder leaves a flip behind on a shared session."""
-    prior = {key: spark.conf.get(key, None) for key in confs}
-    set_confs(spark, confs)
-    try:
-        yield
-    finally:
-        set_confs(spark, prior)
+# Parent -> {frozenset(confs) -> child}, so a child's table memo stays
+# warm across builds; child -> weakref to its parent.
+_CHILDREN: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_PARENTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_CHILDREN_LOCK = threading.Lock()
+
+
+def parent_session(spark: SparkSession) -> SparkSession:
+    """The session ``child_session`` made ``spark`` from, else ``spark``:
+    the key of what a parent shares with its children (schema memo, cache
+    LRU, checkpoint pins), so clearing the parent clears theirs."""
+    ref = _PARENTS.get(spark)
+    parent = ref() if ref is not None else None
+    return spark if parent is None else parent
+
+
+def child_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """``spark.newSession()`` (same context and cache, its own SQL conf and
+    temp views) with ``RESULT_CONFS`` and ``confs`` set once; one per
+    distinct ``confs`` per parent; asked of a child, it makes a sibling. A
+    query that declares confs on ``@query`` runs on one, so no build
+    writes a conf on the session it is handed. A child does not see confs
+    set on its parent at runtime."""
+    spark = parent_session(spark)
+    key = frozenset(confs.items())
+    with _CHILDREN_LOCK:
+        children = _CHILDREN.setdefault(spark, {})
+        if key not in children:
+            child = spark.newSession()
+            set_confs(child, {**RESULT_CONFS, **confs})
+            children[key] = child
+            _PARENTS[child] = weakref.ref(spark)
+        return children[key]
 
 
 def warehouse_tmp(prefix: str) -> tempfile.TemporaryDirectory:

@@ -13,9 +13,10 @@ from weakref import WeakKeyDictionary
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 from syslog_kafka_spark.model import TABLE_NAMES
+from syslog_kafka_spark.session import parent_session
 
 # Timestamp columns per table. Parquet written with nanosecond timestamps
 # (pyarrow's default) reads as raw longs under the session's
@@ -68,11 +69,26 @@ def normalize_timestamps(df: DataFrame, table: str) -> DataFrame:
     return df
 
 
+# Parquet schema memo: parent session -> {abspath: schema}. Inferring a
+# schema reads the file's footer (~0.7 s for the ten tables at sf0.1). A
+# schema is fixed by the file and by RESULT_CONFS, which a parent and its
+# children all carry, so a child reuses its parent's (``parent_session``).
+_SCHEMA_MEMO: WeakKeyDictionary = WeakKeyDictionary()
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """``spark.read.parquet(path).schema``, read once per parent session."""
+    per_family = _SCHEMA_MEMO.setdefault(parent_session(spark), {})
+    key = os.path.abspath(path)
+    if key not in per_family:
+        per_family[key] = spark.read.parquet(path).schema
+    return per_family[key]
+
+
 # Lazy DataFrames are immutable plans, so the ten-table namespace can be
-# reused across queries in the same session: rebuilding it costs ten
-# spark.read.parquet schema round-trips (~1 s of driver time) that
-# otherwise taxes EVERY query build. Keyed weakly by session so a stopped
-# session's plans are never resurrected.
+# reused across queries in the same session. Keyed weakly by session (a
+# frame belongs to the session that read it), so a stopped session's plans
+# are never resurrected.
 _TABLE_CACHE: WeakKeyDictionary = WeakKeyDictionary()
 
 
@@ -80,19 +96,18 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Tables:
     """Load every standard table from ``sf_dir`` as a lazy DataFrame.
 
     Memoized per (session, sf_dir): DataFrames are lazy immutable plans,
-    so reuse is safe and saves the per-table schema-inference round trips.
+    so reuse is safe. Each table reads with its ``parquet_schema``, so a
+    child session's first load reads no footer its parent has read.
     """
     key = os.path.abspath(sf_dir)
     per_session = _TABLE_CACHE.setdefault(spark, {})
     if key not in per_session:
-        per_session[key] = Tables(
-            **{
-                name: normalize_timestamps(
-                    spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")), name
-                )
-                for name in TABLE_NAMES
-            }
-        )
+        tables = {}
+        for name in TABLE_NAMES:
+            path = os.path.join(sf_dir, f"{name}.parquet")
+            df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+            tables[name] = normalize_timestamps(df, name)
+        per_session[key] = Tables(**tables)
     return per_session[key]
 
 
@@ -104,11 +119,11 @@ def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> Tables
     return tables
 
 
-# spread() decision cache: session -> {(sorted input files, target):
+# spread() decision cache: parent session -> {(sorted input files, target):
 # under-split?}. The probe (`df.rdd.getNumPartitions()`) compiles a
 # separate RDD conversion plan per call, so hot paths that re-build the
 # same scan every run should pay it once per source, not per invocation.
-# Weak-keyed by the SparkSession object, like _TABLE_CACHE above: entries
+# Weak-keyed by ``parent_session``, like _SCHEMA_MEMO above: entries
 # die with their session (an id()-keyed dict could serve a dead session's
 # verdict to a new one allocated at the recycled address).
 _SPREAD_CACHE: WeakKeyDictionary = WeakKeyDictionary()
@@ -132,20 +147,20 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     the pre-execution partition count, which for a plan containing its
     own shuffle can differ from the AQE-coalesced runtime partitioning —
     on such plans the check could both false-positive and pay an
-    unneeded shuffle. The under-split decision is cached per (session,
-    input-file set, target) so repeated builds of the same scan skip the
-    RDD-conversion probe."""
+    unneeded shuffle. The under-split decision is cached per (parent
+    session, input-file set, target) so repeated builds of the same scan
+    skip the RDD-conversion probe."""
     session = df.sparkSession
     target = min_partitions or session.sparkContext.defaultParallelism
     try:
         files = tuple(sorted(df.inputFiles()))
     except Exception:
         files = ()
-    per_session = _SPREAD_CACHE.setdefault(session, {})
+    per_family = _SPREAD_CACHE.setdefault(parent_session(session), {})
     key = (files, target)
-    under = per_session.get(key) if files else None
+    under = per_family.get(key) if files else None
     if under is None:
         under = df.rdd.getNumPartitions() < target
         if files:
-            per_session[key] = under
+            per_family[key] = under
     return df.repartition(target) if under else df

@@ -31,12 +31,16 @@ Offsets are ``{"epoch": <listener id>, "index": n}``: ``n`` counts the
 lines the listener named by ``epoch`` has buffered since it started, and
 the epoch is new in every process (and every restart of the query).
 Delivery contract:
-- Lines buffered in a process that dies, or in a listener that stops,
-  before their batch commits are lost. That is the only loss: a served
-  batch stays in PySpark's prefetch cache until it commits, and every
-  line a live listener buffers is served by a later batch, including the
-  first batch after a restart, whose checkpointed start names the old
-  epoch.
+- Three losses, and no others: lines buffered in a process that dies,
+  or in a listener that stops, before their batch commits; UDP datagrams
+  that arrive while ``MAX_PENDING_LINES`` lines are pending (counted in
+  ``dropped``); and whatever is sent before the listener binds, at the
+  planner's first offset call: on every start and restart, from
+  ``start()`` returning until the port accepts (1.16-1.37 s on 4 cores),
+  TCP connects are refused and UDP datagrams are lost. Every other line
+  a live listener buffers is served by a later batch, including the
+  first after a restart, whose checkpointed start names the old epoch;
+  a served batch stays in PySpark's prefetch cache until it commits.
 - No line is delivered twice by the source: ``read`` drains what it
   serves. ``readBetweenOffsets`` runs in an executor only when the cache
   misses, i.e. for the replay after a restart of a batch whose end names

@@ -13,7 +13,7 @@ from syslog_kafka_spark.operators.multimodal import (
     frame_sample_plan,
     real_decoder,
 )
-from syslog_kafka_spark.session import scoped_conf
+from syslog_kafka_spark.session import child_session
 
 
 @pytest.fixture()
@@ -53,27 +53,16 @@ def test_extract_features_does_not_mutate_session_config(spark, media):
 
 
 def test_arrow_batch_size_scopes_and_restores(spark, media):
+    """The Arrow batch bound is set on a child session made for it: the
+    operator runs under it there, and the parent's conf never changes."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     before = spark.conf.get(key, None)
-    with scoped_conf(spark, {key: "2"}):
-        assert spark.conf.get(key) == "2"
-        # the knob is live while the action runs inside the block
-        out = extract_features(media, dim=8, decoder=fake_decoder).collect()
-        assert len(out) == 4
+    child = child_session(spark, {key: "2"})
+    assert child.conf.get(key) == "2"
+    rows = media.collect()
+    out = extract_features(child.createDataFrame(rows, MEDIA_SCHEMA), dim=8, decoder=fake_decoder).collect()
+    assert len(out) == 4
     assert spark.conf.get(key, None) == before
-
-
-def test_scoped_conf_restores_set_keys_and_unsets_new_ones_on_raise(spark):
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    fresh = "spark.syslog_kafka_spark.test.scoped_conf_unset"
-    with scoped_conf(spark, {key: "123"}):
-        with pytest.raises(RuntimeError, match="boom"):
-            with scoped_conf(spark, {key: "7", fresh: "on"}):
-                assert spark.conf.get(key) == "7"
-                assert spark.conf.get(fresh) == "on"
-                raise RuntimeError("boom")
-        assert spark.conf.get(key) == "123"
-        assert spark.conf.get(fresh, None) is None
 
 
 def test_integer_signal_modulo_in_source_dtype(spark):

@@ -429,31 +429,10 @@ def test_winnowing_explodes_only_winnowed_set(spark, sf_dir):
 
 def test_parquet_aggregate_pushdown_reaches_scan(spark, sf_dir):
     """scan_agg_pushdown's COUNT/MIN/MAX must be answered by the V2
-    parquet scan's footer statistics — the plan shows PushedAggregation,
-    meaning zero data pages are read at any scale."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    push_key = "spark.sql.parquet.aggregatePushdown"
-    v1_key = "spark.sql.sources.useV1SourceList"
-    prev_v1 = spark.conf.get(v1_key)
-    spark.conf.set(push_key, "true")
-    spark.conf.set(v1_key, "")
-    try:
-        df = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-        agg = df.agg(
-            F.count("*").alias("n"),
-            F.min("o_totalprice").alias("mn"),
-            F.max("o_totalprice").alias("mx"),
-        )
-        jexec = agg._jdf.queryExecution()
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        plan = jexec.explainString(mode)
-        assert "PushedAggregation: [COUNT(*), MIN(o_totalprice), MAX(o_totalprice)]" in plan
-    finally:
-        spark.conf.unset(push_key)
-        spark.conf.set(v1_key, prev_v1)
+    parquet scan's footer statistics: the plan of its own builder shows
+    PushedAggregation, meaning zero data pages are read at any scale."""
+    plan = _plan(spark, sf_dir, "scan_agg_pushdown")
+    assert "PushedAggregation: [COUNT(*), MIN(o_totalprice), MAX(o_totalprice)]" in plan
 
 
 def test_scd2_join_broadcasts_the_dimension(spark, sf_dir):

@@ -359,3 +359,26 @@ def test_builder_partials_are_released_by_clear(spark, sf_dir):
     clear_session_caches(spark)
     assert cm.isEmpty()
     assert _persisted_ids(spark) - before == set()
+
+
+def test_clear_reaches_what_a_child_session_cached(spark, sf_dir):
+    """A query that declares confs runs on a child session, and caches
+    there: ``stream_lsh_probe_digest`` fills ``cached_lsh_base`` on its
+    child. The registries key on the parent, so one clear on the session
+    a sweep holds releases that entry, and a checkpoint pinned on the
+    child too; a parent-only registry would leave both filled."""
+    from syslog_kafka_spark.plans.registry import load_all
+    from syslog_kafka_spark.session import child_session
+
+    clear_session_caches(spark)
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = _persisted_ids(spark)
+    spec = load_all()["stream_lsh_probe_digest"]
+    assert spec.confs
+    assert spec.build(spark, sf_dir).collect()
+    assert not cm.isEmpty()  # the LSH base is cached, on the child
+    session_checkpoint(child_session(spark, spec.confs).range(8))
+    assert clear_session_caches(spark) >= 2
+    assert cm.isEmpty()
+    assert _persisted_ids(spark) - before == set()

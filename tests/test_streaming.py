@@ -502,51 +502,68 @@ def test_stream_cms_state_is_bounded_and_mass_preserving(spark, sf_dir):
         assert sum(x.cnt for x in rows if x.r == r) == n_tokens
 
 
-_DRAIN_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
-
-
 def test_run_stream_pins_confs_for_the_query_only(spark, sf_dir):
-    """run_stream's pins reach the query (8 state partitions, no trailing
-    no-data batch: one progress entry, not two) while the session reads
-    the same confs after the call as before it — the query clones the
-    session conf at start(), so the pin is scoped to start() alone."""
-    from syslog_kafka_spark.plans.stream_gated import run_stream, stream_events
+    """A gate's declared pins reach its query (8 state partitions, no
+    trailing no-data batch: one progress entry, not two) through the child
+    session it builds on, while the session it was handed reads the same
+    confs after the run as before."""
+    from syslog_kafka_spark.plans.registry import load_all
+    from syslog_kafka_spark.plans.stream_gated import STATE_8_NO_DATA, run_stream, stream_events
+    from syslog_kafka_spark.session import child_session
 
-    before = [spark.conf.get(k) for k in _DRAIN_CONFS]
+    spec = load_all()["stream_dedup_within_watermark"]
+    assert spec.confs == STATE_8_NO_DATA
+    before = spark.conf.getAll
+    child = child_session(spark, spec.confs)
+    assert spec.build(spark, sf_dir).sparkSession is child
     counts = (
-        stream_events(spark, sf_dir)
+        stream_events(child, sf_dir)
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day"), "event_type")
         .count()
     )
-    q = run_stream(
-        counts.writeStream.format("noop").outputMode("append"),
-        state_partitions=8,
-        no_data_batch=False,
-    )
+    q = run_stream(counts.writeStream.format("noop").outputMode("append"))
     assert not q.isActive
     progress = q.recentProgress
     assert len(progress) == 1
     assert progress[0]["stateOperators"][0]["numShufflePartitions"] == 8
-    assert [spark.conf.get(k) for k in _DRAIN_CONFS] == before
+    assert spark.conf.getAll == before
+
+
+def _with_children(session, specs) -> list:
+    """``session`` and the child sessions that ``specs`` build on (one per
+    declared conf set): a leak sweep looks wherever the builds run."""
+    from syslog_kafka_spark.session import child_session
+
+    return [session] + [child_session(session, spec.confs) for spec in specs if spec.confs]
+
+
+_SWEEP_GATES = (
+    "stream_sliding_window_agg",
+    "stream_state_store_read",
+    "stream_foreach_batch_sink",
+    "stream_available_now_trigger",
+)
 
 
 def test_stream_gates_leave_no_views_dirs_or_confs(spark, sf_dir):
     """Building and collecting the memory-sink, foreachBatch, state-store
     and AvailableNow gates registers no temp view, leaves nothing under
-    the warehouse dir and leaves every session conf as it was. The builds
-    run on a child session, which has its own confs and temp views, so a
-    conf or view that an earlier test left on the shared session cannot
-    hide a leak."""
+    the warehouse dir and leaves every session conf as it was, on the
+    session handed in and on the child sessions the gates run on. The
+    builds start from a fresh child of the shared session, so a conf or
+    view that an earlier test left on the shared session cannot hide a
+    leak."""
     import os
 
     from syslog_kafka_spark.plans.registry import load_all
 
-    session = spark.newSession()
+    inventory = load_all()
+    sessions = _with_children(spark.newSession(), [inventory[n] for n in _SWEEP_GATES])
     warehouse = os.path.join(os.path.dirname(os.path.dirname(__file__)), "spark-warehouse")
 
     def temp_views():
-        return {t.name for t in session.catalog.listTables() if t.isTemporary}
+        return {(i, t.name) for i, s in enumerate(sessions) for t in s.catalog.listTables() if t.isTemporary}
 
     def warehouse_entries():
         return {
@@ -555,37 +572,25 @@ def test_stream_gates_leave_no_views_dirs_or_confs(spark, sf_dir):
             for name in dirs + files
         }
 
-    inventory = load_all()
-    views, entries, confs = temp_views(), warehouse_entries(), session.conf.getAll
-    for name in (
-        "stream_sliding_window_agg",
-        "stream_state_store_read",
-        "stream_foreach_batch_sink",
-        "stream_available_now_trigger",
-    ):
-        assert inventory[name].build(session, sf_dir).collect(), name
+    views, entries, confs = temp_views(), warehouse_entries(), [s.conf.getAll for s in sessions]
+    for name in _SWEEP_GATES:
+        assert inventory[name].build(sessions[0], sf_dir).collect(), name
     assert temp_views() == views
     assert warehouse_entries() - entries == set()
-    assert session.conf.getAll == confs
+    assert [s.conf.getAll for s in sessions] == confs
 
 
 def test_batch_builders_leave_no_views_or_functions(spark, sf_dir):
     """Building every non-streaming query whose builder calls spark.sql
-    registers no temp view and no temp function, and sets no session conf.
-    The builds run on a child session, which has its own confs, temp views
-    and functions but shares the context, so a view or conf that an
-    earlier test left on the shared session cannot hide a leak."""
+    registers no temp view and no temp function, and sets no session conf,
+    on the session handed in or on a child session a build runs on. The
+    builds start from a fresh child of the shared session, which has its
+    own confs, temp views and functions but shares the context, so a view
+    or conf that an earlier test left on the shared session cannot hide a
+    leak."""
     import inspect
 
     from syslog_kafka_spark.plans.registry import load_all
-
-    session = spark.newSession()
-
-    def temp_views():
-        return {t.name for t in session.catalog.listTables() if t.isTemporary}
-
-    def temp_functions():
-        return {row[0] for row in session.sql("SHOW USER FUNCTIONS").collect()}
 
     inventory = load_all()
     names = [
@@ -595,12 +600,104 @@ def test_batch_builders_leave_no_views_or_functions(spark, sf_dir):
     ]
     # A floor, so a refactor that hides the calls cannot empty the sweep.
     assert len(names) >= 30, names
-    views, functions, confs = temp_views(), temp_functions(), session.conf.getAll
+    sessions = _with_children(spark.newSession(), [inventory[n] for n in names])
+
+    def temp_views():
+        return {(i, t.name) for i, s in enumerate(sessions) for t in s.catalog.listTables() if t.isTemporary}
+
+    def temp_functions():
+        return {(i, row[0]) for i, s in enumerate(sessions) for row in s.sql("SHOW USER FUNCTIONS").collect()}
+
+    views, functions, confs = temp_views(), temp_functions(), [s.conf.getAll for s in sessions]
     for name in names:
-        inventory[name].build(session, sf_dir)
+        inventory[name].build(sessions[0], sf_dir)
     assert temp_views() == views
     assert temp_functions() == functions
-    assert session.conf.getAll == confs
+    assert [s.conf.getAll for s in sessions] == confs
+
+
+def test_no_builder_writes_a_conf_on_the_session_it_is_handed(spark, sf_dir, monkeypatch):
+    """Every query that declares confs, and the four sweep gates, build
+    and collect on a session whose conf.set and conf.unset raise: a
+    declared conf is set once on the query's child session, never on the
+    session a caller hands in."""
+    from syslog_kafka_spark.plans.registry import load_all
+
+    def refuse(*args):
+        raise AssertionError(f"conf written on the handed session: {args}")
+
+    inventory = load_all()
+    names = [name for name, spec in inventory.items() if spec.confs]
+    # A floor: the 25 pinned streaming gates plus scan_agg_pushdown and
+    # scalar_sql_scripting.
+    assert len(names) >= 27, names
+    names += [name for name in _SWEEP_GATES if name not in names]
+    before = spark.conf.getAll
+    monkeypatch.setattr(spark.conf, "set", refuse)
+    monkeypatch.setattr(spark.conf, "unset", refuse)
+    for name in names:
+        inventory[name].build(spark, sf_dir).collect()
+    assert spark.conf.getAll == before
+
+
+# Five queries with five different declared conf sets.
+_CONCURRENT = (
+    "stream_sliding_window_agg",
+    "stream_stream_join_agg",
+    "stream_bpe_merge_candidates",
+    "scan_agg_pushdown",
+    "scalar_sql_scripting",
+)
+
+
+def test_builders_with_different_confs_agree_on_threads(spark, sf_dir):
+    """The five queries give the same rows when built on five threads
+    against one shared session as when built one after another, and the
+    session's confs are unchanged: each runs on its own child session, so
+    no build sees another's pins. A race cannot be made to strike on every
+    run, so this checks outcomes over whatever interleaving the run gets."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from scripts.driver_sim import canon_rows
+    from syslog_kafka_spark.plans.registry import load_all
+
+    inventory = load_all()
+    assert len({frozenset(inventory[n].confs.items()) for n in _CONCURRENT}) == len(_CONCURRENT)
+
+    def rows(name):
+        return canon_rows(inventory[name].build(spark, sf_dir).toPandas())
+
+    before = spark.conf.getAll
+    serial = {name: rows(name) for name in _CONCURRENT}
+    with ThreadPoolExecutor(len(_CONCURRENT)) as pool:
+        threaded = dict(zip(_CONCURRENT, pool.map(rows, _CONCURRENT, timeout=600)))
+    assert threaded == serial
+    assert spark.conf.getAll == before
+
+
+def test_child_session_is_one_per_conf_set_under_threads(spark):
+    """Sixteen threads asking at once for the child of one conf set all
+    get the same child, which carries the conf: the memo's check-then-make
+    runs under its lock."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from syslog_kafka_spark.session import child_session, parent_session
+
+    confs = {"spark.sql.shuffle.partitions": "7"}  # a set no query declares
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            children = list(pool.map(lambda _: child_session(spark, confs), range(64), timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len({id(child) for child in children}) == 1
+    assert children[0].conf.get("spark.sql.shuffle.partitions") == "7"
+    # asked of a child, child_session makes a sibling: one family, one parent
+    sibling = child_session(children[0], {"spark.sql.shuffle.partitions": "5"})
+    assert parent_session(sibling) is parent_session(children[0]) is spark
+    assert child_session(sibling, confs) is children[0]
 
 
 def test_tcp_stop_frees_the_port_and_ends_open_connections():
@@ -841,6 +938,26 @@ def _wait_port(port: int, listening: bool) -> None:
             return
         assert time.time() < deadline, f"port {port} listening={up} after 60 s"
         time.sleep(0.05)
+
+
+def test_listener_binds_at_the_first_offset_call_and_stop_frees_the_port():
+    """The bind window of the delivery contract: a constructed reader
+    refuses connections until its first offset call binds the listener,
+    and stop() frees the port again."""
+    from syslog_kafka_spark.model import SYSLOG_MESSAGE_SCHEMA
+    from syslog_kafka_spark.sources.syslog_source import SyslogStreamReader
+
+    port = _free_port("tcp")
+    reader = SyslogStreamReader(
+        SYSLOG_MESSAGE_SCHEMA, {"host": "127.0.0.1", "port": str(port), "protocol": "tcp"}
+    )
+    _wait_port(port, listening=False)
+    try:
+        reader.initialOffset()
+        _wait_port(port, listening=True)
+    finally:
+        reader.stop()
+    _wait_port(port, listening=False)
 
 
 def _ingest(spark, port: int, work):
